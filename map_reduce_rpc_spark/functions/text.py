@@ -1,4 +1,4 @@
-"""Text transforms — tokenization, n-grams, fingerprints, quality signals.
+"""Text transforms — tokenization, n-grams, quality signals.
 
 Tokenizer parity: the reference splits document text on runs of
 non-letter runes via Go ``unicode.IsLetter``
@@ -37,22 +37,6 @@ def word_count_tokens(text: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def char_ngrams(text: Column | str, n: int = 5) -> Column:
-    """Array of character n-grams (shingles) of the normalized text.
-
-    Normalization: lowercase, collapse whitespace. Used by MinHash /
-    Jaccard dedup. Built from ``sequence`` + ``transform`` so it stays
-    JVM-side (no UDF).
-    """
-    col = F.col(text) if isinstance(text, str) else text
-    norm = F.regexp_replace(F.lower(col), r"\s+", " ")
-    # positions 1 .. len-n+1; substr is 1-indexed
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(norm) - F.lit(n - 1), F.lit(1))),
-        lambda i: norm.substr(i, F.lit(n)),
-    )
-
-
 def word_ngrams(text: Column | str, n: int = 3) -> Column:
     """Array of full word n-grams (space-joined) over the lowercased
     tokens; empty array when the document has fewer than n tokens."""
@@ -65,18 +49,6 @@ def word_ngrams(text: Column | str, n: int = 3) -> Column:
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def doc_fingerprint(text: Column | str) -> Column:
-    """Deterministic 64-bit content fingerprint of normalized text.
-
-    Rolling-hash analog: normalize (lowercase, collapse whitespace,
-    strip) then xxhash64. Exact-dup docs collide; anything else won't
-    (modulo 2^-64). Used as the cheap first pass of dedup.
-    """
-    col = F.col(text) if isinstance(text, str) else text
-    norm = F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-    return F.xxhash64(norm)
 
 
 # --- quality scoring -------------------------------------------------------

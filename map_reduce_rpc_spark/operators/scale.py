@@ -20,7 +20,7 @@ both are table-stakes for the 100 TB deployment this engine targets.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,11 +43,6 @@ def write_bucketed_table(
     if sort_col is not None:
         w = w.sortBy(sort_col)
     w.mode("overwrite").saveAsTable(name)
-
-
-def bucketed_join(spark: SparkSession, left_name: str, right_name: str, on: str) -> DataFrame:
-    """Join two same-bucketed saved tables on their bucket key."""
-    return spark.table(left_name).join(spark.table(right_name), on)
 
 
 def salted_distinct_count(

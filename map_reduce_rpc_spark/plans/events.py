@@ -939,25 +939,15 @@ def forget_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is read back. The oracle is the logical complement (all
     events whose user survives), so a hash match certifies the
     PHYSICAL delete path produced exactly the logical answer: no
-    victim row retained, no survivor lost. Artifact is mtime-cached
-    like the other layout pipelines."""
-    import hashlib
+    victim row retained, no survivor lost."""
+    import glob
     import os
-    import shutil
 
     from ..sources.sinks import merge_delete_parquet
+    from ..tables import derived_cache_dir
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"forget:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark_graft_forget_{tag}/events"
-    marker = "_FORGET_COMPLETE"
-    root = os.path.dirname(path)
-    if not os.path.exists(os.path.join(path, marker)):
-        staging = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
+    def build(tmp: str) -> None:
+        staging = os.path.join(tmp, "events")
         ev = load_table(spark, sf_dir, "events").withColumn(
             "_ub", F.pmod(F.xxhash64(F.col("user_id")), F.lit(16))
         )
@@ -971,14 +961,10 @@ def forget_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_delete_parquet(
             spark, staging, victims, key_cols=("user_id",), partition_cols=("_ub",)
         )
-        open(os.path.join(staging, marker), "w").close()
-        os.makedirs(root, exist_ok=True)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-    import glob
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
+    root = derived_cache_dir(sf_dir, "forget", ("events",), build)
+    path = os.path.join(root, "events")
     if glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
         out = spark.read.parquet(path)
     else:

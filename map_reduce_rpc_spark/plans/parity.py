@@ -240,10 +240,9 @@ def avro_events_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     or the corrupt-row count (asserted zero by inclusion: a
     dead-letter row would null event_type and change the groups).
 
-    The avro mirror is built once per sf_dir into a fingerprinted
-    /tmp cache (``tables.derived_cache_dir``); the oracle aggregates
-    the source parquet directly — equality proves the roundtrip is
-    lossless. 100 TB: the sink writes one container per partition
+    The avro mirror is built once (``tables.derived_cache_dir``); the
+    oracle aggregates the source parquet directly — equality proves the
+    roundtrip is lossless. 100 TB: the sink writes one container per partition
     executor-side, the read plans one task per file; this Python
     codec is the ingest-compatibility path (JVM spark-avro is the
     drop-in fast path when its jar ships), exactly the kvtext
@@ -265,9 +264,6 @@ def avro_events_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = spread_partitions(load_table(spark, sf_dir, "events"))
         avro_py.write_avro(ev, tmp, mode="overwrite", codec="deflate")
 
-    # (the rename from the pre-split "avro_events" tag orphans that old
-    # /tmp cache dir on hosts that built it — harmless tmpfs residue,
-    # reclaimed at reboot; derived_cache_dir keys strictly by tag)
     path = derived_cache_dir(sf_dir, "avro_events_spread", ("events",), build)
     back = avro_py.read_avro(spark, path).drop(avro_py.CORRUPT_COL)
     return back.groupBy("event_type").agg(

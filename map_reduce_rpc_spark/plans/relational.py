@@ -86,48 +86,29 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _clustered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per source generation, disk-cached) a
-    range-clustered copy of lineitem ordered by l_shipdate — the
-    high-cardinality pruning layout ``sources/sinks.
-    write_clustered_parquet`` provides. Each output file covers a
-    narrow shipdate range, so footer min/max stats let a date-filtered
-    reader skip whole files.
-
-    The cache key folds in the source parquet's (mtime, size), so a
-    regenerated testdata directory invalidates the copy instead of
-    silently serving stale rows under an oracle that reads the live
-    table. The copy is built in a process-unique staging dir and
-    atomically rename(2)d into place, so concurrent builders (bench +
-    pytest) can race without either reading a torn file set."""
-    import hashlib
+    """Materialize (once) a range-clustered copy of lineitem ordered
+    by l_shipdate — the high-cardinality pruning layout
+    ``sources/sinks.write_clustered_parquet`` provides. Each output
+    file covers a narrow shipdate range, so footer min/max stats let a
+    date-filtered reader skip whole files."""
     import os
-    import shutil
 
     from ..sources.sinks import write_clustered_parquet
+    from ..tables import derived_cache_dir
 
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark_graft_clustered_{tag}/lineitem"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        staging = f"{path}.stage.{os.getpid()}"
+    def build(tmp: str) -> None:
         write_clustered_parquet(
             load_table(spark, sf_dir, "lineitem"),
-            staging,
+            os.path.join(tmp, "lineitem"),
             ("l_shipdate",),
             files=16,
             mode="overwrite",
         )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            # A concurrent builder won the rename; its copy is complete
-            # (rename is atomic and only performed after _SUCCESS).
-            shutil.rmtree(staging, ignore_errors=True)
-    return path
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    return os.path.join(
+        derived_cache_dir(sf_dir, "clustered", ("lineitem",), build), "lineitem"
+    )
 
 
 def q6_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,10 +121,8 @@ def q6_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     [1996, 1997)" — the measured skip ratio is pytest-asserted in
     tests/test_scale.py::test_clustered_scan_skips_files.
 
-    The clustered copy is byte-derived from the same rows (and cached
-    keyed by the source file's mtime+size, see
-    ``_clustered_lineitem_path``), so all aggregates hash-match the
-    plain-layout oracle."""
+    The clustered copy is byte-derived from the same rows, so all
+    aggregates hash-match the plain-layout oracle."""
     path = _clustered_lineitem_path(spark, sf_dir)
     li = spark.read.parquet(path)
     f = li.where(
@@ -165,26 +144,18 @@ ZORDER_EPOCH = "1992-01-01"
 
 
 def _zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once, cached by source mtime+size like
-    ``_clustered_lineitem_path``) a Z-ORDERED lineitem copy clustered
-    on (l_shipdate, l_quantity): the Morton-key layout
+    """Build (once) a Z-ORDERED lineitem copy clustered on
+    (l_shipdate, l_quantity): the Morton-key layout
     (``sources/sinks.write_zordered_parquet``) gives BOTH columns
     footer-stat locality, where the 1-D range layout serves only
     l_shipdate. The min/max calibration is one tiny agg collected to
     the driver (4 scalars — the offline index-build contract)."""
-    import hashlib
     import os
-    import shutil
 
     from ..sources.sinks import write_zordered_parquet
+    from ..tables import derived_cache_dir
 
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"z:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark_graft_zorder_{tag}/lineitem"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(tmp: str) -> None:
         li = load_table(spark, sf_dir, "lineitem")
         days = F.datediff(F.col("l_shipdate"), F.lit(ZORDER_EPOCH))
         lo = li.agg(
@@ -193,10 +164,9 @@ def _zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
             F.min("l_quantity").alias("q0"),
             F.max("l_quantity").alias("q1"),
         ).first()
-        staging = f"{path}.stage.{os.getpid()}"
         write_zordered_parquet(
             li,
-            staging,
+            os.path.join(tmp, "lineitem"),
             zcols=[days, F.col("l_quantity")],
             # empty corpus: min/max are NULL — calibrate to a zero
             # range (every row, i.e. none, clamps to cell 0)
@@ -206,12 +176,11 @@ def _zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
             files=16,
             mode="overwrite",
         )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-    return path
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    return os.path.join(
+        derived_cache_dir(sf_dir, "zorder", ("lineitem",), build), "lineitem"
+    )
 
 
 def q6_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,44 +225,32 @@ SCD2_SPLIT = "1995-01-01"
 
 
 def _scd2_history_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once, mtime-cached like the layout builders) the SCD2
-    customer-priority history by INCREMENTALLY applying two change
-    batches (orders split at {SCD2_SPLIT}) through
-    ``operators/scd.scd2_merge_batch`` — so the certified artifact is
-    the product of the CDC apply path, not a one-shot recompute; the
-    oracle IS the one-shot recompute, which is the whole point."""
-    import hashlib
+    """Build (once) the SCD2 customer-priority history by
+    INCREMENTALLY applying two change batches (orders split at
+    {SCD2_SPLIT}) through ``operators/scd.scd2_merge_batch`` — so the
+    certified artifact is the product of the CDC apply path, not a
+    one-shot recompute; the oracle IS the one-shot recompute, which is
+    the whole point."""
     import os
-    import shutil
 
     from ..operators.scd import scd2_merge_batch
+    from ..tables import derived_cache_dir
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"scd2:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark_graft_scd2_{tag}/history"
-    # the dynamic-partition-overwrite committer writes no root _SUCCESS
-    # (see merge_upsert_parquet), so completion gets an explicit marker
-    # touched in staging BEFORE the atomic rename
-    marker = "_SCD2_COMPLETE"
-    if not os.path.exists(os.path.join(path, marker)):
+    def build(tmp: str) -> None:
         ch = load_table(spark, sf_dir, "orders").select(
             "o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey"
         )
-        staging = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
+        history = os.path.join(tmp, "history")
         # an empty corpus writes no files at all — the dir must still
-        # exist for the completion marker
-        os.makedirs(staging, exist_ok=True)
+        # exist for readers
+        os.makedirs(history)
         for batch in (
             ch.where(F.col("o_orderdate") < SCD2_SPLIT),
             ch.where(F.col("o_orderdate") >= SCD2_SPLIT),
         ):
             scd2_merge_batch(
                 spark,
-                staging,
+                history,
                 batch,
                 key="o_custkey",
                 attr="o_orderpriority",
@@ -301,13 +258,11 @@ def _scd2_history_path(spark: SparkSession, sf_dir: str) -> str:
                 seq="o_orderkey",
                 partitions=8,
             )
-        open(os.path.join(staging, marker), "w").close()
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-    return path
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    return os.path.join(
+        derived_cache_dir(sf_dir, "scd2", ("orders",), build), "history"
+    )
 
 
 _SCD2_HIST_DDL = (
@@ -377,25 +332,18 @@ def forget_customers_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     where cross-doc pointers force a bounded re-decide —
     plans/textops.forget_docs_neardup_manifest.)"""
     import glob
-    import hashlib
     import os
     import shutil
 
     from ..sources.sinks import merge_delete_parquet
+    from ..tables import derived_cache_dir
 
     base = _scd2_history_path(spark, sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"scd2_forget:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark_graft_scd2_forget_{tag}/history"
-    marker = "_FORGET_COMPLETE"
-    if not os.path.exists(os.path.join(path, marker)):
-        staging = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.copytree(base, staging)
-        if glob.glob(os.path.join(staging, "**", "*.parquet"), recursive=True):
+
+    def build(tmp: str) -> None:
+        history = os.path.join(tmp, "history")
+        shutil.copytree(base, history)
+        if glob.glob(os.path.join(history, "**", "*.parquet"), recursive=True):
             victims = (
                 load_table(spark, sf_dir, "orders")
                 .where(F.col("o_custkey") % FORGET_CUST_MOD == 0)
@@ -403,14 +351,13 @@ def forget_customers_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .distinct()
             )
             merge_delete_parquet(
-                spark, staging, victims, ("o_custkey",), ("_kb",)
+                spark, history, victims, ("o_custkey",), ("_kb",)
             )
-        open(os.path.join(staging, marker), "w").close()
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    path = os.path.join(
+        derived_cache_dir(sf_dir, "scd2_forget", ("orders",), build), "history"
+    )
     hist = _read_scd2_history(spark, path)
     return hist.select(
         F.col("o_custkey").alias("custkey"),
@@ -1089,14 +1036,11 @@ DPP_QUARTER = "1996-Q2"
 
 
 def _month_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir) a month-PARTITIONED copy of orders —
+    """Build (once) a month-PARTITIONED copy of orders —
     the layout a 100 TB fact table actually ships with (one directory
     per ingestion month). Consumed by dpp_quarter_revenue, whose join
     prunes these partitions at RUNTIME via dynamic partition pruning.
-    ~80 month partitions at any sf (the date domain is sf-invariant).
-
-    Stale-serve/race safety via ``tables.derived_cache_dir``
-    (source-fingerprinted tag + atomic rename)."""
+    ~80 month partitions at any sf (the date domain is sf-invariant)."""
     from ..tables import derived_cache_dir
 
     def build(tmp: str) -> None:
@@ -1182,16 +1126,15 @@ def _compacted_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, s
     rows (e.g. 8192) and compaction per partition directory."""
     import hashlib
     import os
-    import shutil
 
     from ..operators.scale import write_bucketed_table
     from ..sources.sinks import compact_parquet_dir
+    from ..tables import scratch_dir
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     ct, ot = f"cust_bkt_{tag}", f"orders_bkt_{tag}"
     if not (spark.catalog.tableExists(ct) and spark.catalog.tableExists(ot)):
-        root = f"/tmp/spark_graft_bkt_{tag}_{os.getpid()}"
-        shutil.rmtree(root, ignore_errors=True)
+        root = scratch_dir("bkt", sf_dir)
         frag = os.path.join(root, "orders_frag")
         load_table(spark, sf_dir, "orders").repartition(64).write.parquet(frag)
         compact_parquet_dir(spark, frag, target_file_bytes=256 << 20)
@@ -3716,8 +3659,8 @@ def time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical expectation per version (full table vs complement), so a
     hash match certifies that v0 stayed byte-stable under the delete
     AND v1 holds exactly the survivors — the two halves of snapshot
-    isolation, as one green row. Build-once artifact via
-    derived_cache_dir. Output: (version, n_orders, total_cents)."""
+    isolation, as one green row. Output: (version, n_orders,
+    total_cents)."""
     import os
 
     from ..sources import txlog
@@ -3776,9 +3719,8 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``version`` column is the table's final committed version: the
     oracle states 1, so a hash match certifies both the upsert
     semantics (row set = updates ∪ untouched) AND the exactly-once
-    idempotence (a replayed commit would read 2). Build-once artifact
-    via derived_cache_dir. Output: (version, n_rows, total_cents,
-    n_inserted)."""
+    idempotence (a replayed commit would read 2). Output: (version,
+    n_rows, total_cents, n_inserted)."""
     import os
 
     from ..sources import txlog
@@ -4347,8 +4289,7 @@ def txlog_clone_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus (the clone's delete never leaked) and the clone
     at the complement (alive and exact despite the source vacuum —
     the inode-refcount upgrade over Delta's documented shallow-clone
-    hazard). Build-once artifact via derived_cache_dir. Output:
-    (label, n_orders, cents)."""
+    hazard). Output: (label, n_orders, cents)."""
     import os
 
     from ..sources import txlog

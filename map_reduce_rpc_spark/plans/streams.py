@@ -196,25 +196,17 @@ def stream_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     in event-time order with same-timestamp ties never straddling a
     chunk (build_time_split_replay_dir guarantees both), matching the
     CDC apply's non-decreasing-event-time contract."""
-    import hashlib
+    import glob
     import os
-    import shutil
 
     from ..operators.scd import scd2_merge_batch
+    from ..tables import derived_cache_dir
 
     replay = core.build_time_split_replay_dir(spark, sf_dir, n_chunks=4)
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"sscd2:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark_graft_sscd2_{tag}"
-    marker = "_SCD2_COMPLETE"
-    if not os.path.exists(os.path.join(path, marker)):
-        staging = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(staging)
-        hist_dir = os.path.join(staging, "hist")
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        hist_dir = os.path.join(tmp, "hist")
         ev = core.read_events_stream(spark, replay).select(
             "user_id", "event_type", "ts", "event_id"
         )
@@ -231,7 +223,7 @@ def stream_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                     partitions=4,
                 )
             )
-            .option("checkpointLocation", os.path.join(staging, "ckpt"))
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -240,24 +232,13 @@ def stream_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the plan-shape gate (tests/test_plan_invariants.py) can
         # inspect the plan that BUILT a cached history — foreachBatch
         # queries never pass through run_available_now's recorder
-        try:
-            with open(os.path.join(staging, "plan.txt"), "w") as fh:
-                fh.write(q._jsq.explainInternal(True))
-        except Exception:
-            pass  # py4j surface drift must not fail the query itself
-        open(os.path.join(staging, marker), "w").close()
-        try:
-            os.rename(staging, path)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-    try:
-        with open(os.path.join(path, "plan.txt")) as fh:
-            core.EXECUTED_PLANS.append(("stream_scd2_user_state", fh.read()))
-            del core.EXECUTED_PLANS[: -core._EXECUTED_PLANS_MAX]
-    except OSError:
-        pass
-    import glob
+        with open(os.path.join(tmp, "plan.txt"), "w") as fh:
+            fh.write(core.plan_text(q))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
+    path = derived_cache_dir(sf_dir, "sscd2", ("events",), build)
+    with open(os.path.join(path, "plan.txt")) as fh:
+        core.record_plan("stream_scd2_user_state", fh.read())
     hist_dir = os.path.join(path, "hist")
     if glob.glob(os.path.join(hist_dir, "**", "*.parquet"), recursive=True):
         hist = spark.read.parquet(hist_dir)
@@ -389,12 +370,10 @@ def stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent transactional commits = exactly-once table state.
     Output: per event type, row count / value cents / id bounds read
     back from the FINAL table version."""
-    import hashlib
     import os
-    import shutil
 
     from ..sources import txlog
-    from ..tables import load_table
+    from ..tables import derived_cache_dir, load_table
 
     def shape(df: DataFrame) -> DataFrame:
         return df.select(
@@ -406,18 +385,10 @@ def stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     replay = core.build_time_split_replay_dir(spark, sf_dir, n_chunks=4)
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"stxlog:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/spark_graft_stxlog_{tag}"
-    marker = "_TXLOG_COMPLETE"
-    if not os.path.exists(os.path.join(path, marker)):
-        staging = f"{path}.stage.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(staging)
-        root = os.path.join(staging, "table")
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        root = os.path.join(tmp, "table")
         # v0 = the typed empty table (schema from the batch transform)
         txlog.create_table(
             spark, root, shape(load_table(spark, sf_dir, "events")).limit(0)
@@ -432,27 +403,18 @@ def stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = core.read_events_stream(spark, replay)
         q = (
             ev.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(staging, "ckpt"))
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        try:
-            with open(os.path.join(staging, "plan.txt"), "w") as fh:
-                fh.write(q._jsq.explainInternal(True))
-        except Exception:
-            pass  # py4j surface drift must not fail the query itself
-        open(os.path.join(staging, marker), "w").close()
-        try:
-            os.rename(staging, path)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-    try:
-        with open(os.path.join(path, "plan.txt")) as fh:
-            core.EXECUTED_PLANS.append(("stream_txlog_append", fh.read()))
-            del core.EXECUTED_PLANS[: -core._EXECUTED_PLANS_MAX]
-    except OSError:
-        pass
+        with open(os.path.join(tmp, "plan.txt"), "w") as fh:
+            fh.write(core.plan_text(q))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    path = derived_cache_dir(sf_dir, "stxlog", ("events",), build)
+    with open(os.path.join(path, "plan.txt")) as fh:
+        core.record_plan("stream_txlog_append", fh.read())
     final = txlog.read_table(spark, os.path.join(path, "table"))
     return final.groupBy("event_type").agg(
         F.count("*").alias("n_events"),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..functions.text import NON_LETTER_RE, quality_signals, tokens, word_ngrams
 from ..operators import dedup
 from ..operators.similarity import _plan_size_bytes
-from ..tables import load_table, spread_partitions
+from ..tables import load_table, source_fingerprint, spread_partitions
 from .sampling import _TRAIN_HEX, _VAL_HEX
 
 NGRAM_N = 3
@@ -60,10 +60,12 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The exact-jaccard pair list is the shared intermediate of
-# ngram_jaccard_dups and dup_clusters; materialize it once per sf_dir
+# ngram_jaccard_dups and dup_clusters; materialize it once per corpus
 # (persisted — it's a handful of id pairs) instead of re-running the
-# inverted-index join per consumer. Keyed by (applicationId, sf_dir):
-# a DataFrame is bound to the SparkContext that built it, so an entry
+# inverted-index join per consumer. Keyed by (applicationId,
+# tables.source_fingerprint of documents): rewritten source rows
+# never hit an older generation's pairs, and since a DataFrame is
+# bound to the SparkContext that built it, an entry
 # must never outlive its session (a harness that recycles sessions —
 # bench.py does — would otherwise get a handle into a stopped JVM
 # context: exactly the round-4 dup_clusters_star failure). Capped at
@@ -74,7 +76,10 @@ _PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (
+        spark.sparkContext.applicationId,
+        source_fingerprint(sf_dir, ("documents",)),
+    )
     cached = _PAIRS_CACHE.get(key)
     if cached is not None:
         return cached
@@ -2792,11 +2797,8 @@ def incremental_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     here. The manifest is rebuilt from scratch per call (so the query
     is a pure function of sf_dir); the oracle replays arrival
     semantics as min-batch-then-min-id per content hash."""
-    import hashlib
-    import os
-    import shutil
-
     from ..sources.sinks import merge_upsert_parquet
+    from ..tables import scratch_dir
 
     docs = load_table(spark, sf_dir, "documents")
     fp = docs.select(
@@ -2804,24 +2806,9 @@ def incremental_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         (F.col("doc_id") % 2).cast("int").alias("arrival_batch"),
     )
-    # per-process scratch manifest, rebuilt each call (pure function of
-    # sf_dir) and LEFT on disk so the returned plan is a lazy scan of
-    # the merged store — the same lifecycle as the replay/clustered
-    # caches, and no driver-side collect. The pid suffix isolates
-    # concurrent builders (bench + pytest); dirs from DEAD pids are
-    # reaped here so reruns don't accumulate copies in /tmp.
-    import glob
-    import re
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    for stale in glob.glob(f"/tmp/spark_graft_incr_{tag}_*"):
-        m = re.search(r"_(\d+)$", stale)
-        if m and int(m.group(1)) != os.getpid() and not os.path.exists(
-            f"/proc/{m.group(1)}"
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-    path = f"/tmp/spark_graft_incr_{tag}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
+    # scratch manifest LEFT on disk so the returned plan is a lazy scan
+    # of the merged store — no driver-side collect
+    path = scratch_dir("incr", sf_dir)
     for b in (0, 1):
         batch = (
             fp.where(F.col("arrival_batch") == b)
@@ -2839,6 +2826,31 @@ def incremental_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path).select(
         "content_hash", "keeper_id", "arrival_batch", "n_batch_copies"
     )
+
+
+def _txlog_cdf_docs(spark: SparkSession, sf_dir: str) -> str:
+    """Cached two-commit documents txlog table (evens create v0, odds
+    append at v1) shared by the batch, cursor-driven and streaming
+    change-feed consumers; returns the table root."""
+    import os
+
+    from ..sources import txlog
+    from ..tables import derived_cache_dir
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        root = os.path.join(tmp, "docs_tx")
+        docs = load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").cast("long").alias("doc_id"), "text"
+        )
+        txlog.create_table(
+            spark, root, docs.where("doc_id % 2 = 0").repartition(8)
+        )
+        txlog.append(spark, root, docs.where("doc_id % 2 = 1"))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    base = derived_cache_dir(sf_dir, "txlog_cdf_docs", ("documents",), build)
+    return os.path.join(base, "docs_tx")
 
 
 def cdf_incremental_dedup_manifest(
@@ -2860,26 +2872,9 @@ def cdf_incremental_dedup_manifest(
     certifies that the feed-driven path reproduces the full-replay
     answer. Output: (content_hash, keeper_id, arrival_batch,
     n_batch_copies)."""
-    import os
-
     from ..sources import txlog
-    from ..tables import derived_cache_dir
 
-    def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        root = os.path.join(tmp, "docs_tx")
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
-        )
-        txlog.create_table(
-            spark, root, docs.where("doc_id % 2 = 0").repartition(8)
-        )
-        txlog.append(spark, root, docs.where("doc_id % 2 = 1"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
-
-    base_dir = derived_cache_dir(sf_dir, "txlog_cdf_docs", ("documents",), build)
-    root = os.path.join(base_dir, "docs_tx")
+    root = _txlog_cdf_docs(spark, sf_dir)
 
     def fingerprints(df: DataFrame) -> DataFrame:
         return df.select(
@@ -2959,13 +2954,23 @@ def incremental_neardup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _neardup_manifest_root(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once, mtime-cached) the two-batch near-dup manifests and
-    return the artifact root. Extracted from incremental_neardup_manifest
-    so forget_docs_neardup_manifest can reuse the SAME base artifact
-    (copy-then-delete) without a second 21 s ingestion build."""
-    import hashlib
+    """Build (once) the two-batch near-dup manifests and return the
+    artifact root. The ingestion pipeline's cost belongs to ingestion,
+    not to every later read (round-6 bench: 21 s warm per call at
+    sf0.1), and forget_docs_neardup_manifest reuses the SAME base
+    artifact (copy-then-delete) without a second build."""
+    from ..tables import derived_cache_dir
+
+    return derived_cache_dir(
+        sf_dir,
+        "neardup",
+        ("documents",),
+        lambda tmp: _build_neardup_manifests(spark, sf_dir, tmp),
+    )
+
+
+def _build_neardup_manifests(spark: SparkSession, sf_dir: str, staging: str) -> None:
     import os
-    import shutil
 
     from ..sources.sinks import merge_upsert_parquet
 
@@ -2974,25 +2979,9 @@ def _neardup_manifest_root(spark: SparkSession, sf_dir: str) -> str:
         "text",
         (F.col("doc_id") % 2).cast("int").alias("arrival_batch"),
     )
-    # mtime-keyed artifact cache (the layout-builder pattern): the
-    # two-batch ingestion pipeline builds ONCE per source table state;
-    # re-invocations read the manifests back. Round-6 bench showed the
-    # per-call rebuild costing 21 s warm at sf0.1 — an ingestion
-    # pipeline's cost belongs to ingestion, not to every later read.
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"neardup:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = f"/tmp/spark_graft_neardup_{tag}"
-    marker = "_NEARDUP_COMPLETE"
-    if os.path.exists(os.path.join(root, marker)):
-        return root
-    staging = f"{root}.stage.{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
     # an empty corpus writes no files at all — the dir must still
     # exist for the completion marker
-    os.makedirs(staging, exist_ok=True)
+    os.makedirs(staging)
     bands_path = os.path.join(staging, "bands")
     docs_path = os.path.join(staging, "docs")
 
@@ -3094,13 +3083,7 @@ def _neardup_manifest_root(spark: SparkSession, sf_dir: str) -> str:
             partition_cols=("arrival_batch",),
         )
         idx.unpersist()
-    open(os.path.join(staging, marker), "w").close()
-    try:
-        os.rename(staging, root)
-    except OSError:
-        # a concurrent builder won the rename; its artifact is complete
-        shutil.rmtree(staging, ignore_errors=True)
-    return root
+    open(os.path.join(staging, "_SUCCESS"), "w").close()
 
 
 def _read_parquet_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
@@ -3247,23 +3230,15 @@ def forget_docs_neardup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     index — the same keyed-join shape (and cost bound) as one
     incremental ingest batch of size |affected|."""
     import glob
-    import hashlib
     import os
     import shutil
 
     from ..sources.sinks import merge_delete_parquet, merge_upsert_parquet
+    from ..tables import derived_cache_dir
 
     base_root = _neardup_manifest_root(spark, sf_dir)
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"neardup_forget:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = f"/tmp/spark_graft_neardup_forget_{tag}"
-    marker = "_FORGET_COMPLETE"
-    if not os.path.exists(os.path.join(root, marker)):
-        staging = f"{root}.stage.{os.getpid()}"
-        shutil.rmtree(staging, ignore_errors=True)
+
+    def build(staging: str) -> None:
         shutil.copytree(base_root, staging)
         docs_path = os.path.join(staging, "docs")
         bands_path = os.path.join(staging, "bands")
@@ -3352,11 +3327,9 @@ def forget_docs_neardup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             merge_upsert_parquet(
                 spark, docs_path, updates, ("doc",), ("arrival_batch",)
             )
-        open(os.path.join(staging, marker), "w").close()
-        try:
-            os.rename(staging, root)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
+        open(os.path.join(staging, "_SUCCESS"), "w").close()
+
+    root = derived_cache_dir(sf_dir, "neardup_forget", ("documents",), build)
     return _neardup_manifest_read(spark, os.path.join(root, "docs"))
 
 
@@ -3770,46 +3743,18 @@ def cdf_stream_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is IDENTICAL to the batch full-replay's — so the hash match
     certifies stream-driven == feed-driven == full-replay. Output:
     (content_hash, keeper_id, arrival_batch, n_batch_copies)."""
-    import glob
-    import hashlib
     import os
-    import re
-    import shutil
 
-    from ..sources import txlog
     from ..sources.sinks import merge_upsert_parquet
     from ..streaming.cdf import process_available
-    from ..tables import derived_cache_dir
-
-    def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        root = os.path.join(tmp, "docs_tx")
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
-        )
-        txlog.create_table(
-            spark, root, docs.where("doc_id % 2 = 0").repartition(8)
-        )
-        txlog.append(spark, root, docs.where("doc_id % 2 = 1"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
+    from ..tables import scratch_dir
 
     # same cached source table as the batch CDF consumer
-    base_dir = derived_cache_dir(sf_dir, "txlog_cdf_docs", ("documents",), build)
-    root = os.path.join(base_dir, "docs_tx")
+    root = _txlog_cdf_docs(spark, sf_dir)
 
-    # per-process scratch (cursor checkpoint + state store), rebuilt
-    # each call so the query stays a pure function of sf_dir; dirs
-    # from dead pids are reaped like incremental_dedup_manifest's
-    tag = hashlib.md5(f"scdf:{sf_dir}".encode()).hexdigest()[:8]
-    for stale in glob.glob(f"/tmp/spark_graft_scdf_{tag}_*"):
-        m = re.search(r"_(\d+)$", stale)
-        if m and int(m.group(1)) != os.getpid() and not os.path.exists(
-            f"/proc/{m.group(1)}"
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-    path = f"/tmp/spark_graft_scdf_{tag}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
+    # cursor checkpoint + state store, rebuilt each call so the query
+    # stays a pure function of sf_dir
+    path = scratch_dir("scdf", sf_dir)
     store = os.path.join(path, "store")
     ckpt = os.path.join(path, "ckpt")
 
@@ -3946,44 +3891,18 @@ def stream_txlog_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of how many versions Spark packs into a trigger.
     Output: (content_hash, keeper_id, arrival_batch, n_batch_copies).
     """
-    import glob
-    import hashlib
     import os
-    import re
-    import shutil
 
-    from ..sources import txlog, txlog_source
+    from ..sources import txlog_source
     from ..sources.sinks import merge_upsert_parquet
     from ..streaming import core
-    from ..tables import derived_cache_dir
-
-    def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        root = os.path.join(tmp, "docs_tx")
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
-        )
-        txlog.create_table(
-            spark, root, docs.where("doc_id % 2 = 0").repartition(8)
-        )
-        txlog.append(spark, root, docs.where("doc_id % 2 = 1"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
+    from ..tables import scratch_dir
 
     # same cached source table as the batch + cursor-driven consumers
-    base_dir = derived_cache_dir(sf_dir, "txlog_cdf_docs", ("documents",), build)
-    root = os.path.join(base_dir, "docs_tx")
+    root = _txlog_cdf_docs(spark, sf_dir)
     txlog_source.register(spark)
 
-    tag = hashlib.md5(f"stxsrc:{sf_dir}".encode()).hexdigest()[:8]
-    for stale in glob.glob(f"/tmp/spark_graft_stxsrc_{tag}_*"):
-        m = re.search(r"_(\d+)$", stale)
-        if m and int(m.group(1)) != os.getpid() and not os.path.exists(
-            f"/proc/{m.group(1)}"
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-    path = f"/tmp/spark_graft_stxsrc_{tag}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("stxsrc", sf_dir)
     store = os.path.join(path, "store")
     ckpt = os.path.join(path, "ckpt")
 
@@ -4028,13 +3947,7 @@ def stream_txlog_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    try:
-        core.EXECUTED_PLANS.append(
-            ("stream_txlog_cdf_source", q._jsq.explainInternal(True))
-        )
-        del core.EXECUTED_PLANS[: -core._EXECUTED_PLANS_MAX]
-    except Exception:
-        pass  # py4j surface drift must not fail the query itself
+    core.record_plan("stream_txlog_cdf_source", core.plan_text(q))
     return spark.read.parquet(store).select(
         "content_hash", "keeper_id", "arrival_batch", "n_batch_copies"
     )
@@ -4061,44 +3974,18 @@ def stream_txlog_append_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch aggregate over documents — streamed == batch, per
     parity so both commits' arrivals are pinned separately. Output:
     (parity, n_docs, sum_ids, sum_text_len)."""
-    import glob
-    import hashlib
     import os
-    import re
-    import shutil
 
-    from ..sources import txlog, txlog_source
+    from ..sources import txlog_source
     from ..streaming import core
-    from ..tables import derived_cache_dir
-
-    def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        root = os.path.join(tmp, "docs_tx")
-        docs = load_table(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
-        )
-        txlog.create_table(
-            spark, root, docs.where("doc_id % 2 = 0").repartition(8)
-        )
-        txlog.append(spark, root, docs.where("doc_id % 2 = 1"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
+    from ..tables import scratch_dir
 
     # the SAME cached source table as stream_txlog_cdf_source — one
     # chain certifies both feed modes
-    base_dir = derived_cache_dir(sf_dir, "txlog_cdf_docs", ("documents",), build)
-    root = os.path.join(base_dir, "docs_tx")
+    root = _txlog_cdf_docs(spark, sf_dir)
     txlog_source.register(spark)
 
-    tag = hashlib.md5(f"stxapp:{sf_dir}".encode()).hexdigest()[:8]
-    for stale in glob.glob(f"/tmp/spark_graft_stxapp_{tag}_*"):
-        m = re.search(r"_(\d+)$", stale)
-        if m and int(m.group(1)) != os.getpid() and not os.path.exists(
-            f"/proc/{m.group(1)}"
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-    path = f"/tmp/spark_graft_stxapp_{tag}_{os.getpid()}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("stxapp", sf_dir)
     store = os.path.join(path, "store")
     ckpt = os.path.join(path, "ckpt")
 
@@ -4117,13 +4004,7 @@ def stream_txlog_append_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    try:
-        core.EXECUTED_PLANS.append(
-            ("stream_txlog_append_source", q._jsq.explainInternal(True))
-        )
-        del core.EXECUTED_PLANS[: -core._EXECUTED_PLANS_MAX]
-    except Exception:
-        pass  # py4j surface drift must not fail the query itself
+    core.record_plan("stream_txlog_append_source", core.plan_text(q))
     return (
         spark.read.parquet(store)
         .dropDuplicates(["doc_id"])

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import similarity
-from ..tables import load_table, spread_partitions
+from ..tables import load_table, source_fingerprint, spread_partitions
 
 QUERY_IDS = list(range(8))
 TOP_K = 10
@@ -104,7 +104,8 @@ KMEANS_ITERS = 4
 
 # Trained-centroid cache: kmeans_fit is DETERMINISTIC (md5-ordered
 # init, literal-argmin assignment, exact-integer update sums), so the
-# k x dim centroid matrix is a pure value of (sf_dir, k, iters) — plain
+# k x dim centroid matrix is a pure value of (embeddings content, k,
+# iters), the content keyed by tables.source_fingerprint — plain
 # floats with no session affinity, safe across session recycling
 # (unlike cached DataFrames; cf. textops._PAIRS_CACHE which must key by
 # applicationId). Production reading: an IVF index is trained OFFLINE
@@ -114,7 +115,7 @@ _CENTROID_CACHE: dict[tuple[str, int, int], list[list[float]]] = {}
 
 
 def _fit_centroids(emb, sf_dir: str, k: int, iters: int) -> list[list[float]]:
-    key = (sf_dir, k, iters)
+    key = (source_fingerprint(sf_dir, ("embeddings",)), k, iters)
     cents = _CENTROID_CACHE.get(key)
     if cents is None:
         cents, _cells = similarity.kmeans_fit(emb, k=k, iters=iters)
@@ -812,7 +813,12 @@ _PQ_BOOKS_CACHE: dict[tuple[str, int, int, int], list[list[list[float]]]] = {}
 
 
 def _trained_books(emb, sf_dir: str) -> list[list[list[float]]]:
-    key = (sf_dir, similarity.PQ_M, similarity.PQ_KSUB, PQ_TRAIN_ITERS)
+    key = (
+        source_fingerprint(sf_dir, ("embeddings",)),
+        similarity.PQ_M,
+        similarity.PQ_KSUB,
+        PQ_TRAIN_ITERS,
+    )
     books = _PQ_BOOKS_CACHE.get(key)
     if books is None:
         books = similarity.pq_codebooks_trained(

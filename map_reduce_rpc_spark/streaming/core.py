@@ -25,7 +25,6 @@ measured ~0.3-0.5 s per streaming query at sf0.1.)
 
 from __future__ import annotations
 
-import hashlib
 import itertools
 import os
 import shutil
@@ -35,7 +34,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load_table
+from ..tables import derived_cache_dir, load_table
 
 SENTINEL_USER = -1
 # 10 days in microseconds between sentinel chunks — far past any
@@ -50,82 +49,106 @@ STREAM_SCHEMA_DDL = (
 )
 
 _query_seq = itertools.count()
-_replay_cache: dict[tuple[str, int], str] = {}
 
-# Executed physical plans of recently finished streaming runs, captured
-# by run_available_now for the plan-shape gate (streaming plans are not
-# reachable from the drained batch result, so the harness records them
-# here). Bounded ring; (memory-sink name, plan string) pairs.
+# Executed physical plans of recently finished streaming runs, kept for
+# the plan-shape gate (streaming plans are not reachable from the
+# drained batch result). Bounded ring of (query name, plan string).
 EXECUTED_PLANS: list[tuple[str, str]] = []
 _EXECUTED_PLANS_MAX = 32
+
+
+def plan_text(q) -> str:
+    """Executed plan of a finished streaming query; empty when the
+    py4j surface drifted, which must not fail the query itself."""
+    try:
+        return q._jsq.explainInternal(True)
+    except Exception:
+        return ""
+
+
+def record_plan(name: str, text: str) -> None:
+    """Append one executed streaming plan to ``EXECUTED_PLANS``."""
+    if text:
+        EXECUTED_PLANS.append((name, text))
+        del EXECUTED_PLANS[:-_EXECUTED_PLANS_MAX]
+
+
+def _replay_dir(spark: SparkSession, sf_dir: str, name: str, chunks) -> str:
+    """Cached chunk directory replaying the events table as a stream.
+
+    ``chunks(ev, min_us, max_us)`` lists the chunks in arrival order:
+    a DataFrame of real events, or None for a one-row sentinel whose
+    event time lies ``i`` sentinel steps past the last real event
+    (``i`` = its position). File-source ordering is by modification
+    time (oldest first), set explicitly so replay order is
+    deterministic. An EMPTY corpus anchors the sentinels at epoch 0,
+    so the replay still drains and every query degrades to zero rows.
+    """
+
+    def build(tmp: str) -> None:
+        os.makedirs(tmp)
+        ev = load_table(spark, sf_dir, "events").select(
+            F.col("event_id").cast("long"),
+            F.unix_micros("ts").alias("ts_us"),
+            F.col("user_id").cast("long"),
+            "event_type",
+            F.col("value").cast("double"),
+            "props",
+        )
+        # single-row aggregate action (scalars), not a materialization
+        lo, hi = (int(v or 0) for v in ev.agg(F.min("ts_us"), F.max("ts_us")).first())
+        parts = chunks(ev, lo, hi)
+        for i, chunk in enumerate(parts):
+            dst = os.path.join(tmp, f"chunk{i}.parquet")
+            if chunk is None:
+                # sentinel chunks are driver-side constants (one row)
+                pq.write_table(
+                    pa.table(
+                        {
+                            "event_id": pa.array([-i], pa.int64()),
+                            "ts_us": pa.array([hi + i * _SENTINEL_STEP_US], pa.int64()),
+                            "user_id": pa.array([SENTINEL_USER], pa.int64()),
+                            "event_type": pa.array(["__sentinel__"], pa.string()),
+                            "value": pa.array([0.0], pa.float64()),
+                            "props": pa.array(["{}"], pa.string()),
+                        }
+                    ),
+                    dst,
+                )
+                continue
+            # Spark-native write, one part file so each chunk is one
+            # micro-batch; at production scale the chunking would be
+            # the natural multi-file arrival order and this coalesce
+            # disappears.
+            part_dir = os.path.join(tmp, f"_write{i}")
+            chunk.coalesce(1).write.parquet(part_dir)
+            part = next(
+                p
+                for p in os.listdir(part_dir)
+                if p.startswith("part-") and p.endswith(".parquet")
+            )
+            os.replace(os.path.join(part_dir, part), dst)
+            shutil.rmtree(part_dir)
+        base_mtime = os.stat(tmp).st_mtime - 3600
+        for i in range(len(parts)):
+            path = os.path.join(tmp, f"chunk{i}.parquet")
+            os.utime(path, (base_mtime + i, base_mtime + i))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    return derived_cache_dir(sf_dir, name, ("events",), build)
 
 
 def build_replay_dir(spark: SparkSession, sf_dir: str, n_sentinels: int = 1) -> str:
     """Materialize the events table as an ordered chunk directory:
     chunk0 = all real events, chunk{1..n} = one sentinel event each.
-
-    File-source ordering is by modification time (oldest first), set
-    explicitly so replay order is deterministic.
-    """
-    cache_key = (sf_dir, n_sentinels)
-    cached = _replay_cache.get(cache_key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    # Stable digest (not python hash(), which is PYTHONHASHSEED-random
-    # per process): reruns in other processes reuse/overwrite the same
-    # path instead of leaking stale /tmp dirs.
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out = f"/tmp/spark_graft_stream_{tag}_s{n_sentinels}"
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-
-    # Spark-native write of the real-events chunk — the table never
-    # touches the driver. One part file so the whole real prefix is one
-    # micro-batch (the sentinels provide the watermark advances); at
-    # production scale the chunking would be the natural multi-file
-    # arrival order and this coalesce disappears.
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_id").cast("long"),
-        F.unix_micros("ts").alias("ts_us"),
-        F.col("user_id").cast("long"),
-        "event_type",
-        F.col("value").cast("double"),
-        "props",
+    One real chunk, so the whole real prefix is one micro-batch (the
+    sentinels provide the watermark advances)."""
+    return _replay_dir(
+        spark,
+        sf_dir,
+        f"stream_s{n_sentinels}",
+        lambda ev, lo, hi: [ev] + [None] * n_sentinels,
     )
-    tmp = out + "_write"
-    ev.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(
-        p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
-    )
-    os.replace(os.path.join(tmp, part), os.path.join(out, "chunk0.parquet"))
-    shutil.rmtree(tmp, ignore_errors=True)
-    # single-row aggregate action (scalar), not a table materialization;
-    # an EMPTY corpus yields None -> anchor the sentinels at epoch 0 so
-    # the replay still drains (and every query degrades to zero rows)
-    max_ts = ev.agg(F.max("ts_us")).first()[0]
-    max_us = int(max_ts) if max_ts is not None else 0
-
-    for i in range(1, n_sentinels + 1):
-        # sentinel chunks are driver-side constants (one row each)
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([-i], pa.int64()),
-                    "ts_us": pa.array([max_us + i * _SENTINEL_STEP_US], pa.int64()),
-                    "user_id": pa.array([SENTINEL_USER], pa.int64()),
-                    "event_type": pa.array(["__sentinel__"], pa.string()),
-                    "value": pa.array([0.0], pa.float64()),
-                    "props": pa.array(["{}"], pa.string()),
-                }
-            ),
-            os.path.join(out, f"chunk{i}.parquet"),
-        )
-    base_mtime = os.stat(out).st_mtime - 3600
-    for i in range(n_sentinels + 1):
-        path = os.path.join(out, f"chunk{i}.parquet")
-        os.utime(path, (base_mtime + i, base_mtime + i))
-    _replay_cache[cache_key] = out
-    return out
 
 
 LATE_SPLIT_HOURS = 2
@@ -154,62 +177,13 @@ def build_late_replay_dir(
     emitted). Re-delivering after the sentinel batch puts the slice
     behind a watermark that IS in force for late filtering, so the
     drop is guaranteed, deterministic, and hash-checkable."""
-    cache_key = (sf_dir, "late", late_hours)
-    cached = _replay_cache.get(cache_key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out = f"/tmp/spark_graft_stream_{tag}_late{late_hours}"
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_id").cast("long"),
-        F.unix_micros("ts").alias("ts_us"),
-        F.col("user_id").cast("long"),
-        "event_type",
-        F.col("value").cast("double"),
-        "props",
+    split_us = late_hours * 3_600 * 1_000_000
+    return _replay_dir(
+        spark,
+        sf_dir,
+        f"stream_late{late_hours}",
+        lambda ev, lo, hi: [ev, None, ev.where(F.col("ts_us") < lo + split_us), None],
     )
-    bounds = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    # empty corpus: anchor at epoch 0 — both real chunks come out
-    # empty, the sentinels still drain the stream, results are 0 rows
-    min_us = int(bounds[0]) if bounds[0] is not None else 0
-    max_us = int(bounds[1]) if bounds[1] is not None else 0
-    split_us = min_us + late_hours * 3_600 * 1_000_000
-    chunks = {0: ev, 2: ev.where(F.col("ts_us") < split_us)}
-    for i, chunk in chunks.items():
-        tmp = f"{out}_write{i}"
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        os.replace(os.path.join(tmp, part), os.path.join(out, f"chunk{i}.parquet"))
-        shutil.rmtree(tmp, ignore_errors=True)
-    for i in (1, 3):
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([-i], pa.int64()),
-                    "ts_us": pa.array(
-                        [max_us + i * _SENTINEL_STEP_US], pa.int64()
-                    ),
-                    "user_id": pa.array([SENTINEL_USER], pa.int64()),
-                    "event_type": pa.array(["__sentinel__"], pa.string()),
-                    "value": pa.array([0.0], pa.float64()),
-                    "props": pa.array(["{}"], pa.string()),
-                }
-            ),
-            os.path.join(out, f"chunk{i}.parquet"),
-        )
-    base_mtime = os.stat(out).st_mtime - 3600
-    for i in range(4):
-        path = os.path.join(out, f"chunk{i}.parquet")
-        os.utime(path, (base_mtime + i, base_mtime + i))
-    _replay_cache[cache_key] = out
-    return out
 
 
 def build_time_split_replay_dir(
@@ -223,47 +197,16 @@ def build_time_split_replay_dir(
     needs (its contract: batches non-decreasing in event time per key;
     see operators/scd.py). No sentinels: foreachBatch receives every
     batch unconditionally, nothing here is watermark-driven."""
-    cache_key = (sf_dir, "tsplit", n_chunks)
-    cached = _replay_cache.get(cache_key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out = f"/tmp/spark_graft_stream_{tag}_tsplit{n_chunks}"
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("event_id").cast("long"),
-        F.unix_micros("ts").alias("ts_us"),
-        F.col("user_id").cast("long"),
-        "event_type",
-        F.col("value").cast("double"),
-        "props",
-    )
-    bounds = ev.agg(F.min("ts_us"), F.max("ts_us")).first()
-    min_us = int(bounds[0]) if bounds[0] is not None else 0
-    max_us = int(bounds[1]) if bounds[1] is not None else 0
-    span = max(1, max_us - min_us + 1)
-    for i in range(n_chunks):
-        lo = min_us + (span * i) // n_chunks
-        hi = min_us + (span * (i + 1)) // n_chunks
-        chunk = ev.where((F.col("ts_us") >= lo) & (F.col("ts_us") < hi))
-        tmp = f"{out}_write{i}"
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        os.replace(
-            os.path.join(tmp, part), os.path.join(out, f"chunk{i}.parquet")
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-    base_mtime = os.stat(out).st_mtime - 3600
-    for i in range(n_chunks):
-        path = os.path.join(out, f"chunk{i}.parquet")
-        os.utime(path, (base_mtime + i, base_mtime + i))
-    _replay_cache[cache_key] = out
-    return out
+
+    def chunks(ev: DataFrame, lo: int, hi: int) -> list[DataFrame]:
+        span = max(1, hi - lo + 1)
+        bounds = [lo + (span * i) // n_chunks for i in range(n_chunks + 1)]
+        return [
+            ev.where((F.col("ts_us") >= a) & (F.col("ts_us") < b))
+            for a, b in zip(bounds, bounds[1:])
+        ]
+
+    return _replay_dir(spark, sf_dir, f"stream_tsplit{n_chunks}", chunks)
 
 
 def read_events_stream(
@@ -367,11 +310,7 @@ def run_available_now(sdf: DataFrame, spark: SparkSession, output_mode: str = "a
             .start()
         )
         q.awaitTermination()
-        try:
-            EXECUTED_PLANS.append((name, q._jsq.explainInternal(True)))
-            del EXECUTED_PLANS[:-_EXECUTED_PLANS_MAX]
-        except Exception:
-            pass  # py4j surface drift must not fail the query itself
+        record_plan(name, plan_text(q))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)

@@ -11,7 +11,10 @@ surface is identical.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +33,10 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Every derived artifact lives under here as spark_graft_* (see
+# derived_cache_dir and scratch_dir); all of it is safe to delete.
+_CACHE_ROOT = "/tmp"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -161,32 +168,12 @@ def scan_is_small(src: DataFrame, target: int) -> bool:
         return src.rdd.getNumPartitions() < target
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def derived_cache_dir(sf_dir: str, name: str, tables: tuple[str, ...], build) -> str:
-    """Build-once /tmp cache for a query's derived copy of the
-    testdata (month-partitioned orders, avro mirror, ...), safe
-    against the two failure modes a naive path-keyed cache has:
-
-    - **stale serves**: the tag fingerprints size+mtime of the source
-      parquet(s), so regenerating testdata in place invalidates the
-      copy instead of silently serving old rows;
-    - **concurrent builders** (bench + pytest): ``build`` writes to a
-      pid-suffixed temp dir that is atomically renamed into place;
-      the rename loser discards its copy and reuses the winner's
-      (same fingerprint => equivalent contents).
-
-    ``build(tmp_path)`` must create ``tmp_path`` with a ``_SUCCESS``
-    marker inside.
-    """
-    import hashlib
-    import shutil
-
-    fp = hashlib.md5(f"{name}:{sf_dir}".encode())
+def source_fingerprint(sf_dir: str, tables: tuple[str, ...]) -> str:
+    """Hex digest of ``sf_dir`` and the name, size and mtime of every
+    file behind each source table: regenerating testdata in place
+    changes it, so a cache keyed on it never serves rows derived from
+    an older generation. An unreadable source folds in its path only."""
+    fp = hashlib.md5(sf_dir.encode())
     for tbl in tables:
         src = os.path.join(sf_dir, f"{tbl}.parquet")
         try:
@@ -196,13 +183,58 @@ def derived_cache_dir(sf_dir: str, name: str, tables: tuple[str, ...], build) ->
                 st = os.stat(p)
                 fp.update(f"{e}:{st.st_size}:{st.st_mtime_ns}".encode())
         except OSError:
-            pass  # unreadable source: path-only tag
-    path = f"/tmp/spark_graft_{name}_{fp.hexdigest()[:12]}"
+            pass
+    return fp.hexdigest()
+
+
+def derived_cache_dir(sf_dir: str, name: str, tables: tuple[str, ...], build) -> str:
+    """Build-once cache dir for a query's derived copy of the testdata
+    (layouts, mirrors, manifests, replay chunks, ...). Every derived
+    artifact of the engine goes through here, under one policy:
+
+    - **key**: ``/tmp/spark_graft_<name>_<fingerprint>``, the
+      fingerprint being :func:`source_fingerprint` of the tables the
+      artifact derives from, so a regenerated source builds a new copy
+      instead of serving stale rows;
+    - **pid build dir**: ``build(tmp)`` runs in ``<path>.build.<pid>``,
+      cleared first so a leftover dir of a recycled pid cannot leak
+      into the build, and must create ``tmp`` with a ``_SUCCESS``
+      marker inside;
+    - **atomic publish**: the build dir is renamed into place, so a
+      concurrent reader (bench + pytest) sees the whole artifact or
+      none of it; the rename loser discards its copy and reuses the
+      winner's (same fingerprint => equivalent contents).
+    """
+    fp = source_fingerprint(sf_dir, tables)[:12]
+    path = f"{_CACHE_ROOT}/spark_graft_{name}_{fp}"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         tmp = f"{path}.build.{os.getpid()}"
+        shutil.rmtree(tmp, ignore_errors=True)
         build(tmp)
         try:
             os.rename(tmp, path)
         except OSError:
             shutil.rmtree(tmp, ignore_errors=True)
+    return path
+
+
+def scratch_dir(name: str, sf_dir: str) -> str:
+    """Empty per-process scratch dir for a query that rebuilds its
+    working state (checkpoints, state stores, catalog table files) on
+    every call and leaves it on disk for the lazy plan it returns.
+
+    The path is ``/tmp/spark_graft_<name>_<sf_dir digest>_<pid>``: the
+    pid isolates concurrent processes, so no publish step is needed.
+    Siblings left by dead pids are reaped and this process's own dir
+    is cleared, so reruns neither accumulate copies nor read old state.
+    """
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    prefix = f"{_CACHE_ROOT}/spark_graft_{name}_{tag}_"
+    for stale in glob.glob(prefix + "*"):
+        pid = stale[len(prefix):]
+        dead = pid.isdigit() and not os.path.exists(f"/proc/{pid}")
+        if dead and int(pid) != os.getpid():
+            shutil.rmtree(stale, ignore_errors=True)
+    path = f"{prefix}{os.getpid()}"
+    shutil.rmtree(path, ignore_errors=True)
     return path

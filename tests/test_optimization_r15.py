@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from map_reduce_rpc_spark.operators import dedup
 from map_reduce_rpc_spark.plans import textops
 
 

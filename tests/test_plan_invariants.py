@@ -31,14 +31,16 @@ def test_no_forbidden_plan_nodes(spark, name):
 @pytest.mark.parametrize("name", _STREAM_QUERIES)
 def test_no_forbidden_plan_nodes_streaming(spark, name):
     """Streaming twin of the gate: the query builders run their replay
-    to completion inside the call, and run_available_now records each
+    to completion inside the call, and core.record_plan keeps each
     finished run's EXECUTED plan (explainInternal) — assert the same
-    forbidden nodes never appear in any plan the call executed."""
+    forbidden nodes never appear in any plan the call executed. The
+    ring is cleared first: it is trimmed to a fixed size, so a slice
+    from its length before the call is empty once the ring is full."""
     from map_reduce_rpc_spark.streaming import core
 
-    before = len(core.EXECUTED_PLANS)
+    core.EXECUTED_PLANS.clear()
     entry_mod.queries()[name](spark, SMOKE_SF)
-    plans = core.EXECUTED_PLANS[before:]
+    plans = list(core.EXECUTED_PLANS)
     assert plans, f"{name} executed no streaming query the gate could inspect"
     for qname, plan in plans:
         for bad in FORBIDDEN:
