@@ -5,12 +5,19 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
-Engine code lives in ``map_reduce_rpc_spark/``; this module only wires
-the query library to the driver contract.
+The registry is derived, never hand-kept: every key of a plans
+module's ``*_ORACLES`` dict is a query, run by the same-named function
+in that module. The correctness check records only the first 50 keys, so
+``queries()`` puts ``wordcount`` first and the rest stalest-first by
+their last green round in the committed CORRECTNESS_r*.json ledger.
 """
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +35,19 @@ from map_reduce_rpc_spark.plans import (
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
+# Each plans module and its oracle dict; a key names a function of that module.
+_ORACLE_DICTS = {
+    parity: "PARITY_ORACLES",
+    relational: "RELATIONAL_ORACLES",
+    events: "EVENTS_ORACLES",
+    streams: "STREAMS_ORACLES",
+    textops: "TEXTOPS_ORACLES",
+    sampling: "SAMPLING_ORACLES",
+    vectors: "VECTORS_ORACLES",
+    multimodal: "MULTIMODAL_ORACLES",
+}
+_LEDGER_DIR = os.path.dirname(os.path.abspath(__file__))
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on sf0.001: wordcount over the documents corpus.
@@ -38,327 +58,32 @@ def entry(spark: SparkSession) -> DataFrame:
     return parity.wordcount(spark, SMOKE_SF_DIR)
 
 
+@functools.cache
+def _last_green_rounds() -> dict[str, int]:
+    """Query name -> highest round N whose CORRECTNESS_rN.json has it
+    fully green (rows, schema and hash match, no error)."""
+    last: dict[str, int] = {}
+    for fname in os.listdir(_LEDGER_DIR):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if not m:
+            continue
+        with open(os.path.join(_LEDGER_DIR, fname)) as fh:
+            for name, r in json.load(fh).items():
+                green = all(r.get(k) is True for k in ("rows_match", "schema_match", "hash_match"))
+                if green and r.get("err") is None:
+                    last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordering contract: the correctness checker records rows for the
-    FIRST 50 entries only, so slots 1-50 are the driver-certified
-    window for this round and everything after is the pytest-oracled
-    tail (tests/test_relational.py auto-parametrizes the same
-    Spark-vs-DuckDB compare over EVERY oracle_sql entry, window or
-    tail, so rotated-out queries stay hash-checked each round).
-
-    ROTATION POLICY (round-6 verdict item 1): STALEST-FIRST. Each
-    round the window holds (a) the flagship parity sentinel
-    `wordcount` (always slot 1 — the reference's whole engine path),
-    (b) every query newly registered this round (never-certified =
-    infinitely stale), then (c) the registered queries with the
-    OLDEST last-driver-certified round, oldest first, until the 50
-    slots are full.
-
-    ROTATION LEDGER (from CORRECTNESS_r01-r13; zero reds since round 2
-    — the 11 round-1 entries were bootstrap environment errors, fixed
-    in round 2. Round 13 executed its intended window exactly —
-    verified key-for-key by the round-13 verdict: wordcount + the 4
-    round-13 registrations + the 14 r7-cohort leftovers + the first
-    31 of the r9-certified cohort, 50/50 green):
-
-      round-14 window (THIS round, executed below) = wordcount
-        + the 4 NEW round-14 registrations
-          (txlog_update_orders — UPDATE, the last DML verb of the
-          Delta triad, certified in BOTH modes on one chain: a cow
-          update rewriting only matched files then a dv update
-          vectoring old images and appending new ones;
-          txlog_update_cdf — the change feed across both UPDATE
-          modes, delete(old image)+insert(new image) pairs with the
-          v2 old images reflecting v1's change, same oracle shape as
-          dv_cdf_orders; txlog_dml_orders — DELETE/UPDATE/MERGE as
-          SQL TEXT via sources/sql_dml.py, closing the spark.sql-DML
-          catalog boundary with a pure-parser front-end over the
-          library verbs; stream_txlog_append_source — the APPEND feed
-          via spark.readStream.format("txlog") without change_feed,
-          the non-CDF sibling of stream_txlog_cdf_source, so both
-          stream-source feed modes are driver-certified)
-        + the 18 r9-cohort leftovers (lm_quality_mix_sample ...
-          token_counts — the oldest remaining cohort, now fully
-          rotated)
-        + the first 27 of the r10-certified cohort
-          (merge_upsert_orders ... inverted_index)
-        = exactly 50 (1 + 4 + 18 + 27).
-      round-15 window = wordcount + round-15 registrations + the 22
-          r10-cohort leftovers (ngram_jaccard_dups ...
-          stream_static_hourly), then the r11-certified cohort head
-          until full.
-      round-16+ = the r11 remainder, then the r12-certified cohort
-          (the 6 round-12 registrations + the 8 r6 re-certs + the 35
-          r7 re-certs), then the r13-certified cohort (the 4 round-13
-          registrations + the 14 r7 re-certs + the 31 r9 re-certs),
-          then the r14-certified cohort, stalest first, forever.
-
-    With 219 queries and 50 slots every query is certified at least
-    once per ceil(219/50) = 5 rounds, and every query — window or
-    tail — is hash-checked against its DuckDB oracle by pytest
-    (tests/test_relational.py auto-parametrizes over EVERY oracle_sql
-    entry) every round. All registered queries are fully
-    DuckDB-oracled — zero rows-only. stream_tws_sessions stays
-    documented-unregistered (python protobuf runtime absent in this
-    container; see the NOT-registered note at the bottom of the
-    dict).
-    """
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # ===== round-14 window slot 1: flagship parity sentinel =====
-        "wordcount": parity.wordcount,
-        # ===== round-14 window: NEW round-14 registrations =====
-        "txlog_update_orders": relational.txlog_update_orders,
-        "txlog_update_cdf": relational.txlog_update_cdf,
-        "txlog_dml_orders": relational.txlog_dml_orders,
-        "stream_txlog_append_source": textops.stream_txlog_append_source,
-        # ===== round-14 window: r9-cohort leftovers (certified r9 —
-        # the oldest remaining cohort, now fully rotated) =====
-        "lm_quality_mix_sample": textops.lm_quality_mix_sample,
-        "repeated_spans": textops.repeated_spans,
-        "dpp_quarter_revenue": relational.dpp_quarter_revenue,
-        "session_paths": events.session_paths,
-        "decontaminate_docs": textops.decontaminate_docs,
-        "dup_clusters": textops.dup_clusters,
-        "events_hourly_filled": events.events_hourly_filled,
-        "lang_id": textops.lang_id,
-        "media_catalog": multimodal.media_catalog,
-        "media_frame_plan": multimodal.media_frame_plan,
-        "orders_topk": relational.orders_topk,
-        "pivot_line_status": relational.pivot_line_status,
-        "redact_pii": textops.redact_pii,
-        "rolling_fingerprints": textops.rolling_fingerprints,
-        "rollup_sales": relational.rollup_sales,
-        "split_assign": sampling.split_assign,
-        "stratified_sample": sampling.stratified_sample,
-        "token_counts": textops.token_counts,
-        # ===== round-14 window: r10-certified cohort head (28 of 49;
-        # completes the 50 slots) =====
-        "merge_upsert_orders": relational.merge_upsert_orders,
-        "cdf_order_changes": relational.cdf_order_changes,
-        "optimize_orders_compaction": relational.optimize_orders_compaction,
-        "schema_evolution_orders": relational.schema_evolution_orders,
-        "cdf_incremental_dedup_manifest": (
-            textops.cdf_incremental_dedup_manifest
-        ),
-        "restore_orders_rollback": relational.restore_orders_rollback,
-        "hybrid_rrf_topk": vectors.hybrid_rrf_topk,
-        "dataset_card_report": sampling.dataset_card_report,
-        "bpe_encode_corpus": textops.bpe_encode_corpus,
-        "media_exact_dups": multimodal.media_exact_dups,
-        "forget_audit_report": events.forget_audit_report,
-        "time_travel_orders": relational.time_travel_orders,
-        "stream_txlog_append": streams.stream_txlog_append,
-        "pii_redaction_audit": textops.pii_redaction_audit,
-        "approx_distinct_users": events.approx_distinct_users,
-        "cube_sales": relational.cube_sales,
-        "customer_order_stats": relational.customer_order_stats,
-        "customers_without_orders": relational.customers_without_orders,
-        "dedup_exact": textops.dedup_exact,
-        "embedding_near_dups": vectors.embedding_near_dups,
-        "events_hourly": events.events_hourly,
-        "events_json_extract": events.events_json_extract,
-        "file_counts": parity.file_counts,
-        "file_meta_concat": parity.file_meta_concat,
-        "grouping_sets_sales": relational.grouping_sets_sales,
-        "hypertable_rollup": events.hypertable_rollup,
-        "inverted_index": parity.inverted_index,
-        # ================= end of the 50-slot checked window =================
-        # ----- r10-certified cohort remainder (round-15 window head) -----
-        "ngram_jaccard_dups": textops.ngram_jaccard_dups,
-        "order_price_percentiles": relational.order_price_percentiles,
-        "pack_sequences": sampling.pack_sequences,
-        "parts_top3_per_brand": relational.parts_top3_per_brand,
-        "purchase_asof_click": events.purchase_asof_click,
-        "q1_pricing_summary": relational.q1_pricing_summary,
-        "range_join_hot_windows": events.range_join_hot_windows,
-        "region_revenue": relational.region_revenue,
-        "salted_user_counts": events.salted_user_counts,
-        "scalar_kitchen_sink": relational.scalar_kitchen_sink,
-        "segment_setops": relational.segment_setops,
-        "stream_hourly_counts": streams.stream_hourly_counts,
-        "table_profile": sampling.table_profile,
-        "tfidf_top_terms": textops.tfidf_top_terms,
-        "udtf_first_tokens": parity.udtf_first_tokens,
-        "user_sessions": events.user_sessions,
-        "window_kitchen_sink": relational.window_kitchen_sink,
-        "approx_percentile_bounds": relational.approx_percentile_bounds,
-        "global_shuffle": sampling.global_shuffle,
-        "q18_large_volume": relational.q18_large_volume,
-        "stream_sliding_counts": streams.stream_sliding_counts,
-        "stream_static_hourly": streams.stream_static_hourly,
-        # ----- round-11-certified cohort (round 15/16) -----
-        "txlog_partition_pruned_revenue": (
-            relational.txlog_partition_pruned_revenue
-        ),
-        "type_widening_orders": relational.type_widening_orders,
-        "txlog_checkpoint_log_orders": relational.txlog_checkpoint_log_orders,
-        "txlog_clone_orders": relational.txlog_clone_orders,
-        "txlog_zorder_revenue": relational.txlog_zorder_revenue,
-        "txlog_constraints_orders": relational.txlog_constraints_orders,
-        "cdf_stream_dedup_manifest": textops.cdf_stream_dedup_manifest,
-        "dup_cluster_reps": textops.dup_cluster_reps,
-        "ann_ivfpq_topk": vectors.ann_ivfpq_topk,
-        "ann_pq_adc_topk": vectors.ann_pq_adc_topk,
-        "ann_pq_rerank_topk": vectors.ann_pq_rerank_topk,
-        "ann_pq_trained_topk": vectors.ann_pq_trained_topk,
-        "canonical_part_names": textops.canonical_part_names,
-        "click_next_purchase": events.click_next_purchase,
-        "embedding_gram": vectors.embedding_gram,
-        "events_variant_stats": events.events_variant_stats,
-        "forget_users_events": events.forget_users_events,
-        "frame_checksums_mm": multimodal.frame_checksums_mm,
-        "frequent_brands_sketch": relational.frequent_brands_sketch,
-        "incremental_neardup_manifest": textops.incremental_neardup_manifest,
-        "integrity_report": sampling.integrity_report,
-        "inverted_index_topn": parity.inverted_index_topn,
-        "kv_pipeline": parity.kv_pipeline,
-        "lateral_top_lines": relational.lateral_top_lines,
-        "minhash_dups": textops.minhash_dups,
-        "pagerank_directed_suppliers": relational.pagerank_directed_suppliers,
-        "pagerank_suppliers": relational.pagerank_suppliers,
-        "pit_priority_revenue": relational.pit_priority_revenue,
-        "q10_returned_items": relational.q10_returned_items,
-        "q11_important_brands": relational.q11_important_brands,
-        "q12_ship_latency": relational.q12_ship_latency,
-        "q13_order_distribution": relational.q13_order_distribution,
-        "q14_promo_effect": relational.q14_promo_effect,
-        "q15_top_supplier": relational.q15_top_supplier,
-        "q16_part_supplier_counts": relational.q16_part_supplier_counts,
-        "q17_small_quantity": relational.q17_small_quantity,
-        "q19_discounted_revenue": relational.q19_discounted_revenue,
-        "q20_dominant_suppliers": relational.q20_dominant_suppliers,
-        "q22_dormant_rich": relational.q22_dormant_rich,
-        "q3_shipping_priority": relational.q3_shipping_priority,
-        "q4_order_priority": relational.q4_order_priority,
-        "q5_local_supplier_volume": relational.q5_local_supplier_volume,
-        "q6_clustered_scan": relational.q6_clustered_scan,
-        "q6_zorder_scan": relational.q6_zorder_scan,
-        "q7_nation_volume": relational.q7_nation_volume,
-        "q9_product_profit": relational.q9_product_profit,
-        "recursive_month_spine": relational.recursive_month_spine,
-        "revenue_trailing_window": relational.revenue_trailing_window,
-        "scd2_customer_priority": relational.scd2_customer_priority,
-        # ----- round-12-certified cohort (freshest; round 16/17):
-        # the 6 round-12 registrations + the 8 r6 re-certs + the 35
-        # r7 re-certs -----
-        "dv_delete_orders": relational.dv_delete_orders,
-        "dv_cdf_orders": relational.dv_cdf_orders,
-        "dv_merge_orders": relational.dv_merge_orders,
-        "column_mapping_orders": relational.column_mapping_orders,
-        "txlog_sql_orders": relational.txlog_sql_orders,
-        "txlog_objectstore_orders": relational.txlog_objectstore_orders,
-        "segment_order_stats_compacted": (
-            relational.segment_order_stats_compacted
-        ),
-        "semantic_dedup_cells": vectors.semantic_dedup_cells,
-        "similarity_topk": vectors.similarity_topk,
-        "stream_converting_clicks": streams.stream_converting_clicks,
-        "stream_late_data_drop": streams.stream_late_data_drop,
-        "stream_scd2_user_state": streams.stream_scd2_user_state,
-        "stream_stateful_sessions": streams.stream_stateful_sessions,
-        "weighted_source_sample": sampling.weighted_source_sample,
-        "ann_ivf_topk": vectors.ann_ivf_topk,
-        "ann_kmeans_topk": vectors.ann_kmeans_topk,
-        "ann_sq8_topk": vectors.ann_sq8_topk,
-        "audio_features_mm": multimodal.audio_features_mm,
-        "chunk_documents": textops.chunk_documents,
-        "containment_dups": textops.containment_dups,
-        "curation_pipeline": textops.curation_pipeline,
-        "customers_with_big_orders": relational.customers_with_big_orders,
-        "daily_revenue_moving": relational.daily_revenue_moving,
-        "distinct_parts_per_flag": relational.distinct_parts_per_flag,
-        "doc_fingerprints": textops.doc_fingerprints,
-        "doc_quality": textops.doc_quality,
-        "doc_repetition": textops.doc_repetition,
-        "domain_mix_sample": sampling.domain_mix_sample,
-        "dup_clusters_star": textops.dup_clusters_star,
-        "early_user_activity": events.early_user_activity,
-        "events_skew_profile": events.events_skew_profile,
-        "forget_customers_scd2": relational.forget_customers_scd2,
-        "forget_docs_neardup_manifest": textops.forget_docs_neardup_manifest,
-        "funnel_conversion": events.funnel_conversion,
-        "fuzzy_part_names": textops.fuzzy_part_names,
-        "gopher_rules": textops.gopher_rules,
-        "image_features_mm": multimodal.image_features_mm,
-        "image_resize_mm": multimodal.image_resize_mm,
-        "incremental_dedup_manifest": textops.incremental_dedup_manifest,
-        "leakage_safe_split": textops.leakage_safe_split,
-        "order_line_arrays": relational.order_line_arrays,
-        "order_priority_counts": relational.order_priority_counts,
-        "order_ship_calendar": relational.order_ship_calendar,
-        "order_value_robust_stats": relational.order_value_robust_stats,
-        "q21_waiting_suppliers": relational.q21_waiting_suppliers,
-        "q2_min_cost_supplier": relational.q2_min_cost_supplier,
-        "q6_forecast_revenue": relational.q6_forecast_revenue,
-        "q8_market_share": relational.q8_market_share,
-        "quality_filter": textops.quality_filter,
-        # ----- round-13-certified cohort (freshest; round 17/18):
-        # the 4 round-13 registrations + the 14 r7 re-certs + the 31
-        # r9 re-certs -----
-        "txlog_sql_partitioned_orders": (
-            relational.txlog_sql_partitioned_orders
-        ),
-        "txlog_sql_overwrite_orders": relational.txlog_sql_overwrite_orders,
-        "txlog_zorder_dv_revenue": relational.txlog_zorder_dv_revenue,
-        "stream_txlog_cdf_source": textops.stream_txlog_cdf_source,
-        "returnflag_measures_unpivot": relational.returnflag_measures_unpivot,
-        "semantic_dedup": vectors.semantic_dedup,
-        "simhash_dups": textops.simhash_dups,
-        "snapshot_diff_orders": relational.snapshot_diff_orders,
-        "srp_near_dups": vectors.srp_near_dups,
-        "stream_click_attribution": streams.stream_click_attribution,
-        "stream_click_purchase_full": streams.stream_click_purchase_full,
-        "stream_dedup_events": streams.stream_dedup_events,
-        "stream_events_etl": streams.stream_events_etl,
-        "stream_purchase_click_join": streams.stream_purchase_click_join,
-        "stream_session_stats": streams.stream_session_stats,
-        "supplier_balance_rank": relational.supplier_balance_rank,
-        "top_customers_by_revenue": relational.top_customers_by_revenue,
-        "triangle_count_suppliers": relational.triangle_count_suppliers,
-        "hdr_quantile_rollup_values": events.hdr_quantile_rollup_values,
-        "avro_events_roundtrip": parity.avro_events_roundtrip,
-        "mad_outlier_days": events.mad_outlier_days,
-        "user_latest_state": events.user_latest_state,
-        "bfs_hops_suppliers": relational.bfs_hops_suppliers,
-        "skipgram_cooc_topk": textops.skipgram_cooc_topk,
-        "bm25_search_topk": textops.bm25_search_topk,
-        "doc_outlier_embeddings": vectors.doc_outlier_embeddings,
-        "cross_split_contamination": textops.cross_split_contamination,
-        "stream_hdr_quantiles": streams.stream_hdr_quantiles,
-        "bpe_pair_counts": textops.bpe_pair_counts,
-        "user_sessions_skewproof": events.user_sessions_skewproof,
-        "bloom_pruned_urgent_revenue": relational.bloom_pruned_urgent_revenue,
-        "classifier_quality_scores": textops.classifier_quality_scores,
-        "hll_sketch_rollup_users": events.hll_sketch_rollup_users,
-        "trigram_lm_scores": textops.trigram_lm_scores,
-        "boilerplate_ratio": textops.boilerplate_ratio,
-        "ann_filtered_topk": vectors.ann_filtered_topk,
-        "collocation_pmi": textops.collocation_pmi,
-        "bpe_learn_merges": textops.bpe_learn_merges,
-        "pca_power_pc1": vectors.pca_power_pc1,
-        "kcore_suppliers": relational.kcore_suppliers,
-        "keyword_search_topk": textops.keyword_search_topk,
-        "label_prop_communities": relational.label_prop_communities,
-        "split_token_drift": sampling.split_token_drift,
-        "decontaminate_fuzzy": textops.decontaminate_fuzzy,
-        "ppr_supplier_recs": relational.ppr_supplier_recs,
-        "covisitation_lift": events.covisitation_lift,
-        "ann_mmr_topk": vectors.ann_mmr_topk,
-        "events_hourly_interp": events.events_hourly_interp,
-        "retention_cohorts": events.retention_cohorts,
-        # NOT registered: streams.stream_tws_sessions (Spark 4
-        # transformWithStateInPandas). Its state protocol needs the
-        # python protobuf runtime, permanently absent in this
-        # container, so the applyInPandasWithState form
-        # (stream_stateful_sessions) is the permanent certified
-        # sessionization path; the tws form stays as a documented
-        # deployment recipe sharing the same oracle
-        # (plans/streams.py:stream_tws_sessions docstring), with its
-        # processor unit-tested against mock handles.
-    }
-    return q
+    """Every oracle key mapped to its plan function: ``wordcount`` first
+    (the reference's whole engine path), then stalest-first by
+    (last green round, name); a query never certified counts as round 0.
+    Functions are looked up on each call so rebound attributes are seen."""
+    owner = {name: mod for mod, attr in _ORACLE_DICTS.items() for name in getattr(mod, attr)}
+    last = _last_green_rounds()
+    order = sorted(owner, key=lambda k: (k != "wordcount", last.get(k, 0), k))
+    return {name: getattr(owner[name], name) for name in order}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -366,12 +91,6 @@ def oracle_sql() -> dict[str, str]:
     views region nation customer supplier part orders lineitem events
     documents embeddings)."""
     o: dict[str, str] = {}
-    o.update(parity.PARITY_ORACLES)
-    o.update(relational.RELATIONAL_ORACLES)
-    o.update(events.EVENTS_ORACLES)
-    o.update(streams.STREAMS_ORACLES)
-    o.update(textops.TEXTOPS_ORACLES)
-    o.update(sampling.SAMPLING_ORACLES)
-    o.update(vectors.VECTORS_ORACLES)
-    o.update(multimodal.MULTIMODAL_ORACLES)
+    for mod, attr in _ORACLE_DICTS.items():
+        o.update(getattr(mod, attr))
     return o

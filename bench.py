@@ -33,10 +33,7 @@ $SPARK_GRAFT_BENCH_RECYCLE queries (default 21): stop() tears down
 state stores, the status store, and shuffle dirs, and the next
 getOrCreate starts clean in the same JVM. This is also the honest
 model of production, where each query family runs in its own job, not
-one immortal driver. Diagnostics:
-  SPARK_GRAFT_BENCH_ORDER=reversed  run the registry backwards — if
-    the slow set follows position, it's harness debris; if it follows
-    the query, it's the plan.
+one immortal driver. Diagnostic:
   SPARK_GRAFT_BENCH_RECYCLE=0       disable recycling (round-3 mode).
 """
 
@@ -372,13 +369,10 @@ def main() -> None:
     print(f"  loadavg at start: {loadavg_start}", file=sys.stderr)
 
     qs = list(entry_mod.queries().items())
-    if os.environ.get("SPARK_GRAFT_BENCH_ORDER") == "reversed":
-        qs.reverse()
-        print("  (registry order REVERSED for diagnosis)", file=sys.stderr)
     # SPARK_GRAFT_BENCH_ONLY=a,b,c — run just the named queries (the
     # isolated fresh-session adjudication protocol for regression-gate
     # flags, SCALE.md "similarity warm regression"); a filtered run
-    # never writes the gate baseline (guarded below by sf/order checks
+    # never writes the gate baseline (guarded below by the sf check
     # plus this flag).
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     if only:
@@ -492,13 +486,12 @@ def main() -> None:
     # Post-run adjudication (round 14, see fold_adjudication): re-time
     # the flagged set in a fresh session AFTER the pass, when the
     # external burst that inflated them has usually moved on. Skipped
-    # for filtered/reversed diagnostic runs (their baselines don't
+    # for filtered diagnostic runs (their baselines don't
     # line up) and via SPARK_GRAFT_BENCH_ADJUDICATE=0.
     adjudication: dict[str, dict] = {}
     if (
         regressions
         and not os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-        and not os.environ.get("SPARK_GRAFT_BENCH_ORDER")
         and os.environ.get("SPARK_GRAFT_BENCH_ADJUDICATE") != "0"
     ):
         flagged = [
@@ -618,7 +611,6 @@ def main() -> None:
     if (
         sf_val == 0.1
         and timings
-        and not os.environ.get("SPARK_GRAFT_BENCH_ORDER")
         # an ONLY-filtered adjudication run must not rewrite the
         # full-registry headline either: qs is already filtered here,
         # so the subset check below can't catch it (round-10 find —

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
 
 def _tagged_union(
@@ -199,61 +198,3 @@ def asof_join_nearest(
         out_cols.append(matched.getField(c).alias(f"matched_{c}"))
     return filled.select(*out_cols)
 
-
-def asof_join_cogrouped(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    payload_cols: list[str],
-    tolerance_us: int | None = None,
-) -> DataFrame:
-    """Same backward as-of semantics via ``cogroup().applyInPandas`` —
-    the escape hatch for operators whose per-key logic built-in
-    expressions cannot express (here they can; this variant exists as
-    the template and is parity-tested against the primary).
-
-    Shape at scale: both sides shuffle once on the key (exactly like
-    the union-and-fill plan), then each key's two Arrow batches meet in
-    one Python call — ``pandas.merge_asof`` per group, vectorized. The
-    per-key data must fit one executor's memory, which holds whenever
-    a groupBy on the same key would (same partitioning); prefer the
-    union-and-fill form in production because it stays JVM-side.
-    """
-    out_schema = StructType(
-        [f for f in left.schema.fields]
-        + [StructField("matched_ts_us", right.schema[right_ts].dataType, True)]
-        + [
-            StructField(f"matched_{c}", right.schema[c].dataType, True)
-            for c in payload_cols
-        ]
-    )
-    l_names = [c for c in left.columns]
-
-    def merge(lpdf, rpdf):
-        import pandas as pd
-
-        lpdf = lpdf.sort_values(left_ts, kind="mergesort")
-        # deterministic tie-break: among equal right timestamps keep the
-        # greatest payload, matching the union-and-fill variant
-        rpdf = rpdf.sort_values([right_ts, *payload_cols], kind="mergesort")
-        rr = rpdf[[right_ts, *payload_cols]].rename(
-            columns={right_ts: "matched_ts_us", **{c: f"matched_{c}" for c in payload_cols}}
-        )
-        tol = None if tolerance_us is None else tolerance_us
-        out = pd.merge_asof(
-            lpdf,
-            rr,
-            left_on=left_ts,
-            right_on="matched_ts_us",
-            direction="backward",
-            tolerance=tol,
-        )
-        return out[[*l_names, "matched_ts_us", *[f"matched_{c}" for c in payload_cols]]]
-
-    return (
-        left.groupBy(on)
-        .cogroup(right.groupBy(on))
-        .applyInPandas(merge, schema=out_schema)
-    )

@@ -710,18 +710,6 @@ def kmeans_fit(
     return cents, out
 
 
-def kmeans_cells(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`kmeans_fit`, assignment only — kept for callers that just
-    need the ``(id, cell)`` partitioner."""
-    return kmeans_fit(emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col)[1]
-
-
 # ---------------------------------------------------------------------------
 # Scalar quantization (SQ8) — the memory/IO compression tier of the ANN
 # stack: 8-bit codes cut vector storage and scan bytes 4x vs float32
@@ -1317,8 +1305,9 @@ def mmr_rerank(
 
       - candidates are folded in neighbor_id-ascending order with a
         strictly-greater replace, which is exactly row_number over
-        (mmr DESC, neighbor_id ASC) = 1 — ties keep the smallest doc
-        id, and Spark's NaN-is-greatest comparison matches the old
+        (mmr DESC NULLS LAST, neighbor_id ASC) = 1 — ties keep the
+        smallest doc id, a NULL mmr (NULL rel) loses to any non-null
+        one, and Spark's NaN-is-greatest comparison matches the old
         window sort;
       - ms = array_max over the selected-set sims is the old
         groupBy.max; a candidate with no sims row against the selected
@@ -1354,15 +1343,21 @@ def mmr_rerank(
     # element_at(scored, 1) as the fold seed: folding the first element
     # against itself is a no-op under the strictly-greater replace, so
     # ties keep the earliest (= smallest neighbor_id) element — exactly
-    # row_number over (mmr DESC, neighbor_id ASC) = 1.
+    # row_number over (mmr DESC NULLS LAST, neighbor_id ASC) = 1. A
+    # non-null mmr replaces a NULL one (NULL rel), so a NULL seed never
+    # sticks.
     best = (
         f"aggregate({scored}, element_at({scored}, 1),"
-        " (b, s1) -> IF(s1.mmr > b.mmr, s1, b))"
+        " (b, s1) -> IF(s1.mmr > b.mmr"
+        " OR (b.mmr IS NULL AND s1.mmr IS NOT NULL), s1, b))"
     )
+    # The seed's mmr field must be nullable: the fold state takes its
+    # element type from the seed, and a non-nullable field would read a
+    # NULL-rel pick's NULL mmr back as 0.0.
     seed = (
         "slice(transform(cands, c -> named_struct("
         "'doc', c.neighbor_id, 'rel', c.rel,"
-        " 'mmr', CAST(0.0 AS DOUBLE))), 1, 0)"
+        " 'mmr', CAST(NULL AS DOUBLE))), 1, 0)"
     )
     sel_expr = (
         f"aggregate(sequence(1, {int(k)}), {seed},"

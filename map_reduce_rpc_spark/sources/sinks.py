@@ -11,7 +11,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -316,58 +316,6 @@ def write_zordered_parquet(
     for dates), so any orderable type reduces to the numeric contract.
     """
     keyed = df.withColumn("_zkey", zorder_key(zcols, mins, maxs, bits))
-    parts = (
-        keyed.repartitionByRange(files, "_zkey")
-        if files
-        else keyed.repartitionByRange("_zkey")
-    )
-    parts.sortWithinPartitions("_zkey").drop("_zkey").write.mode(mode).parquet(path)
-
-
-def write_zordered_parquet_ranked(
-    df: DataFrame,
-    path: str,
-    zcols: tuple[Column, ...] | list[Column],
-    bits: int = 16,
-    files: int | None = None,
-    mode: str = "error",
-    tiebreak: Column | None = None,
-) -> None:
-    """EQUI-DEPTH Z-order: each column is scaled to its ``bits``-bit
-    cell by RANK (row_number over (value, tiebreak) -> floor(rank *
-    2^bits / n)) instead of min-max position — the skew-proof form.
-    Min-max scaling (:func:`write_zordered_parquet`) collapses under a
-    skewed column: a heavy-tailed value range maps ~all rows into a
-    few cells, so the interleaved key degenerates to the OTHER
-    column's order and footer pruning on the skewed column dies.
-    Rank scaling fills every cell with ~n/2^bits rows by construction
-    — the same reason Delta's OPTIMIZE ZORDER uses range-partition ids
-    rather than value positions. Costs one sort per column (window
-    ranks; write-once layout-build economics, like the min-max form's
-    calibration agg). Deterministic given a total order: pass
-    ``tiebreak`` (e.g. the row id) so equal values rank stably.
-
-    Scale note: the exact global rank keeps cell assignment
-    deterministic (testable, engine-replayable); at 100 TB swap it for
-    ``repartitionByRange(2^bits, col)`` partition ids — sampled
-    boundaries, the same equi-depth effect, no single-task window —
-    exactly Delta's range-partition-id mechanism."""
-    keyed = df
-    scaled = []
-    n = F.count(F.lit(1)).over(Window.partitionBy())
-    for j, c in enumerate(zcols):
-        order = [c.asc()] + ([tiebreak.asc()] if tiebreak is not None else [])
-        rn = F.row_number().over(Window.orderBy(*order))
-        keyed = keyed.withColumn(
-            f"_zr{j}",
-            F.floor((rn - 1) * F.lit(float(1 << bits)) / n).cast("long"),
-        )
-        scaled.append(F.col(f"_zr{j}"))
-    from ..operators.scale import morton_key
-
-    keyed = keyed.withColumn("_zkey", morton_key(scaled, bits)).drop(
-        *[f"_zr{j}" for j in range(len(scaled))]
-    )
     parts = (
         keyed.repartitionByRange(files, "_zkey")
         if files

@@ -88,35 +88,3 @@ def test_approx_distinct_within_error_bound(spark, sf_dir):
     for r in rows:
         assert r.exact_users > 0
         assert r.within_bound is True
-
-
-def test_cogrouped_asof_matches_primary(spark, sf_dir):
-    """cogroup().applyInPandas as-of variant must produce exactly the
-    union-and-fill operator's rows — the custom-operator escape hatch
-    is held to the same semantics (incl. equal-ts tie-breaks)."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_rpc_spark.operators.asof import (
-        asof_join_backward,
-        asof_join_cogrouped,
-    )
-    from map_reduce_rpc_spark.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", F.unix_micros("ts").alias("purchase_ts_us")
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", F.unix_micros("ts").alias("click_ts_us"), F.col("value")
-    )
-    kw = dict(
-        on="user_id",
-        left_ts="purchase_ts_us",
-        right_ts="click_ts_us",
-        payload_cols=["value"],
-    )
-    primary = asof_join_backward(purchases, clicks, **kw)
-    cogrouped = asof_join_cogrouped(purchases, clicks, **kw)
-    assert primary.schema == cogrouped.schema
-    assert primary.exceptAll(cogrouped).count() == 0
-    assert cogrouped.exceptAll(primary).count() == 0

@@ -78,12 +78,9 @@ _asof_rows = st.lists(
 @settings(**_SETTINGS)
 @given(left=_asof_rows, right=_asof_rows)
 def test_asof_backward_matches_reference_model(spark, left, right):
-    """Both as-of implementations must equal the obvious O(n*m) model:
+    """The backward as-of join must equal the obvious O(n*m) model:
     latest right ts <= left ts per key, ties -> max payload."""
-    from map_reduce_rpc_spark.operators.asof import (
-        asof_join_backward,
-        asof_join_cogrouped,
-    )
+    from map_reduce_rpc_spark.operators.asof import asof_join_backward
 
     ldf = spark.createDataFrame(
         [(i, k, t) for i, (k, t, _) in enumerate(left)],
@@ -100,12 +97,11 @@ def test_asof_backward_matches_reference_model(spark, left, right):
     expected = {
         i: model(k, t) for i, (k, t, _) in enumerate(left)
     }
-    for impl in (asof_join_backward, asof_join_cogrouped):
-        out = impl(
-            ldf, rdf, on="k", left_ts="lts", right_ts="rts", payload_cols=["payload"]
-        ).collect()
-        got = {r.row_id: (r.matched_ts_us, r.matched_payload) for r in out}
-        assert got == expected, impl.__name__
+    out = asof_join_backward(
+        ldf, rdf, on="k", left_ts="lts", right_ts="rts", payload_cols=["payload"]
+    ).collect()
+    got = {r.row_id: (r.matched_ts_us, r.matched_payload) for r in out}
+    assert got == expected
 
 
 @settings(**_SETTINGS)

@@ -1,7 +1,8 @@
-"""Relational + events queries vs the DuckDB oracle.
+"""Every registered query vs its DuckDB oracle (the t2 correctness replica).
 
-Runs every registered query that has an oracle (driver t2 replica) —
-any new query added to __spark_entry__ is automatically covered.
+The registry is derived from the plans modules' ``*_ORACLES`` dicts,
+so a new oracle key is covered here with no other edit; the
+``PARITY_KEYS`` queries run in tests/test_parity.py instead.
 """
 
 from __future__ import annotations

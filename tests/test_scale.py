@@ -638,75 +638,6 @@ def test_zorder_beats_range_clustering_on_second_dim(spark, sf_dir):
     assert z_ship < 1.0, f"zorder lost shipdate locality: {z_ship}"
 
 
-def test_rank_zorder_beats_minmax_under_skew(spark, tmp_path):
-    """The equi-depth claim, measured on a heavy-tailed column: under
-    min-max scaling a lognormal-ish value range maps ~all rows into a
-    sliver of cells, so a selective predicate on the skewed column
-    overlaps ~every file's footer stats; rank scaling fills cells
-    evenly, so the same predicate prunes. Gates: (1) the bottom-half
-    predicate on the skewed column overlaps strictly fewer files under
-    rank scaling than min-max; (2) both layouts hold identical rows."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from map_reduce_rpc_spark.sources.sinks import (
-        write_zordered_parquet,
-        write_zordered_parquet_ranked,
-    )
-
-    n = 4000
-    # deterministic heavy tail: most values tiny, a few huge
-    df = spark.range(n).select(
-        F.col("id"),
-        (F.col("id") % 97).alias("x"),
-        F.pow(F.lit(10.0), (F.xxhash64("id") % 1000).cast("double") / F.lit(167.0))
-        .cast("long")
-        .alias("y"),  # spans ~1 .. 10^6, mass at the bottom
-    )
-    lo = df.agg(
-        F.min("x"), F.max("x"), F.min("y"), F.max("y"), F.expr("median(y)")
-    ).first()
-    mm, rk = str(tmp_path / "mm"), str(tmp_path / "rk")
-    write_zordered_parquet(
-        df, mm,
-        zcols=[F.col("x"), F.col("y")],
-        mins=[float(lo[0]), float(lo[2])], maxs=[float(lo[1]), float(lo[3])],
-        bits=8, files=16,
-    )
-    write_zordered_parquet_ranked(
-        df, rk, zcols=[F.col("x"), F.col("y")], bits=8, files=16,
-        tiebreak=F.col("id"),
-    )
-
-    import pyarrow.parquet as pq_mod
-
-    def overlap_frac(path, y_cut):
-        files = glob.glob(os.path.join(path, "part-*.parquet"))
-        hit = 0
-        for p in files:
-            md = pq_mod.ParquetFile(p).metadata
-            fmin = None
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    if col.path_in_schema == "y":
-                        st = col.statistics
-                        fmin = st.min if fmin is None else min(fmin, st.min)
-            hit += fmin is not None and fmin <= y_cut
-        return hit / len(files), len(files)
-
-    y_cut = int(lo[4])  # bottom-half predicate: y <= median
-    mm_frac, mm_n = overlap_frac(mm, y_cut)
-    rk_frac, rk_n = overlap_frac(rk, y_cut)
-    assert mm_n > 4 and rk_n > 4
-    assert rk_frac < mm_frac, (rk_frac, mm_frac)
-    rows_mm = sorted(map(tuple, spark.read.parquet(mm).collect()))
-    rows_rk = sorted(map(tuple, spark.read.parquet(rk).collect()))
-    assert rows_mm == rows_rk
-
-
 def test_merge_delete_bounds_rewrite_and_removes_emptied_partitions(spark, tmp_path):
     """The delete verb's two scale gates, byte-level: (1) deleting one
     key rewrites ONLY that key's bucket — every other bucket's files

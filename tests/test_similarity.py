@@ -114,8 +114,8 @@ def test_kmeans_cells_partition_and_determinism(spark, emb):
     pipeline is deterministic (md5-ordered init, fixed iterations, tie
     break by centroid position) so two independent runs must agree
     exactly."""
-    a = similarity.kmeans_cells(emb, k=4, iters=2).collect()
-    b = similarity.kmeans_cells(emb, k=4, iters=2).collect()
+    a = similarity.kmeans_fit(emb, k=4, iters=2)[1].collect()
+    b = similarity.kmeans_fit(emb, k=4, iters=2)[1].collect()
     n = emb.count()
     assert len(a) == n
     assert all(0 <= r["cell"] < 4 for r in a)
@@ -134,7 +134,7 @@ def test_kmeans_iterations_reduce_inertia(spark, emb):
     vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64) for r in rows}
 
     def inertia(iters: int) -> float:
-        cells = similarity.kmeans_cells(emb, k=4, iters=iters).collect()
+        cells = similarity.kmeans_fit(emb, k=4, iters=iters)[1].collect()
         by_cell: dict[int, list] = {}
         for r in cells:
             by_cell.setdefault(r["cell"], []).append(vecs[r["id"]])
@@ -404,3 +404,25 @@ def test_mmr_rerank_suppresses_near_duplicate(spark):
         for r in mmr_rerank(short, sims, lam=0.7, k=3).collect()
     }
     assert picks == {1: 1, 2: 3, 3: 2}
+
+
+def test_mmr_rerank_null_rel_picked_last(spark):
+    """A NULL-rel candidate has a NULL mmr and ranks after every scored
+    one (mmr DESC NULLS LAST), even when it holds the smallest
+    neighbor_id and so seeds each step's argmax fold."""
+    from map_reduce_rpc_spark.operators.similarity import mmr_rerank
+
+    short = spark.createDataFrame(
+        [(0, 1, None), (0, 2, 0.50), (0, 3, 0.90)],
+        "query_id long, neighbor_id long, rel double",
+    )
+    sims = spark.createDataFrame(
+        [(0, a, b, 0.0) for a in (1, 2, 3) for b in (1, 2, 3) if a != b],
+        "query_id long, a long, b long, sim double",
+    )
+    picks = {
+        r["pick"]: (r["doc"], r["mmr"])
+        for r in mmr_rerank(short, sims, lam=0.7, k=3).collect()
+    }
+    assert [picks[p][0] for p in (1, 2, 3)] == [3, 2, 1]
+    assert picks[3][1] is None
