@@ -20,12 +20,15 @@ the properties that actually matter and nothing else:
   log-plus-parquet-checkpoint shape, which is what keeps commit cost
   flat at 10^6-file tables instead of O(files) JSON per commit.
 - **Optimistic concurrency.** Two writers racing to version N: one
-  link wins; the loser sees FileExistsError, re-reads the NEW current
-  snapshot, re-stages its logical change on top, and retries at N+1 —
-  serializable append/delete/merge without any lock server, exactly
-  the Delta protocol shape. Concurrent SCHEMA evolutions merge: a
-  retrying writer re-derives its evolution against the new parent's
-  schema, so a racing writer's added column is never rolled back.
+  link wins; the loser re-reads the NEW current snapshot, re-derives
+  its logical change on top, and retries at N+1 — serializable
+  append/delete/merge without any lock server, exactly the Delta
+  protocol shape. Every writer verb retries through ONE loop,
+  :func:`_transact` (at most ``_MAX_COMMIT_RETRIES`` = 20 claims, then
+  ``RuntimeError``); create/clone claim v0 once. Concurrent SCHEMA
+  evolutions merge: a retrying writer re-derives its evolution
+  against the new parent's schema, so a racing writer's added column
+  is never rolled back.
 - **Snapshot isolation + time travel.** Readers resolve one committed
   version's file list and read exactly it; concurrent commits never
   move a running query's snapshot. Old versions stay readable until
@@ -106,7 +109,8 @@ import os
 import shutil
 import time
 import uuid
-from functools import lru_cache as _lru_cache
+from dataclasses import dataclass, field
+from functools import cached_property, lru_cache as _lru_cache
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -948,29 +952,41 @@ def _try_commit(root: str, version: int, manifest: dict) -> bool:
     return True
 
 
+@dataclass
+class _Commit:
+    """What one commit publishes on top of its parent snapshot: the
+    files it removes, the files it adds with their footer stats, a new
+    schema json (None inherits the parent's), extra manifest fields,
+    and the deletion vectors that CHANGED — ``dv_rows`` as new
+    cumulative {rel -> row indexes} (written as one sidecar right
+    before the claim), ``dv_set`` as existing sidecar refs (restore
+    re-pins its target's). Removing a file implicitly drops its DV."""
+
+    removed: list[str] = field(default_factory=list)
+    added: list[str] = field(default_factory=list)
+    add_stats: dict = field(default_factory=dict)
+    schema_json: str | None = None
+    extra: dict = field(default_factory=dict)
+    dv_rows: dict[str, list[int]] = field(default_factory=dict)
+    dv_set: dict[str, str] = field(default_factory=dict)
+
+
 def _commit_version(
-    root: str,
-    v_new: int,
-    op: str,
-    psnap: dict,
-    removed: list[str],
-    added: list[str],
-    add_stats: dict,
-    txn: dict,
-    schema_json: str | None,
-    extra: dict,
-    dv_set: dict[str, str] | None = None,
+    root: str, v_new: int, op: str, psnap: dict, txn: dict, c: _Commit
 ) -> bool:
-    """Build + atomically publish version ``v_new``. Writes a DELTA
-    manifest (add/remove actions, O(touched files) bytes) unless this
-    version is a checkpoint (v % checkpoint_every == 0) or the op
-    resets the file list wholesale (create/restore/optimize) — then a
-    FULL manifest with the complete file list, stats, and schema, so
-    snapshot resolution never replays more than one checkpoint
-    interval. ``dv_set`` maps file rel -> deletion-vector sidecar ref
-    for files whose DV CHANGED at this commit (cumulative index
-    lists); removing a file implicitly drops its DV."""
-    rm = set(removed)
+    """Build + atomically publish version ``v_new`` = ``psnap`` + ``c``.
+    Writes a DELTA manifest (add/remove actions, O(touched files)
+    bytes) unless this version is a checkpoint (v % checkpoint_every
+    == 0) or the op resets the file list wholesale
+    (create/restore/optimize) — then a FULL manifest with the complete
+    file list, stats, and schema, so snapshot resolution never replays
+    more than one checkpoint interval."""
+    added, add_stats, extra = c.added, c.add_stats, c.extra
+    dv_set = dict(c.dv_set)
+    if c.dv_rows:
+        ref = _write_dv(root, c.dv_rows)
+        dv_set.update({rel: ref for rel in c.dv_rows})
+    rm = set(c.removed)
     keep = [f for f in psnap["files"] if f not in rm]
     files = keep + added
     ce = (
@@ -1019,8 +1035,8 @@ def _commit_version(
             m["constraints"] = dict(parent_cons)
     if not m.get("constraints"):
         m.pop("constraints", None)
-    if schema_json is not None:
-        m["schema"] = schema_json
+    if c.schema_json is not None:
+        m["schema"] = c.schema_json
     full = (
         op in ("create", "restore", "optimize", "overwrite")
         or v_new % ce == 0
@@ -1037,7 +1053,7 @@ def _commit_version(
             for r, ref in psnap.get("dv", {}).items()
             if r in keep_set
         }
-        dv_full.update(dv_set or {})
+        dv_full.update(dv_set)
         dv_full = {r: ref for r, ref in dv_full.items() if r in file_set}
         if len(files) >= SIDECAR_MIN_FILES:
             # the dv map spills WITH the file list (one row each):
@@ -1102,18 +1118,19 @@ def create_table(
         0,
         "create",
         {"files": [], "stats": {}},
-        [],
-        files,
-        _collect_stats(root, files),
         {},
-        # schema travels in the log so a zero-file snapshot (empty
-        # create, or a delete that empties the table) reads back as a
-        # TYPED empty frame with no parquet footer to lean on
-        df.schema.json(),
-        {
-            **({"partition_by": list(partition_by)} if partition_by else {}),
-            "checkpoint_every": int(checkpoint_every),
-        },
+        _Commit(
+            added=files,
+            add_stats=_collect_stats(root, files),
+            # schema travels in the log so a zero-file snapshot (empty
+            # create, or a delete that empties the table) reads back as
+            # a TYPED empty frame with no parquet footer to lean on
+            schema_json=df.schema.json(),
+            extra={
+                **({"partition_by": list(partition_by)} if partition_by else {}),
+                "checkpoint_every": int(checkpoint_every),
+            },
+        ),
     )
     if not ok:
         raise FileExistsError(f"concurrent create at {root}")
@@ -1457,11 +1474,122 @@ def scan_table(
     )
 
 
+_MAX_COMMIT_RETRIES = 20
+
+
+class _Parent:
+    """The parent snapshot one commit attempt builds on, resolved once
+    per attempt by :func:`_transact`: its version, file list/stats/dv
+    map, txn map, CHECK constraints and column mapping. The schema and
+    the loaded deletion vectors resolve on first use (a table written
+    before schemas were logged reads its schema from parquet footers)."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark, self.root = spark, root
+        self.v = current_version(root)
+        m = _read_manifest(root, self.v)
+        self.txn = dict(m.get("txn", {}))
+        self.constraints = dict(m.get("constraints", {}))
+        self.snap = snapshot_info(root, self.v)
+        self.mapping = _mapping_at(root, self.v)
+
+    @cached_property
+    def schema(self):
+        return _snapshot_schema(self.spark, self.root, self.v)
+
+    @cached_property
+    def dv_idx(self) -> dict[str, list[int]]:
+        return _dv_indexes(self.root, self.snap.get("dv", {}))
+
+    def live(self, rels: list[str]) -> DataFrame:
+        """``rels``' live rows tagged with file basename and position."""
+        return _live_with_pos(
+            self.spark, self.root, rels, self.schema, self.dv_idx, self.mapping
+        )
+
+
+def _transact(
+    spark: SparkSession,
+    root: str,
+    op: str,
+    body,
+    app_id: str | None = None,
+    txn_version: int | None = None,
+    on_redelivery=None,
+) -> int:
+    """The one optimistic-commit loop every writer runs (create/clone
+    are single-shot). Each attempt resolves the parent, drops an
+    already-committed (app_id, txn_version) redelivery (calling
+    ``on_redelivery``, returning the parent version), stamps the txn
+    map, and asks ``body(parent)`` for the :class:`_Commit` to publish
+    — None means nothing to commit and returns the parent version. A
+    lost claim re-runs the body against the new parent (state it keeps
+    across attempts, like staged files, lives in its closure), up to
+    ``_MAX_COMMIT_RETRIES`` attempts. Returns the committed version."""
+    for _ in range(_MAX_COMMIT_RETRIES):
+        p = _Parent(spark, root)
+        if app_id is not None:
+            if p.txn.get(app_id, -1) >= txn_version:
+                if on_redelivery is not None:
+                    on_redelivery()
+                return p.v  # duplicate delivery: already committed
+            p.txn[app_id] = txn_version
+        c = body(p)
+        if c is None:
+            return p.v
+        if _commit_version(root, p.v + 1, op, p.snap, p.txn, c):
+            return p.v + 1
+    raise RuntimeError(
+        f"{op} lost {_MAX_COMMIT_RETRIES} commit races at {root}"
+    )
+
+
+def _dv_probe(
+    p: _Parent, rels: list[str], match
+) -> tuple[dict[str, list[int]], int]:
+    """Merge-on-read victims: ONE probe job over ``rels``' live rows
+    narrowed by ``match`` (a DataFrame -> DataFrame filter), positions
+    grouped per file back to the driver — O(matched rows), the
+    point-delete budget. Returns each touched file's new CUMULATIVE
+    deletion vector and the matched row count."""
+    if not rels:
+        return {}, 0
+    hits = (
+        match(p.live(rels))
+        .groupBy(_DV_FILE)
+        .agg(F.collect_list(_DV_POS).alias("_pos"))
+        .collect()
+    )
+    by_base = {os.path.basename(rel): rel for rel in rels}
+    dv_rows: dict[str, list[int]] = {}
+    n_rows = 0
+    for r in hits:
+        rel = by_base[r[_DV_FILE]]
+        dv_rows[rel] = sorted(
+            {*p.dv_idx.get(rel, []), *(int(i) for i in r["_pos"])}
+        )
+        n_rows += len(r["_pos"])
+    return dv_rows, n_rows
+
+
+def _victim_files(p: _Parent, rels: list[str], match) -> list[str]:
+    """Copy-on-write victims: the files among ``rels`` holding a live
+    row that ``match`` keeps — ONE probe job, distinct file basenames
+    back to the driver (bounded metadata, like the manifest lists). A
+    row already hidden by a deletion vector never marks its file."""
+    if not rels:
+        return []
+    hit = {
+        r[_DV_FILE]
+        for r in match(p.live(rels)).select(_DV_FILE).distinct().collect()
+    }
+    return [rel for rel in rels if os.path.basename(rel) in hit]
+
+
 def append(
     spark: SparkSession,
     root: str,
     df: DataFrame,
-    max_retries: int = 20,
     app_id: str | None = None,
     txn_version: int | None = None,
     merge_schema: bool = False,
@@ -1507,15 +1635,13 @@ def append(
     stage_mp: dict | None = None
     write_mp: dict | None = None
     map_extra: dict = {}
-    for _ in range(max_retries):
-        v = current_version(root)
-        parent_m = _read_manifest(root, v)
-        txn = dict(parent_m.get("txn", {}))
-        if app_id is not None and txn.get(app_id, -1) >= txn_version:
-            return v  # duplicate delivery: already committed
-        cons = dict(parent_m.get("constraints", {}))
-        tbl_schema = _snapshot_schema(spark, root, v)
-        if files is not None and _mapping_at(root, v) != stage_mp:
+
+    def body(p: _Parent) -> _Commit:
+        nonlocal files, staged_schema, new_stats, checked_cons
+        nonlocal stage_mp, write_mp, map_extra
+        cons = p.constraints
+        tbl_schema = p.schema
+        if files is not None and p.mapping != stage_mp:
             # a rename/drop landed after we staged physical files: the
             # staged names may no longer be this table's truth — a
             # genuine metadata conflict, surfaced loudly (the Delta
@@ -1536,7 +1662,7 @@ def append(
             aligned = _align_df(df, target)
             _validate_constraints(aligned, cons)
             checked_cons = set(cons)
-            stage_mp = _mapping_at(root, v)
+            stage_mp = p.mapping
             write_mp = stage_mp
             if evolved is not None and stage_mp is not None:
                 # mapping active: a NEW column takes a FRESH physical
@@ -1557,14 +1683,14 @@ def append(
                         _phys_name(stage_mp, g.name) for g in tbl_schema.fields
                     }
                     for n in new_fields:
-                        p = (
+                        p_name = (
                             n
                             if n not in used
                             else f"{n}_{uuid.uuid4().hex[:8]}"
                         )
-                        if p != n:
-                            mp2["map"][n] = p
-                        used.add(p)
+                        if p_name != n:
+                            mp2["map"][n] = p_name
+                        used.add(p_name)
                     map_extra = {"column_mapping": mp2}
                     write_mp = mp2
             staged_df = (
@@ -1581,7 +1707,7 @@ def append(
             # a concurrent add_constraint landed between our staging
             # and this retry: validate the already-staged batch
             # against the NEW rules (O(batch) re-read)
-            fresh = {n: p for n, p in cons.items() if n not in checked_cons}
+            fresh = {n: q for n, q in cons.items() if n not in checked_cons}
             _validate_constraints(
                 _read_files(spark, root, files, staged_schema, write_mp),
                 fresh,
@@ -1595,23 +1721,14 @@ def append(
             # schema with NULLs/up-casts; a genuinely incompatible
             # concurrent type change raises here, a true conflict)
             evolved = _merge_struct(tbl_schema, staged_schema, True)
-        if app_id is not None:
-            txn[app_id] = txn_version
-        ok = _commit_version(
-            root,
-            v + 1,
-            "append",
-            snapshot_info(root, v),
-            [],
-            files,
-            new_stats,
-            txn,
-            evolved.json() if evolved is not None else None,
-            dict(map_extra),
+        return _Commit(
+            added=files,
+            add_stats=new_stats,
+            schema_json=evolved.json() if evolved is not None else None,
+            extra=dict(map_extra),
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"append lost {max_retries} commit races at {root}")
+
+    return _transact(spark, root, "append", body, app_id, txn_version)
 
 
 def merge(
@@ -1619,7 +1736,6 @@ def merge(
     root: str,
     updates: DataFrame,
     key_cols: tuple[str, ...],
-    max_retries: int = 20,
     app_id: str | None = None,
     txn_version: int | None = None,
     mode: str = "cow",
@@ -1654,9 +1770,8 @@ def merge(
     the Iceberg manifest-pruning mechanism. At 100 TB a CDC batch's
     merge cost is bounded by the keys' file spread, never the table.
 
-    Concurrency + idempotence match the other verbs: optimistic retry
-    re-probes against the new snapshot (a merge is a logical op, so
-    survivors must re-stage; the staged UPDATE files are
+    A retry re-probes against the new snapshot (a merge is a logical
+    op, so survivors must re-stage; the staged UPDATE files are
     version-independent and reused), and the (app_id, txn_version)
     map makes a redelivered CDC batch a committed no-op — the
     exactly-once contract a replayed upsert stream needs.
@@ -1675,23 +1790,19 @@ def merge(
     aligned: DataFrame | None = None
     checked_cons: set[str] = set()
     stage_mp: dict | None = None
-    for _ in range(max_retries):
-        v = current_version(root)
-        parent_m = _read_manifest(root, v)
-        txn = dict(parent_m.get("txn", {}))
-        if app_id is not None and txn.get(app_id, -1) >= txn_version:
-            return v  # duplicate delivery: already committed
-        cons = dict(parent_m.get("constraints", {}))
-        psnap = snapshot_info(root, v)
-        if upd_files is not None and _mapping_at(root, v) != stage_mp:
+
+    def body(p: _Parent) -> _Commit:
+        nonlocal upd_files, aligned, checked_cons, stage_mp
+        cons = p.constraints
+        psnap = p.snap
+        if upd_files is not None and p.mapping != stage_mp:
             raise RuntimeError(
                 "concurrent column rename/drop during merge at "
                 f"{root}: retry the operation"
             )
         if upd_files is None:
-            tbl_schema = _snapshot_schema(spark, root, v)
-            _merge_struct(tbl_schema, updates.schema, False)  # validate
-            aligned = _align_df(updates, tbl_schema)
+            _merge_struct(p.schema, updates.schema, False)  # validate
+            aligned = _align_df(updates, p.schema)
             aligned = aligned.localCheckpoint()  # stable across re-probes
             _validate_constraints(aligned, cons)
             checked_cons = set(cons)
@@ -1711,14 +1822,14 @@ def merge(
                     f"{n_rows} rows, {n_keys} keys"
                 )
             pby = _table_config(root)["partition_by"]
-            stage_mp = _mapping_at(root, v)
+            stage_mp = p.mapping
             upd_files = _stage_files(
                 spark, root, aligned, partition_by=pby, mapping=stage_mp
             )
         elif set(cons) - checked_cons:
             # concurrent add_constraint during our retry window:
             # validate the (checkpointed) batch against the new rules
-            fresh = {n: p for n, p in cons.items() if n not in checked_cons}
+            fresh = {n: q for n, q in cons.items() if n not in checked_cons}
             _validate_constraints(aligned, fresh)
             checked_cons |= set(fresh)
         keys = aligned.select(*key_cols).distinct()
@@ -1746,61 +1857,20 @@ def merge(
                 ]
             else:
                 candidates = []  # empty batch: nothing can match
-        # one probe job over the candidates: which files contain a
-        # matched key? (file names only cross the driver — bounded
-        # metadata, like delete_where's manifest lists). AQE
-        # broadcasts the key side when small.
-        victims: list[str] = []
-        dv_idx = _dv_indexes(root, psnap.get("dv", {}))
+        # AQE broadcasts the key side of the probe join when small
         if mode == "dv":
             # merge-on-read: matched LIVE rows become deletion-vector
-            # entries (one probe job, grouped positions back to the
-            # driver — O(matched rows), the CDC-batch budget) and the
-            # update batch appends; nothing is rewritten.
-            dv_new: dict[str, list[int]] = {}
-            n_hit = 0
-            if candidates:
-                hits = (
-                    _live_with_pos(
-                        spark,
-                        root,
-                        candidates,
-                        _snapshot_schema(spark, root, v),
-                        dv_idx,
-                        stage_mp,
-                    )
-                    .join(keys, list(key_cols), "left_semi")
-                    .groupBy(_DV_FILE)
-                    .agg(F.collect_list(_DV_POS).alias("_pos"))
-                    .collect()
-                )
-                by_base = {
-                    os.path.basename(rel): rel for rel in candidates
-                }
-                for r in hits:
-                    rel = by_base[r[_DV_FILE]]
-                    merged = set(dv_idx.get(rel, [])) | {
-                        int(p) for p in r["_pos"]
-                    }
-                    n_hit += len(r["_pos"])
-                    dv_new[rel] = sorted(merged)
-            dv_set: dict[str, str] = {}
-            if dv_new:
-                ref = _write_dv(root, dv_new)
-                dv_set = {rel: ref for rel in dv_new}
-            if app_id is not None:
-                txn[app_id] = txn_version
-            ok = _commit_version(
-                root,
-                v + 1,
-                "merge",
-                psnap,
-                [],
-                list(upd_files),
-                _collect_stats(root, upd_files),
-                txn,
-                None,
-                {
+            # entries and the update batch appends; nothing is
+            # rewritten.
+            dv_rows, n_hit = _dv_probe(
+                p,
+                candidates,
+                lambda d: d.join(keys, list(key_cols), "left_semi"),
+            )
+            return _Commit(
+                added=list(upd_files),
+                add_stats=_collect_stats(root, upd_files),
+                extra={
                     "key_cols": list(key_cols),
                     "mode": "dv",
                     "dv_rows": n_hit,
@@ -1808,43 +1878,22 @@ def merge(
                     "carried": len(psnap["files"]),
                     "probed": len(candidates),
                 },
-                dv_set=dv_set,
+                dv_rows=dv_rows,
             )
-            if ok:
-                return v + 1
-            continue
-        if candidates:
-            # LIVE rows only: a row already hidden by a deletion
-            # vector can neither mark its file a victim nor resurrect
-            # through the rewrite below
-            snap = _live_with_pos(
-                spark,
-                root,
-                candidates,
-                _snapshot_schema(spark, root, v),
-                dv_idx,
-                stage_mp,
-            )
-            hit_names = {
-                r[_DV_FILE]
-                for r in (
-                    snap.select(*key_cols, _DV_FILE)
-                    .join(keys, list(key_cols), "left_semi")
-                    .select(_DV_FILE)
-                    .distinct()
-                    .collect()
-                )
-            }
-            victims = [
-                rel
-                for rel in candidates
-                if os.path.basename(rel) in hit_names
-            ]
+        # LIVE rows only: a row already hidden by a deletion vector
+        # can neither mark its file a victim nor resurrect through the
+        # rewrite below
+        victims = _victim_files(
+            p,
+            candidates,
+            lambda d: d.select(*key_cols, _DV_FILE).join(
+                keys, list(key_cols), "left_semi"
+            ),
+        )
         staged = list(upd_files)
         if victims:
-            schema = _snapshot_schema(spark, root, v)
             survivors = _read_files_dv(
-                spark, root, victims, schema, dv_idx, stage_mp
+                spark, root, victims, p.schema, p.dv_idx, stage_mp
             ).join(keys, list(key_cols), "left_anti")
             staged += _stage_files(
                 spark,
@@ -1853,35 +1902,25 @@ def merge(
                 partition_by=_table_config(root)["partition_by"],
                 mapping=stage_mp,
             )
-        if app_id is not None:
-            txn[app_id] = txn_version
-        ok = _commit_version(
-            root,
-            v + 1,
-            "merge",
-            psnap,
-            victims,
-            staged,
-            _collect_stats(root, staged),
-            txn,
-            None,
-            {
+        return _Commit(
+            removed=victims,
+            added=staged,
+            add_stats=_collect_stats(root, staged),
+            extra={
                 "key_cols": list(key_cols),
                 "rewrote": len(victims),
                 "carried": len(psnap["files"]) - len(victims),
                 "probed": len(candidates),
             },
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"merge lost {max_retries} commit races at {root}")
+
+    return _transact(spark, root, "merge", body, app_id, txn_version)
 
 
 def delete_where(
     spark: SparkSession,
     root: str,
     predicate: str,
-    max_retries: int = 20,
     mode: str = "cow",
 ) -> int:
     """Delete rows matching the SQL predicate; returns the committed
@@ -1897,9 +1936,8 @@ def delete_where(
     file: at 10^5 files the per-file form pays 10^5 job-scheduling
     round-trips before any IO. The rewrite is one combined job too; a
     file whose rows are ALL victims simply contributes nothing to the
-    rewrite (dropped, not rewritten). On a commit conflict the delete
-    re-probes against the new snapshot — a delete is a logical
-    operation, so it must re-stage, unlike append.
+    rewrite (dropped, not rewritten). A delete is a logical operation,
+    so a retry re-probes against the new snapshot, unlike append.
 
     ``mode="dv"`` (merge-on-read, round-12 — the Delta/Iceberg
     deletion-vector design): NO data file is rewritten at all. The
@@ -1921,114 +1959,48 @@ def delete_where(
     effect (the replacement holds only live survivor rows)."""
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
-    for _ in range(max_retries):
-        v = current_version(root)
-        psnap = snapshot_info(root, v)
-        schema = _snapshot_schema(spark, root, v)
-        dv_idx = _dv_indexes(root, psnap.get("dv", {}))
-        mp = _mapping_at(root, v)
+
+    def body(p: _Parent) -> _Commit:
+        files = p.snap["files"]
         if mode == "dv":
-            dv_new: dict[str, list[int]] = {}
-            n_rows = 0
-            if psnap["files"]:
-                # ONE probe job: live rows matching the predicate ->
-                # per-file position lists (collected grouped; driver
-                # memory is O(victim rows), the point-delete budget)
-                hits = (
-                    _live_with_pos(
-                        spark, root, psnap["files"], schema, dv_idx, mp
-                    )
-                    .where(predicate)
-                    .groupBy(_DV_FILE)
-                    .agg(F.collect_list(_DV_POS).alias("_pos"))
-                    .collect()
-                )
-                by_base = {
-                    os.path.basename(rel): rel for rel in psnap["files"]
-                }
-                for r in hits:
-                    rel = by_base[r[_DV_FILE]]
-                    merged = set(dv_idx.get(rel, [])) | {
-                        int(p) for p in r["_pos"]
-                    }
-                    n_rows += len(r["_pos"])
-                    dv_new[rel] = sorted(merged)
-            dv_set: dict[str, str] = {}
-            if dv_new:
-                ref = _write_dv(root, dv_new)
-                dv_set = {rel: ref for rel in dv_new}
-            ok = _commit_version(
-                root,
-                v + 1,
-                "delete",
-                psnap,
-                [],
-                [],
-                {},
-                dict(_read_manifest(root, v).get("txn", {})),
-                None,
-                {
+            dv_rows, n_rows = _dv_probe(
+                p, files, lambda d: d.where(predicate)
+            )
+            return _Commit(
+                extra={
                     "predicate": predicate,
                     "mode": "dv",
                     "dv_rows": n_rows,
                     "rewrote": 0,
-                    "carried": len(psnap["files"]),
+                    "carried": len(files),
                 },
-                dv_set=dv_set,
+                dv_rows=dv_rows,
             )
-            if ok:
-                return v + 1
-            continue
-        rewrite: list[str] = []
-        if psnap["files"]:
-            hit_names = {
-                r[_DV_FILE]
-                for r in (
-                    _live_with_pos(
-                        spark, root, psnap["files"], schema, dv_idx, mp
-                    )
-                    .where(predicate)
-                    .select(_DV_FILE)
-                    .distinct()
-                    .collect()
-                )
-            }
-            rewrite = [
-                rel
-                for rel in psnap["files"]
-                if os.path.basename(rel) in hit_names
-            ]
+        rewrite = _victim_files(p, files, lambda d: d.where(predicate))
         staged: list[str] = []
         if rewrite:
             survivors = _read_files_dv(
-                spark, root, rewrite, schema, dv_idx, mp
+                spark, root, rewrite, p.schema, p.dv_idx, p.mapping
             ).where(f"NOT ({predicate})")
             staged = _stage_files(
                 spark,
                 root,
                 survivors,
                 partition_by=_table_config(root)["partition_by"],
-                mapping=mp,
+                mapping=p.mapping,
             )
-        ok = _commit_version(
-            root,
-            v + 1,
-            "delete",
-            psnap,
-            rewrite,
-            staged,
-            _collect_stats(root, staged),
-            dict(_read_manifest(root, v).get("txn", {})),
-            None,
-            {
+        return _Commit(
+            removed=rewrite,
+            added=staged,
+            add_stats=_collect_stats(root, staged),
+            extra={
                 "predicate": predicate,
                 "rewrote": len(rewrite),
-                "carried": len(psnap["files"]) - len(rewrite),
+                "carried": len(files) - len(rewrite),
             },
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"delete lost {max_retries} commit races at {root}")
+
+    return _transact(spark, root, "delete", body)
 
 
 def update_where(
@@ -2036,7 +2008,6 @@ def update_where(
     root: str,
     set: dict[str, str],
     predicate: str,
-    max_retries: int = 20,
     mode: str = "cow",
 ) -> int:
     """UPDATE: rewrite the rows matching the SQL ``predicate`` with
@@ -2076,16 +2047,14 @@ def update_where(
     row with carried rows cancelling exactly (cow) or never read (dv).
     Updating a PARTITION column is allowed and moves the row's file to
     the new hive directory (both modes re-stage through the table's
-    ``partition_by``). On a commit conflict the update re-probes and
-    re-stages against the new snapshot — a logical op, like DELETE."""
+    ``partition_by``)."""
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
     if not set:
         raise ValueError("update_where needs at least one SET column")
-    for _ in range(max_retries):
-        v = current_version(root)
-        psnap = snapshot_info(root, v)
-        schema = _snapshot_schema(spark, root, v)
+
+    def body(p: _Parent) -> _Commit:
+        schema = p.schema
         known = schema.fieldNames()
         missing = [c for c in set if c not in known]
         if missing:
@@ -2093,9 +2062,7 @@ def update_where(
                 f"SET targets {missing} are not columns of {root} "
                 f"(schema: {known})"
             )
-        cons = dict(_read_manifest(root, v).get("constraints", {}))
-        dv_idx = _dv_indexes(root, psnap.get("dv", {}))
-        mp = _mapping_at(root, v)
+        files = p.snap["files"]
         pby = _table_config(root)["partition_by"]
         cond = F.expr(predicate)
 
@@ -2117,130 +2084,69 @@ def update_where(
                 for f in schema.fields
             ]
 
+        staged: list[str] = []
         if mode == "dv":
-            dv_new: dict[str, list[int]] = {}
-            n_rows = 0
-            staged: list[str] = []
-            if psnap["files"]:
-                matched = _live_with_pos(
-                    spark, root, psnap["files"], schema, dv_idx, mp
-                ).where(predicate)
-                # probe job: matched positions -> cumulative vectors
-                hits = (
-                    matched.groupBy(_DV_FILE)
-                    .agg(F.collect_list(_DV_POS).alias("_pos"))
-                    .collect()
+            dv_rows, n_rows = _dv_probe(
+                p, files, lambda d: d.where(predicate)
+            )
+            if dv_rows:
+                # second pass over the same IMMUTABLE files: the
+                # updated images of exactly the dv'd rows, staged as
+                # ordinary new files
+                updated = (
+                    p.live(files).where(predicate).select(*_updated_cols(False))
                 )
-                by_base = {
-                    os.path.basename(rel): rel for rel in psnap["files"]
-                }
-                for r in hits:
-                    rel = by_base[r[_DV_FILE]]
-                    # set literal, not the builtin: the SET-clause
-                    # parameter shadows `set` in this scope
-                    merged = {
-                        *dv_idx.get(rel, []),
-                        *(int(p) for p in r["_pos"]),
-                    }
-                    n_rows += len(r["_pos"])
-                    dv_new[rel] = sorted(merged)
-                if dv_new:
-                    # second pass over the same IMMUTABLE files: the
-                    # updated images of exactly the dv'd rows, staged
-                    # as ordinary new files
-                    updated = matched.select(*_updated_cols(False))
-                    _merge_struct(schema, updated.schema, False)
-                    updated = _align_df(updated, schema)
-                    _validate_constraints(updated, cons)
-                    staged = _stage_files(
-                        spark, root, updated, partition_by=pby, mapping=mp
-                    )
-            dv_set: dict[str, str] = {}
-            if dv_new:
-                ref = _write_dv(root, dv_new)
-                dv_set = {rel: ref for rel in dv_new}
-            ok = _commit_version(
-                root,
-                v + 1,
-                "update",
-                psnap,
-                [],
-                staged,
-                _collect_stats(root, staged),
-                dict(_read_manifest(root, v).get("txn", {})),
-                None,
-                {
+                _merge_struct(schema, updated.schema, False)
+                updated = _align_df(updated, schema)
+                _validate_constraints(updated, p.constraints)
+                staged = _stage_files(
+                    spark, root, updated, partition_by=pby, mapping=p.mapping
+                )
+            return _Commit(
+                added=staged,
+                add_stats=_collect_stats(root, staged),
+                extra={
                     "predicate": predicate,
                     "set": dict(set),
                     "mode": "dv",
                     "dv_rows": n_rows,
                     "rewrote": 0,
-                    "carried": len(psnap["files"]),
+                    "carried": len(files),
                 },
-                dv_set=dv_set,
+                dv_rows=dv_rows,
             )
-            if ok:
-                return v + 1
-            continue
-        rewrite: list[str] = []
-        if psnap["files"]:
-            hit_names = {
-                r[_DV_FILE]
-                for r in (
-                    _live_with_pos(
-                        spark, root, psnap["files"], schema, dv_idx, mp
-                    )
-                    .where(predicate)
-                    .select(_DV_FILE)
-                    .distinct()
-                    .collect()
-                )
-            }
-            rewrite = [
-                rel
-                for rel in psnap["files"]
-                if os.path.basename(rel) in hit_names
-            ]
-        staged = []
+        rewrite = _victim_files(p, files, lambda d: d.where(predicate))
         if rewrite:
             rewritten = _read_files_dv(
-                spark, root, rewrite, schema, dv_idx, mp
+                spark, root, rewrite, schema, p.dv_idx, p.mapping
             ).select(*_updated_cols(True))
             _merge_struct(schema, rewritten.schema, False)
             rewritten = _align_df(rewritten, schema)
             # carried rows already satisfied the constraints at v, so
             # a violation here can only come from an updated row
-            _validate_constraints(rewritten, cons)
+            _validate_constraints(rewritten, p.constraints)
             staged = _stage_files(
-                spark, root, rewritten, partition_by=pby, mapping=mp
+                spark, root, rewritten, partition_by=pby, mapping=p.mapping
             )
-        ok = _commit_version(
-            root,
-            v + 1,
-            "update",
-            psnap,
-            rewrite,
-            staged,
-            _collect_stats(root, staged),
-            dict(_read_manifest(root, v).get("txn", {})),
-            None,
-            {
+        return _Commit(
+            removed=rewrite,
+            added=staged,
+            add_stats=_collect_stats(root, staged),
+            extra={
                 "predicate": predicate,
                 "set": dict(set),
                 "rewrote": len(rewrite),
-                "carried": len(psnap["files"]) - len(rewrite),
+                "carried": len(files) - len(rewrite),
             },
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"update lost {max_retries} commit races at {root}")
+
+    return _transact(spark, root, "update", body)
 
 
 def optimize(
     spark: SparkSession,
     root: str,
     target_file_bytes: int = 128 << 20,
-    max_retries: int = 20,
     cluster_by: tuple[str, ...] = (),
     zorder_by: tuple[str, ...] = (),
     zorder_bits: int = 12,
@@ -2301,9 +2207,9 @@ def optimize(
     version without committing."""
     if cluster_by and zorder_by:
         raise ValueError("pass cluster_by or zorder_by, not both")
-    for _ in range(max_retries):
-        v = current_version(root)
-        psnap = snapshot_info(root, v)
+
+    def body(p: _Parent) -> _Commit | None:
+        psnap = p.snap
         subset = list(psnap["files"])
         if partitions:
             subset = _prune_partitions(root, subset, partitions)
@@ -2320,7 +2226,7 @@ def optimize(
             and not zorder_by
             and not psnap.get("dv", {}).get(subset[0])
         ):
-            return v  # nothing to do: no commit, no churn
+            return None  # nothing to do: no commit, no churn
         total = sum(
             os.path.getsize(os.path.join(root, f)) for f in subset
         )
@@ -2330,14 +2236,13 @@ def optimize(
         # removed files take their vectors with them, and the new
         # snapshot is vector-free (the Delta REORG PURGE behavior,
         # folded into compaction)
-        mp = _mapping_at(root, v)
         df = _read_files_dv(
             spark,
             root,
             subset,
-            _snapshot_schema(spark, root, v),
+            p.schema,
             _dv_indexes(root, psnap.get("dv", {}), subset),
-            mp,
+            p.mapping,
         )
         pby = _table_config(root)["partition_by"]
         if zorder_by:
@@ -2382,18 +2287,14 @@ def optimize(
                 )
             else:
                 out = df.repartition(n)
-        files = _stage_files(spark, root, out, partition_by=pby, mapping=mp)
-        ok = _commit_version(
-            root,
-            v + 1,
-            "optimize",
-            psnap,
-            subset,
-            files,
-            _collect_stats(root, files),
-            dict(_read_manifest(root, v).get("txn", {})),
-            None,
-            {
+        files = _stage_files(
+            spark, root, out, partition_by=pby, mapping=p.mapping
+        )
+        return _Commit(
+            removed=subset,
+            added=files,
+            add_stats=_collect_stats(root, files),
+            extra={
                 "compacted_from": len(subset),
                 **(
                     {"carried": len(psnap["files"]) - len(subset)}
@@ -2404,9 +2305,8 @@ def optimize(
                 **({"zorder_by": list(zorder_by)} if zorder_by else {}),
             },
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"optimize lost {max_retries} commit races at {root}")
+
+    return _transact(spark, root, "optimize", body)
 
 
 def read_changes(
@@ -2613,7 +2513,9 @@ def read_changes(
             # n is the multiplicity of a fully-identical row in one
             # commit's touched files, bounded by rows-per-file in
             # practice (exact dups of a whole row are what upstream
-            # dedup removes).
+            # dedup removes). Condition: n stays within Spark's array
+            # cap (2^31 - 16 elements); a commit touching more copies
+            # of one identical row fails this read loudly.
             cols = [f.name for f in out_schema.fields]
             _w, _n = "__cdf_w__", "__cdf_n__"
             net = (
@@ -2692,7 +2594,6 @@ def add_constraint(
     root: str,
     name: str,
     predicate: str,
-    max_retries: int = 20,
 ) -> int:
     """ALTER TABLE ADD CONSTRAINT (the Delta CHECK-constraint verb):
     validates the predicate against the ENTIRE current snapshot (one
@@ -2702,56 +2603,37 @@ def add_constraint(
     (O(batch), one agg job) and fails loudly on violation. Committed
     as its own version, so constraints are time-travel-consistent:
     a snapshot read shows the rules that were in force."""
-    for _ in range(max_retries):
-        v = current_version(root)
-        cons = dict(_read_manifest(root, v).get("constraints", {}))
-        if name in cons:
+
+    def body(p: _Parent) -> _Commit:
+        if name in p.constraints:
             raise ValueError(f"constraint {name!r} already exists")
-        _validate_constraints(read_table(spark, root, version=v), {name: predicate})
-        cons[name] = predicate
-        ok = _commit_version(
-            root,
-            v + 1,
-            "add_constraint",
-            snapshot_info(root, v),
-            [],
-            [],
-            {},
-            dict(_read_manifest(root, v).get("txn", {})),
-            None,
-            {"constraints": cons, "constraint": name, "predicate": predicate},
+        _validate_constraints(
+            read_table(spark, root, version=p.v), {name: predicate}
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"add_constraint lost {max_retries} races at {root}")
+        return _Commit(
+            extra={
+                "constraints": {**p.constraints, name: predicate},
+                "constraint": name,
+                "predicate": predicate,
+            }
+        )
+
+    return _transact(spark, root, "add_constraint", body)
 
 
-def drop_constraint(
-    spark: SparkSession, root: str, name: str, max_retries: int = 20
-) -> int:
+def drop_constraint(spark: SparkSession, root: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT: removes the named check as a
     commit (unknown names are a loud error)."""
-    for _ in range(max_retries):
-        v = current_version(root)
-        cons = dict(_read_manifest(root, v).get("constraints", {}))
-        if name not in cons:
+
+    def body(p: _Parent) -> _Commit:
+        if name not in p.constraints:
             raise ValueError(f"no such constraint {name!r}")
-        cons.pop(name)
-        ok = _commit_version(
-            root,
-            v + 1,
-            "drop_constraint",
-            snapshot_info(root, v),
-            [],
-            [],
-            {},
-            dict(_read_manifest(root, v).get("txn", {})),
-            None,
-            {"constraints": cons, "constraint": name},
+        p.constraints.pop(name)
+        return _Commit(
+            extra={"constraints": p.constraints, "constraint": name}
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"drop_constraint lost {max_retries} races at {root}")
+
+    return _transact(spark, root, "drop_constraint", body)
 
 
 def rename_column(
@@ -2759,7 +2641,6 @@ def rename_column(
     root: str,
     old: str,
     new: str,
-    max_retries: int = 20,
 ) -> int:
     """ALTER TABLE RENAME COLUMN without rewriting a single data file
     (round-11 verdict item 4 — Delta's column-mapping design): the
@@ -2775,10 +2656,9 @@ def rename_column(
 
     if new.startswith("#"):
         raise ValueError("column names starting with '#' are reserved")
-    for _ in range(max_retries):
-        v = current_version(root)
-        schema = _snapshot_schema(spark, root, v)
-        names = [f.name for f in schema.fields]
+
+    def body(p: _Parent) -> _Commit:
+        names = [f.name for f in p.schema.fields]
         if old not in names:
             raise ValueError(f"no such column {old!r} (have {names})")
         if new in names:
@@ -2788,35 +2668,23 @@ def rename_column(
                 f"{old!r} is a partition column: its name is part of "
                 "every data path and cannot be remapped"
             )
-        mp = _mapping_at(root, v) or {"map": {}, "retired": []}
-        phys = mp["map"].pop(old, old)
-        mp["map"][new] = phys
+        mp = p.mapping or {"map": {}, "retired": []}
+        mp["map"][new] = mp["map"].pop(old, old)
         new_schema = StructType(
             [
                 StructField(new, f.dataType, True) if f.name == old else f
-                for f in schema.fields
+                for f in p.schema.fields
             ]
         )
-        ok = _commit_version(
-            root,
-            v + 1,
-            "rename_column",
-            snapshot_info(root, v),
-            [],
-            [],
-            {},
-            dict(_read_manifest(root, v).get("txn", {})),
-            new_schema.json(),
-            {"column_mapping": mp, "renamed": [old, new]},
+        return _Commit(
+            schema_json=new_schema.json(),
+            extra={"column_mapping": mp, "renamed": [old, new]},
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"rename_column lost {max_retries} races at {root}")
+
+    return _transact(spark, root, "rename_column", body)
 
 
-def drop_column(
-    spark: SparkSession, root: str, name: str, max_retries: int = 20
-) -> int:
+def drop_column(spark: SparkSession, root: str, name: str) -> int:
     """ALTER TABLE DROP COLUMN without rewriting a single data file:
     the commit removes the field from the logical schema and RETIRES
     its physical name in the mapping — the bytes stay in the files,
@@ -2825,40 +2693,29 @@ def drop_column(
     can never resurrect: old rows read NULL under the re-added
     column, exactly Delta's column-mapping drop semantics. Time
     travel below this commit still shows (and reads) the column."""
-    for _ in range(max_retries):
-        v = current_version(root)
-        schema = _snapshot_schema(spark, root, v)
-        names = [f.name for f in schema.fields]
+    from pyspark.sql.types import StructType
+
+    def body(p: _Parent) -> _Commit:
+        names = [f.name for f in p.schema.fields]
         if name not in names:
             raise ValueError(f"no such column {name!r} (have {names})")
         if len(names) == 1:
             raise ValueError("cannot drop a table's only column")
         if name in _table_config(root)["partition_by"]:
             raise ValueError(f"{name!r} is a partition column")
-        mp = _mapping_at(root, v) or {"map": {}, "retired": []}
+        mp = p.mapping or {"map": {}, "retired": []}
         phys = mp["map"].pop(name, name)
         if phys not in mp["retired"]:
             mp["retired"].append(phys)
-        from pyspark.sql.types import StructType
-
         new_schema = StructType(
-            [f for f in schema.fields if f.name != name]
+            [f for f in p.schema.fields if f.name != name]
         )
-        ok = _commit_version(
-            root,
-            v + 1,
-            "drop_column",
-            snapshot_info(root, v),
-            [],
-            [],
-            {},
-            dict(_read_manifest(root, v).get("txn", {})),
-            new_schema.json(),
-            {"column_mapping": mp, "dropped_column": name},
+        return _Commit(
+            schema_json=new_schema.json(),
+            extra={"column_mapping": mp, "dropped_column": name},
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"drop_column lost {max_retries} races at {root}")
+
+    return _transact(spark, root, "drop_column", body)
 
 
 def clone_table(
@@ -2919,53 +2776,48 @@ def clone_table(
             # clone's file names (the shared inode still holds the
             # DELETED rows' bytes; the vector is what hides them)
             new_dv_rows[new_rel] = src_dv[rel]
-    dv_set: dict[str, str] = {}
-    if new_dv_rows:
-        ref = _write_dv(dst_root, new_dv_rows)
-        dv_set = {rel: ref for rel in new_dv_rows}
     ok = _commit_version(
         dst_root,
         0,
         "create",
         {"files": [], "stats": {}},
-        [],
-        new_rels,
-        new_stats,
         {},
-        _schema_json_at(src_root, v),
-        {
-            "cloned_from": os.path.abspath(src_root),
-            "cloned_version": v,
-            # the snapshot's CHECK constraints travel with the clone
-            **(
-                {"constraints": dict(_read_manifest(src_root, v).get("constraints", {}))}
-                if _read_manifest(src_root, v).get("constraints")
-                else {}
-            ),
-            **(
-                {"partition_by": cfg["partition_by"]}
-                if cfg["partition_by"]
-                else {}
-            ),
-            "checkpoint_every": cfg["checkpoint_every"],
-            # an active column mapping travels with the clone (the
-            # linked files carry the PHYSICAL names it decodes)
-            **(
-                {"column_mapping": src_mp}
-                if (src_mp := _mapping_at(src_root, v)) is not None
-                else {}
-            ),
-        },
-        dv_set=dv_set,
+        _Commit(
+            added=new_rels,
+            add_stats=new_stats,
+            schema_json=_schema_json_at(src_root, v),
+            dv_rows=new_dv_rows,
+            extra={
+                "cloned_from": os.path.abspath(src_root),
+                "cloned_version": v,
+                # the snapshot's CHECK constraints travel with the clone
+                **(
+                    {"constraints": dict(src_cons)}
+                    if (src_cons := _read_manifest(src_root, v).get("constraints"))
+                    else {}
+                ),
+                **(
+                    {"partition_by": cfg["partition_by"]}
+                    if cfg["partition_by"]
+                    else {}
+                ),
+                "checkpoint_every": cfg["checkpoint_every"],
+                # an active column mapping travels with the clone (the
+                # linked files carry the PHYSICAL names it decodes)
+                **(
+                    {"column_mapping": src_mp}
+                    if (src_mp := _mapping_at(src_root, v)) is not None
+                    else {}
+                ),
+            },
+        ),
     )
     if not ok:
         raise FileExistsError(f"concurrent create at {dst_root}")
     return 0
 
 
-def restore(
-    spark: SparkSession, root: str, version: int, max_retries: int = 20
-) -> int:
+def restore(spark: SparkSession, root: str, version: int) -> int:
     """RESTORE (the Delta verb): roll the table back to an earlier
     snapshot AS A NEW COMMIT — the new manifest references version N's
     exact file list (and its schema binding), so nothing is copied,
@@ -2987,41 +2839,31 @@ def restore(
             f"were vacuumed (first: {missing[0]})"
         )
     schema_json = _schema_json_at(root, version)
-    for _ in range(max_retries):
-        v = current_version(root)
-        psnap = snapshot_info(root, v)
-        ok = _commit_version(
-            root,
-            v + 1,
-            "restore",
-            psnap,
-            list(psnap["files"]),
-            list(target["files"]),
-            dict(target["stats"]),
-            dict(_read_manifest(root, v).get("txn", {})),
+    mp_t = _mapping_at(root, version)
+
+    def body(p: _Parent) -> _Commit:
+        return _Commit(
+            removed=list(p.snap["files"]),
+            added=list(target["files"]),
+            add_stats=dict(target["stats"]),
             # re-pin the restored snapshot's schema: a later evolution
             # must not leak into the rolled-back view
-            schema_json,
-            {
+            schema_json=schema_json,
+            extra={
                 "restored_from": version,
                 # re-pin the target's column mapping (possibly none —
                 # a rename/drop being rolled back); _commit_version
                 # skips parent-inheritance for restore so an absent
                 # key here means mapping-inactive, as at the target
-                **(
-                    {"column_mapping": mp_t}
-                    if (mp_t := _mapping_at(root, version)) is not None
-                    else {}
-                ),
+                **({"column_mapping": mp_t} if mp_t is not None else {}),
             },
             # the target's deletion vectors travel with its files
             # (sidecars are immutable and never deleted while any
             # manifest references them, so refs are reusable)
             dv_set=dict(target.get("dv", {})),
         )
-        if ok:
-            return v + 1
-    raise RuntimeError(f"restore lost {max_retries} commit races at {root}")
+
+    return _transact(spark, root, "restore", body)
 
 
 def _history_rows(root: str) -> list[tuple]:

@@ -1054,51 +1054,49 @@ def _commit_rels(
     )
     incoming = StructType.fromJson(json.loads(schema_json))
     stats = txlog._collect_stats(root, rels)
-    for _ in range(20):
-        v = txlog.current_version(root)
-        txn = dict(txlog._read_manifest(root, v).get("txn", {}))
-        if app_id is not None and txn.get(app_id, -1) >= txn_version:
-            for rel in rels:  # duplicate delivery: drop our files
-                try:
-                    os.remove(os.path.join(root, rel))
-                except OSError:
-                    pass
-            return
-        tbl_schema = txlog._snapshot_schema(spark, root, v)
+
+    def body(p):
         # no silent evolution through the SQL path: incompatible
         # frames fail here, after staging, before any commit
-        txlog._merge_struct(tbl_schema, incoming, False)
-        if txlog._mapping_at(root, v) != (
+        txlog._merge_struct(p.schema, incoming, False)
+        if p.mapping != (
             mapping if (mapping["map"] or mapping["retired"]) else None
         ):
             raise RuntimeError(
                 "concurrent column rename/drop during the write: "
                 "retry the operation"
             )
-        cons = dict(txlog._read_manifest(root, v).get("constraints", {}))
-        if cons and rels:
+        if p.constraints and rels:
             txlog._validate_constraints(
                 txlog._read_files(spark, root, rels, incoming, mapping),
-                cons,
+                p.constraints,
             )
-        if app_id is not None:
-            txn[app_id] = txn_version
-        psnap = txlog.snapshot_info(root, v)
-        ok = txlog._commit_version(
-            root,
-            v + 1,
-            "overwrite" if overwrite else "append",
-            psnap,
-            list(psnap["files"]) if overwrite else [],
-            rels,
-            stats,
-            txn,
-            None,
-            {"writer": "datasource"},
+        return txlog._Commit(
+            removed=list(p.snap["files"]) if overwrite else [],
+            added=rels,
+            add_stats=stats,
+            extra={"writer": "datasource"},
         )
-        if ok:
-            return
-    raise RuntimeError(f"write lost 20 commit races at {root}")
+
+    txlog._transact(
+        spark,
+        root,
+        "overwrite" if overwrite else "append",
+        body,
+        app_id,
+        txn_version,
+        # a redelivered batch: drop our duplicate files
+        on_redelivery=lambda: _remove_rels(root, rels),
+    )
+
+
+def _remove_rels(root: str, rels: list[str]) -> None:
+    """Best-effort delete of staged, never-committed data files."""
+    for rel in rels:
+        try:
+            os.remove(os.path.join(root, rel))
+        except OSError:
+            pass
 
 
 class TxLogWriter(DataSourceArrowWriter):
@@ -1153,12 +1151,7 @@ class TxLogWriter(DataSourceArrowWriter):
         )
 
     def abort(self, messages) -> None:
-        for m in messages:
-            for rel in m.rels if m else []:
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
+        _remove_rels(self.root, [rel for m in messages if m for rel in m.rels])
 
 
 class TxLogStreamWriter(DataSourceStreamArrowWriter):
@@ -1212,12 +1205,7 @@ class TxLogStreamWriter(DataSourceStreamArrowWriter):
         )
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            for rel in m.rels if m else []:
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
+        _remove_rels(self.root, [rel for m in messages if m for rel in m.rels])
 
 
 class TxLogDataSource(DataSource):

@@ -46,12 +46,8 @@ def test_vacuum_never_races_inflight_staged_files(spark, tmp_path):
         1,
         "append",
         txlog.snapshot_info(root, 0),
-        [],
-        staged,
-        txlog._collect_stats(root, staged),
         {},
-        None,
-        {},
+        txlog._Commit(added=staged, add_stats=txlog._collect_stats(root, staged)),
     )
     assert ok
     assert txlog.read_table(spark, root).count() == 150
@@ -123,12 +119,8 @@ def test_vacuum_tocttou_recheck_covers_racing_commit(
                 1,
                 "append",
                 txlog.snapshot_info(r, 0),
-                [],
-                staged,
                 {},
-                {},
-                None,
-                {},
+                txlog._Commit(added=staged),
             )
             assert ok
         return real_cv(r)
