@@ -115,6 +115,13 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .logstore import LogStore, PosixLogStore
 
@@ -447,8 +454,6 @@ def _snapshot_schema(spark: SparkSession, root: str, version: int):
     created by a pre-schema writer never recorded one: fall back to
     the snapshot's own merged parquet footers (such a table has a
     single uniform schema by that writer's enforcement contract)."""
-    from pyspark.sql.types import StructType
-
     sj = _schema_json_at(root, version)
     if sj is not None:
         return StructType.fromJson(json.loads(sj))
@@ -554,8 +559,6 @@ def _phys_schema(schema, mapping: dict | None):
     """The PHYSICAL StructType a logical snapshot schema binds to in
     the parquet files (identical when no mapping is active — the
     zero-overhead common case)."""
-    from pyspark.sql.types import StructField, StructType
-
     if mapping is None or not mapping["map"]:
         return schema
     return StructType(
@@ -744,8 +747,6 @@ def _merge_struct(table_schema, incoming_schema, merge_schema: bool):
     error. Either way, a cast that would lose data is rejected — the
     ANSI store-assignment rule: incompatible writes FAIL, never
     corrupt."""
-    from pyspark.sql.types import StructField, StructType
-
     inc = {f.name: f for f in incoming_schema.fields}
     want = [f.name for f in table_schema.fields]
     extra = [f for f in incoming_schema.fields if f.name not in set(want)]
@@ -1244,19 +1245,57 @@ def _dv_indexes(
     return out
 
 
+def _arrow_table(schema, columns: list[list] | None = None):
+    """An Arrow table of ``schema``, one value list per field (None:
+    zero rows)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    if columns is None:
+        return arrow.empty_table()
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+
+
+def _arrow_df(
+    spark: SparkSession, schema, columns: list[list] | None = None
+) -> DataFrame:
+    """A driver-side frame built from :func:`_arrow_table`. Spark plans
+    an Arrow-built frame as a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default) and as a JVM-decoded Arrow RDD above it; neither runs a
+    Python worker. A list-built frame is a pickled-RDD scan (``Scan
+    ExistingRDD``) that launches a Python-worker job on every
+    execution."""
+    return spark.createDataFrame(_arrow_table(schema, columns), schema)
+
+
+_DV_PAIRS_SCHEMA = StructType(
+    [
+        StructField(_DV_FILE, StringType(), False),
+        StructField(_DV_POS, LongType(), False),
+    ]
+)
+
+
 def _dv_pairs_df(spark: SparkSession, dv_idx: dict[str, list[int]]):
     """The (file basename, row index) victim pairs as a small
     DataFrame for the broadcast anti-join. Size is O(deleted rows
     under DV) — bounded by construction: merge-on-read serves point
-    deletes, and OPTIMIZE materializes vectors back to zero."""
-    pairs = [
-        (os.path.basename(rel), int(i))
-        for rel, idx in dv_idx.items()
-        for i in idx
-    ]
-    return spark.createDataFrame(
-        pairs, f"{_DV_FILE} string, {_DV_POS} long"
-    )
+    deletes, and OPTIMIZE materializes vectors back to zero. Built
+    from Arrow, so it plans as a ``LocalRelation`` (see
+    :func:`_arrow_df`): every DV read, probe and change-feed diff
+    joins against it, and none of them pays a Python-worker job for
+    it."""
+    files: list[str] = []
+    pos: list[int] = []
+    for rel, idx in dv_idx.items():
+        files += [os.path.basename(rel)] * len(idx)
+        pos += idx
+    return _arrow_df(spark, _DV_PAIRS_SCHEMA, [files, pos])
 
 
 def _live_with_pos(
@@ -1790,9 +1829,10 @@ def merge(
     aligned: DataFrame | None = None
     checked_cons: set[str] = set()
     stage_mp: dict | None = None
+    key_range: tuple | None = None  # single-key merges: batch (min, max)
 
     def body(p: _Parent) -> _Commit:
-        nonlocal upd_files, aligned, checked_cons, stage_mp
+        nonlocal upd_files, aligned, checked_cons, stage_mp, key_range
         cons = p.constraints
         psnap = p.snap
         if upd_files is not None and p.mapping != stage_mp:
@@ -1806,21 +1846,35 @@ def merge(
             aligned = aligned.localCheckpoint()  # stable across re-probes
             _validate_constraints(aligned, cons)
             checked_cons = set(cons)
+            # the whole preflight is ONE aggregate job over the
+            # checkpointed batch: NULL keys, rows, distinct keys (SQL
+            # count(DISTINCT) skips NULL keys, so it is read only once
+            # the NULL check has passed) and the single-key range
             null_pred = " OR ".join(f"`{k}` IS NULL" for k in key_cols)
-            n_null = aligned.where(null_pred).count()
-            if n_null:
+            stats = [
+                F.count_if(F.expr(null_pred)).alias("n_null"),
+                F.count(F.lit(1)).alias("n_rows"),
+                F.count_distinct(*key_cols).alias("n_keys"),
+            ]
+            if len(key_cols) == 1:
+                stats += [
+                    F.min(key_cols[0]).alias("lo"),
+                    F.max(key_cols[0]).alias("hi"),
+                ]
+            pre = aligned.agg(*stats).first()
+            if pre["n_null"]:
                 raise ValueError(
-                    f"merge updates carry {n_null} NULL-key rows on "
-                    f"{key_cols}: a NULL key never joins, so the row "
+                    f"merge updates carry {pre['n_null']} NULL-key rows "
+                    f"on {key_cols}: a NULL key never joins, so the row "
                     "could never be updated or replaced later"
                 )
-            n_rows = aligned.count()
-            n_keys = aligned.select(*key_cols).distinct().count()
-            if n_rows != n_keys:
+            if pre["n_rows"] != pre["n_keys"]:
                 raise ValueError(
                     f"merge updates are not key-unique on {key_cols}: "
-                    f"{n_rows} rows, {n_keys} keys"
+                    f"{pre['n_rows']} rows, {pre['n_keys']} keys"
                 )
+            if len(key_cols) == 1:
+                key_range = (pre["lo"], pre["hi"])
             pby = _table_config(root)["partition_by"]
             stage_mp = p.mapping
             upd_files = _stage_files(
@@ -1840,15 +1894,11 @@ def merge(
         # writers, unstatted types): pruning is an optimization, never
         # a correctness decision.
         candidates = list(psnap["files"])
-        if len(key_cols) == 1 and candidates:
-            key = key_cols[0]
-            row = aligned.agg(
-                F.min(key).alias("lo"), F.max(key).alias("hi")
-            ).first()
-            lo, hi = row["lo"], row["hi"]
+        if key_range is not None and candidates:
+            lo, hi = key_range
             if lo is not None:
                 stats = psnap["stats"]
-                pkey = _phys_name(stage_mp, key)  # stats key physical
+                pkey = _phys_name(stage_mp, key_cols[0])  # stats key physical
                 candidates = [
                     rel
                     for rel in candidates
@@ -2343,8 +2393,6 @@ def read_changes(
     partition's changes). Exact because a file holds exactly one
     partition tuple, so pruning can never split a delete/insert pair
     whose rows the residual filter would keep."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     cur = current_version(root)
     to_v = cur if to_version is None else to_version
     if from_version < -1 or to_v > cur:
@@ -2542,7 +2590,7 @@ def read_changes(
         )
         out = chg if out is None else out.unionByName(chg)
     if out is None:
-        return spark.createDataFrame([], cdf_schema)
+        return _arrow_df(spark, cdf_schema)
     return out
 
 
@@ -2652,8 +2700,6 @@ def rename_column(
     still shows the old name; the change feed treats the rename as
     identity (matching by physical name). Partition columns cannot be
     renamed — their name is baked into every hive directory path."""
-    from pyspark.sql.types import StructField, StructType
-
     if new.startswith("#"):
         raise ValueError("column names starting with '#' are reserved")
 
@@ -2693,8 +2739,6 @@ def drop_column(spark: SparkSession, root: str, name: str) -> int:
     can never resurrect: old rows read NULL under the re-added
     column, exactly Delta's column-mapping drop semantics. Time
     travel below this commit still shows (and reads) the column."""
-    from pyspark.sql.types import StructType
-
     def body(p: _Parent) -> _Commit:
         names = [f.name for f in p.schema.fields]
         if name not in names:
@@ -2866,10 +2910,22 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
     return _transact(spark, root, "restore", body)
 
 
-def _history_rows(root: str) -> list[tuple]:
-    """One (version, op, parent, n_files, detail_json, ts) tuple per
-    committed version, straight from the manifests — pure file I/O,
-    shared by :func:`history` and the DataSource history read
+_HISTORY_SCHEMA = StructType(
+    [
+        StructField("version", LongType(), False),
+        StructField("op", StringType(), False),
+        StructField("parent", LongType(), True),
+        StructField("n_files", LongType(), False),
+        StructField("detail", StringType(), True),
+        StructField("ts", DoubleType(), False),
+    ]
+)
+
+
+def _history_columns(root: str) -> list[list]:
+    """The :data:`_HISTORY_SCHEMA` columns, one row per committed
+    version, straight from the manifests — pure file I/O, shared by
+    :func:`history` and the DataSource history read
     (``spark.read.format("txlog").option("history", "true")``)."""
     rows = []
     for v in range(current_version(root) + 1):
@@ -2912,33 +2968,14 @@ def _history_rows(root: str) -> list[tuple]:
                 float(m["ts"]),
             )
         )
-    return rows
+    return [list(c) for c in zip(*rows)] or [[] for _ in _HISTORY_SCHEMA]
 
 
 def history(spark: SparkSession, root: str) -> DataFrame:
     """DESCRIBE HISTORY: one row per committed version — operation,
     parent, file count, op-specific detail — straight from the
     manifests (driver-side metadata, bounded by version count)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    rows = _history_rows(root)
-    schema = StructType(
-        [
-            StructField("version", LongType(), False),
-            StructField("op", StringType(), False),
-            StructField("parent", LongType(), True),
-            StructField("n_files", LongType(), False),
-            StructField("detail", StringType(), True),
-            StructField("ts", DoubleType(), False),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    return _arrow_df(spark, _HISTORY_SCHEMA, _history_columns(root))
 
 
 def vacuum(

@@ -73,10 +73,15 @@ append feed by default, the full change feed with
 ``.option("change_feed", "true")``, steady-state batches bounded by
 ``.option("max_versions_per_trigger", N)``.
 
-One input partition per data file — the same planning unit the JVM
-path uses. Rows cross the Arrow boundary as whole RecordBatches
-(never per-row Python), but this is still the PYTHON-worker path: at
-100 TB the JVM-side :func:`txlog.read_table` remains the fast path
+The snapshot reader plans one input partition per data file (its
+files-opened counts are what pushdown pruning is measured by). The
+change-feed readers, batch and streaming, plan per file too, then pack
+those parts into byte-sized tasks the way Spark's FilePartition does
+(128 MB bins, 4 MB open cost per file, parts read in plan order), so
+a range of small commits is one Python task, not one per file. Rows
+cross the Arrow boundary as whole RecordBatches (never per-row
+Python), but this is still the PYTHON-worker path: at 100 TB the
+JVM-side :func:`txlog.read_table` remains the fast path
 (requested-schema parquet scans inside whole-stage codegen, no Python
 workers); parity of the two paths is asserted in
 tests/test_txlog_source.py. What this buys is ACCESS — any SQL-only
@@ -432,22 +437,11 @@ class TxLogHistoryReader(DataSourceReader):
         return [InputPartition(0)]
 
     def read(self, partition):
-        import pyarrow as pa
-
         from . import txlog
 
-        rows = txlog._history_rows(self.root)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([r[0] for r in rows], type=pa.int64()),
-                pa.array([r[1] for r in rows], type=pa.string()),
-                pa.array([r[2] for r in rows], type=pa.int64()),
-                pa.array([r[3] for r in rows], type=pa.int64()),
-                pa.array([r[4] for r in rows], type=pa.string()),
-                pa.array([r[5] for r in rows], type=pa.float64()),
-            ],
-            names=["version", "op", "parent", "n_files", "detail", "ts"],
-        )
+        yield from txlog._arrow_table(
+            txlog._HISTORY_SCHEMA, txlog._history_columns(self.root)
+        ).to_batches()
 
 
 # ---------------------------------------------------------------------------
@@ -643,6 +637,42 @@ def _plan_change_partitions(
     return out
 
 
+# Change-feed task sizing (Spark's FilePartition defaults): many small
+# commits share one Python task instead of paying one task start each.
+_PACK_MAX_BYTES = 128 << 20
+_PACK_OPEN_COST = 4 << 20
+
+
+def _pack_by_bytes(items: list, sizes: list[int]) -> list[list]:
+    """Split ``items`` (in order) into consecutive groups by
+    ``sizes``: a group closes when the next item would push its
+    charged bytes past ``_PACK_MAX_BYTES``; each item is charged its
+    size plus ``_PACK_OPEN_COST``. An item larger than the bound gets
+    a group of its own."""
+    packs: list[list] = []
+    load = 0
+    for item, size in zip(items, sizes):
+        if not packs or load + size > _PACK_MAX_BYTES:
+            packs.append([])
+            load = 0
+        packs[-1].append(item)
+        load += size + _PACK_OPEN_COST
+    return packs
+
+
+def _pack_change_partitions(
+    parts: list[TxCDFPartition],
+) -> list[InputPartition]:
+    """One change-feed task per pack; its ``value`` is the pack's
+    parts, read in order."""
+    return [
+        InputPartition(group)
+        for group in _pack_by_bytes(
+            parts, [os.path.getsize(p.path) for p in parts]
+        )
+    ]
+
+
 def _read_change_batches(
     partition: TxCDFPartition,
     schema_json: str,
@@ -713,29 +743,32 @@ class TxLogCDFReader(DataSourceReader):
         self.mapping = mapping or {"map": {}, "retired": []}
         self.partition_filter = partition_filter or None
 
-    def partitions(self) -> list[TxCDFPartition]:
-        return _plan_change_partitions(
-            self.root,
-            self.from_version,
-            self.to_version,
-            # schema is pinned AT to_version, so every commit in range
-            # is at or before the pin: drift inside the range is
-            # decode-safe history, exactly like time travel
-            self.to_version,
-            self.schema_json,
-            self.mapping,
-            change_feed=True,
-            partitions=self.partition_filter,
+    def partitions(self) -> list[InputPartition]:
+        return _pack_change_partitions(
+            _plan_change_partitions(
+                self.root,
+                self.from_version,
+                self.to_version,
+                # schema is pinned AT to_version, so every commit in
+                # range is at or before the pin: drift inside the range
+                # is decode-safe history, exactly like time travel
+                self.to_version,
+                self.schema_json,
+                self.mapping,
+                change_feed=True,
+                partitions=self.partition_filter,
+            )
         )
 
-    def read(self, partition: TxCDFPartition):
+    def read(self, partition: InputPartition):
         if partition is None:
             # an EMPTY feed (e.g. only optimize commits in range):
             # Spark calls read(None) when partitions() returned []
             return
-        yield from _read_change_batches(
-            partition, self.schema_json, self.mapping, True
-        )
+        for part in partition.value:
+            yield from _read_change_batches(
+                part, self.schema_json, self.mapping, True
+            )
 
 
 class TxLogStreamReader(DataSourceStreamReader):
@@ -832,21 +865,24 @@ class TxLogStreamReader(DataSourceStreamReader):
         # latestOffset); monotone by construction
         if self._last_end is None or e > self._last_end:
             self._last_end = e
-        return _plan_change_partitions(
-            self.root,
-            s,
-            e,
-            self.pinned_version,
-            self.schema_json,
-            self.mapping,
-            self.change_feed,
-            partitions=self.partition_filter,
+        return _pack_change_partitions(
+            _plan_change_partitions(
+                self.root,
+                s,
+                e,
+                self.pinned_version,
+                self.schema_json,
+                self.mapping,
+                self.change_feed,
+                partitions=self.partition_filter,
+            )
         )
 
-    def read(self, partition: TxCDFPartition):
-        yield from _read_change_batches(
-            partition, self.schema_json, self.mapping, self.change_feed
-        )
+    def read(self, partition: InputPartition):
+        for part in partition.value:
+            yield from _read_change_batches(
+                part, self.schema_json, self.mapping, self.change_feed
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -1054,6 +1090,7 @@ def _commit_rels(
     )
     incoming = StructType.fromJson(json.loads(schema_json))
     stats = txlog._collect_stats(root, rels)
+    checked: set[str] = set()  # constraints the written files passed
 
     def body(p):
         # no silent evolution through the SQL path: incompatible
@@ -1066,11 +1103,15 @@ def _commit_rels(
                 "concurrent column rename/drop during the write: "
                 "retry the operation"
             )
-        if p.constraints and rels:
+        # the files never change across attempts: a retry validates
+        # only constraints added since the last check
+        fresh = {n: q for n, q in p.constraints.items() if n not in checked}
+        if fresh and rels:
             txlog._validate_constraints(
                 txlog._read_files(spark, root, rels, incoming, mapping),
-                p.constraints,
+                fresh,
             )
+        checked.update(fresh)
         return txlog._Commit(
             removed=list(p.snap["files"]) if overwrite else [],
             added=rels,
@@ -1261,30 +1302,20 @@ class TxLogDataSource(DataSource):
 
     def schema(self):
         from pyspark.sql.types import (
-            DoubleType,
             LongType,
             StringType,
             StructField,
             StructType,
         )
 
+        from . import txlog
+
         if self._history():
-            return StructType(
-                [
-                    StructField("version", LongType(), False),
-                    StructField("op", StringType(), False),
-                    StructField("parent", LongType(), True),
-                    StructField("n_files", LongType(), False),
-                    StructField("detail", StringType(), True),
-                    StructField("ts", DoubleType(), False),
-                ]
-            )
+            return txlog._HISTORY_SCHEMA
         if self._change_feed() and self.options.get("to_version"):
             # a batch CDF read bound to an explicit upper version: the
             # feed's schema is the schema AS OF to_version, which may
             # predate the current snapshot's
-            from . import txlog
-
             root = self.options.get("path")
             # clamp so an out-of-range to_version fails in reader()
             # with the range error, not a raw manifest miss here

@@ -116,11 +116,22 @@ def test_writer_gives_up_after_retry_bound(spark, tiny, writer, monkeypatch):
         claims.append(version)
         return False
 
+    validations = []
+    validate = txlog._validate_constraints
+
+    def counted(df, cons):
+        validations.append(sorted(cons))
+        validate(df, cons)
+
     monkeypatch.setattr(txlog, "_try_commit", lose)
+    monkeypatch.setattr(txlog, "_validate_constraints", counted)
     with pytest.raises(RuntimeError, match="lost 20 commit races"):
         WRITERS[writer](spark, tiny)
     assert claims == [before + 1] * txlog._MAX_COMMIT_RETRIES
     assert txlog.current_version(tiny) == before
+    if writer == "datasource_write":
+        # the written files never change across attempts: one check
+        assert validations == [["pos"]]
 
 
 # ---------------------------------------------------------------------------
