@@ -605,7 +605,7 @@ def fuzzy_name_pairs(
     every length bucket in [len-band, len+band], side B keys on its
     exact length — because a plain |la-lb|<=band predicate would plan a
     nested-loop join over the full name-pair space (the gate in
-    test_plan_invariants forbids exactly that). ``len_band`` defaults
+    tests/oracle.py forbids exactly that). ``len_band`` defaults
     to ``max_dist``, which makes the band LOSSLESS; passing a smaller
     band is an explicit approximate-recall trade (pairs whose lengths
     differ by more than the band are silently dropped).

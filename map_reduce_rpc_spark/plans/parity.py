@@ -202,7 +202,7 @@ def udtf_first_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Arrow-batched UDTF (ArrowEvalPythonUDTF, not row-pickled
     # BatchEvalPythonUDTF) — same ~10-100x serialization win as
-    # pandas_udf vs F.udf; asserted by tests/test_plan_invariants.py.
+    # pandas_udf vs F.udf; asserted by the plan gate in tests/oracle.py.
     @udtf(returnType="pos int, word string", useArrow=True)
     class FirstTokens:
         def eval(self, text: str):

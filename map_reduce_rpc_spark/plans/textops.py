@@ -3895,7 +3895,6 @@ def stream_txlog_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import txlog_source
     from ..sources.sinks import merge_upsert_parquet
-    from ..streaming import core
     from ..tables import scratch_dir
 
     # same cached source table as the batch + cursor-driven consumers
@@ -3947,7 +3946,6 @@ def stream_txlog_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    core.record_plan("stream_txlog_cdf_source", core.plan_text(q))
     return spark.read.parquet(store).select(
         "content_hash", "keeper_id", "arrival_batch", "n_batch_copies"
     )
@@ -3977,7 +3975,6 @@ def stream_txlog_append_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources import txlog_source
-    from ..streaming import core
     from ..tables import scratch_dir
 
     # the SAME cached source table as stream_txlog_cdf_source — one
@@ -4004,7 +4001,6 @@ def stream_txlog_append_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    core.record_plan("stream_txlog_append_source", core.plan_text(q))
     return (
         spark.read.parquet(store)
         .dropDuplicates(["doc_id"])

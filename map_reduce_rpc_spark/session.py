@@ -66,3 +66,41 @@ def get_spark(app_name: str = "map_reduce_rpc_spark", cpus: str | None = None) -
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _sql_store(spark: SparkSession):
+    """Spark's record of every SQL execution, micro-batches included,
+    once the listener bus drains. Reading it runs no Spark job."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def last_execution_id(spark: SparkSession) -> int:
+    """Id of the latest SQL execution (-1 before any): a mark."""
+    store = _sql_store(spark)
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+def executions_since(spark: SparkSession, mark: int) -> list[tuple[int, str, str]]:
+    """``(id, description, physicalPlanDescription)`` of every SQL
+    execution after ``mark``, oldest first.
+
+    The store keeps only ``spark.sql.ui.retainedExecutions`` entries
+    (default 1000) and drops the earliest finished ones first, so the
+    mark is an execution id, not a count. If the mark's own execution
+    is gone the store was trimmed past it, and this raises rather than
+    return a partial list. The most executions one registry query ran
+    is 29 (``forget_audit_report`` with cold derived caches).
+    """
+    return _executions_after(_sql_store(spark), mark)
+
+
+def _executions_after(store, mark: int) -> list[tuple[int, str, str]]:
+    if mark >= 0 and store.execution(mark).isEmpty():
+        raise RuntimeError(f"SQL status store no longer holds execution {mark}: trimmed past the mark")
+    out, i = [], store.executionsCount()
+    while i > 0 and (e := store.executionsList(i - 1, 1).head()).executionId() > mark:
+        out.append((e.executionId(), e.description(), e.physicalPlanDescription()))
+        i -= 1
+    return out[::-1]

@@ -50,28 +50,6 @@ STREAM_SCHEMA_DDL = (
 
 _query_seq = itertools.count()
 
-# Executed physical plans of recently finished streaming runs, kept for
-# the plan-shape gate (streaming plans are not reachable from the
-# drained batch result). Bounded ring of (query name, plan string).
-EXECUTED_PLANS: list[tuple[str, str]] = []
-_EXECUTED_PLANS_MAX = 32
-
-
-def plan_text(q) -> str:
-    """Executed plan of a finished streaming query; empty when the
-    py4j surface drifted, which must not fail the query itself."""
-    try:
-        return q._jsq.explainInternal(True)
-    except Exception:
-        return ""
-
-
-def record_plan(name: str, text: str) -> None:
-    """Append one executed streaming plan to ``EXECUTED_PLANS``."""
-    if text:
-        EXECUTED_PLANS.append((name, text))
-        del EXECUTED_PLANS[:-_EXECUTED_PLANS_MAX]
-
 
 def _replay_dir(spark: SparkSession, sf_dir: str, name: str, chunks) -> str:
     """Cached chunk directory replaying the events table as a stream.
@@ -310,7 +288,6 @@ def run_available_now(sdf: DataFrame, spark: SparkSession, output_mode: str = "a
             .start()
         )
         q.awaitTermination()
-        record_plan(name, plan_text(q))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)

@@ -6,9 +6,10 @@ Usage: python scripts/capture_plans.py before q1 q2 ...
 
 Writes plans/<round>/<query>_<tag>.txt — the optimization round's
 plan-claim evidence (the judge diffs these against OPTIMIZATION_r<N>.md
-claims). Batch queries only; streaming plans are recorded by the
-executed-plan ring in streaming/core.py and asserted by
-tests/test_plan_invariants.py.
+claims). Batch queries only. Every plan a query executes, streaming
+micro-batches included, is readable from Spark's SQL status store
+through ``map_reduce_rpc_spark.session.executions_since``; the plan
+gate in tests/oracle.py reads it there.
 """
 
 from __future__ import annotations

@@ -5,9 +5,10 @@ it's the plan you'd want" loop.
 
 Per query: exchange count (shuffles), broadcast count, widest
 whole-stage-codegen span count, Arrow/Python nodes, and whether the
-scan carries pushed filters. Streaming queries are audited by the plan
-gate in tests/test_plan_invariants.py instead (their executed plans are
-only observable through the run harness).
+scan carries pushed filters. Streaming queries are skipped: their
+micro-batch plans are not reachable from the drained result. The plan
+gate in tests/oracle.py reads every executed plan, micro-batches
+included, from Spark's SQL status store.
 """
 
 from __future__ import annotations
@@ -58,10 +59,10 @@ def main() -> None:
             "# PLANS — physical-plan audit (generated by scripts/dump_plans.py at sf0.001)\n\n"
             "Per registered batch query: shuffle Exchange count, broadcast\n"
             "count, whole-stage-codegen span count, Arrow-batched Python\n"
-            "nodes (row-at-a-time BatchEvalPython is globally forbidden by\n"
-            "tests/test_plan_invariants.py), and whether the scan carries\n"
-            "pushed filters. Streaming queries are plan-gated at execution\n"
-            "time by the same test module.\n\n"
+            "nodes (row-at-a-time BatchEvalPython is forbidden in every SQL\n"
+            "execution a query runs by the plan gate in tests/oracle.py),\n"
+            "and whether the scan carries pushed filters. Streaming queries\n"
+            "are left out here; the same gate checks their micro-batches.\n\n"
             "| Query | Exchanges | Broadcasts | Codegen spans | Arrow-Python | PushedFilters |\n"
             "|---|---|---|---|---|---|\n"
         )

@@ -8,6 +8,16 @@ import math
 
 import pandas as pd
 
+from map_reduce_rpc_spark.session import executions_since, last_execution_id
+
+# The plan-shape gate: NO SQL execution a query runs may plan a
+# row-at-a-time Python UDF (BatchEvalPython) or an unconstrained
+# CartesianProduct, the two patterns that silently kill a 100 TB run.
+# Python is allowed only Arrow-batched (ArrowEvalPython / MapInPandas /
+# FlatMapGroupsInPandas); cross joins only as BroadcastNestedLoopJoin
+# with a broadcast side small by construction (query sets, centroids).
+FORBIDDEN = ("BatchEvalPython", "CartesianProduct")
+
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -57,3 +67,16 @@ def assert_matches(spark_df, duck_rel, float_tol: float = 1e-9) -> None:
             if la != ra:
                 diffs = [(i, a, b) for i, (a, b) in enumerate(zip(la, ra)) if a != b][:5]
                 raise AssertionError(f"{col} differs, first diffs: {diffs}")
+
+
+def assert_gated(spark, build, duck_rel) -> None:
+    """``assert_matches(build(), duck_rel)``, then gate every SQL
+    execution since the call began: intermediate actions, derived-cache
+    builds and streaming micro-batches, not just the final frame."""
+    mark = last_execution_id(spark)
+    assert_matches(build(), duck_rel)
+    ran = executions_since(spark, mark)
+    assert ran, "ran no SQL execution the gate could inspect"
+    for eid, desc, plan in ran:
+        for bad in FORBIDDEN:
+            assert bad not in plan, f"execution {eid} ({desc}) plans a {bad}:\n{plan[:2000]}"

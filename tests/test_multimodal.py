@@ -8,18 +8,7 @@ import hashlib
 import numpy as np
 import pytest
 
-import __spark_entry__ as entry_mod
 from map_reduce_rpc_spark.operators import multimodal as mm
-from tests.oracle import assert_matches
-
-ORACLE_KEYS = ["media_catalog", "media_frame_plan"]
-
-
-@pytest.mark.parametrize("name", ORACLE_KEYS)
-def test_multimodal_oracle_queries(spark, duck, sf_dir, name):
-    q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql()[name]
-    assert_matches(q(spark, sf_dir), duck.sql(sql))
 
 
 def test_media_schema(spark, sf_dir):

@@ -1,21 +1,9 @@
-"""Reference-parity queries vs the DuckDB oracle (driver's t2 replica)."""
+"""Reference-parity checks beyond the oracle compare, which
+tests/test_relational.py runs for every registered query."""
 
 from __future__ import annotations
 
-import pytest
-
 import __spark_entry__ as entry_mod
-
-from tests.oracle import assert_matches
-
-PARITY_KEYS = ["wordcount", "inverted_index", "file_counts", "file_meta_concat", "kv_pipeline"]
-
-
-@pytest.mark.parametrize("name", PARITY_KEYS)
-def test_parity_query_matches_oracle(spark, duck, sf_dir, name):
-    q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql()[name]
-    assert_matches(q(spark, sf_dir), duck.sql(sql))
 
 
 def test_entry_smoke(spark):
