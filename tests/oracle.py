@@ -5,9 +5,11 @@ before the driver does."""
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 
 import pandas as pd
 
+import __spark_entry__ as entry_mod
 from map_reduce_rpc_spark.session import executions_since, last_execution_id
 
 # The plan-shape gate: NO SQL execution a query runs may plan a
@@ -69,14 +71,60 @@ def assert_matches(spark_df, duck_rel, float_tol: float = 1e-9) -> None:
                 raise AssertionError(f"{col} differs, first diffs: {diffs}")
 
 
-def assert_gated(spark, build, duck_rel) -> None:
+@dataclass(frozen=True)
+class GatedRun:
+    """One gated run: the oracle compare's failure (None when it
+    matched), how many SQL executions ran, and one message per
+    forbidden node found in them."""
+
+    mismatch: AssertionError | None
+    executions: int
+    forbidden: tuple[str, ...]
+
+    def assert_plans_clean(self) -> None:
+        assert self.executions, "ran no SQL execution the gate could inspect"
+        assert not self.forbidden, "\n".join(self.forbidden)
+
+    def assert_ok(self) -> None:
+        if self.mismatch is not None:
+            raise self.mismatch
+        self.assert_plans_clean()
+
+
+def gated_run(spark, build, duck_rel) -> GatedRun:
     """``assert_matches(build(), duck_rel)``, then gate every SQL
     execution since the call began: intermediate actions, derived-cache
     builds and streaming micro-batches, not just the final frame."""
     mark = last_execution_id(spark)
-    assert_matches(build(), duck_rel)
+    mismatch = None
+    try:
+        assert_matches(build(), duck_rel)
+    except AssertionError as e:
+        mismatch = e
     ran = executions_since(spark, mark)
-    assert ran, "ran no SQL execution the gate could inspect"
-    for eid, desc, plan in ran:
-        for bad in FORBIDDEN:
-            assert bad not in plan, f"execution {eid} ({desc}) plans a {bad}:\n{plan[:2000]}"
+    forbidden = tuple(
+        f"execution {eid} ({desc}) plans a {bad}:\n{plan[:2000]}"
+        for eid, desc, plan in ran
+        for bad in FORBIDDEN
+        if bad in plan
+    )
+    return GatedRun(mismatch, len(ran), forbidden)
+
+
+def assert_gated(spark, build, duck_rel) -> None:
+    gated_run(spark, build, duck_rel).assert_ok()
+
+
+_REGISTRY_RUNS: dict[str, GatedRun] = {}
+
+
+def registry_run(spark, duck, sf_dir, name: str) -> GatedRun:
+    """The one gated run of registry query ``name`` per test session.
+    Several test modules report on the same query (the oracle compare,
+    the plan invariants, a family's own oracle test); they share this
+    run instead of building the query again."""
+    if name not in _REGISTRY_RUNS:
+        q = entry_mod.queries()[name]
+        sql = entry_mod.oracle_sql()[name]
+        _REGISTRY_RUNS[name] = gated_run(spark, lambda: q(spark, sf_dir), duck.sql(sql))
+    return _REGISTRY_RUNS[name]

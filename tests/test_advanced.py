@@ -7,9 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entry_mod
-
-from tests.oracle import assert_matches
+from tests.oracle import registry_run
 
 KEYS = [
     "range_join_hot_windows",
@@ -25,9 +23,7 @@ KEYS = [
 
 @pytest.mark.parametrize("name", KEYS)
 def test_advanced_query_matches_oracle(spark, duck, sf_dir, name):
-    q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql()[name]
-    assert_matches(q(spark, sf_dir), duck.sql(sql))
+    registry_run(spark, duck, sf_dir, name).assert_ok()
 
 
 def test_hypertable_rollup_conserves_totals(spark, sf_dir):
@@ -221,9 +217,7 @@ GOPHER_KEYS = ["gopher_rules", "containment_dups"]
 
 @pytest.mark.parametrize("name", GOPHER_KEYS)
 def test_round4_queries_match_oracle(spark, duck, sf_dir, name):
-    q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql()[name]
-    assert_matches(q(spark, sf_dir), duck.sql(sql))
+    registry_run(spark, duck, sf_dir, name).assert_ok()
 
 
 def test_gopher_rules_semantics(spark, tmp_path):

@@ -5,9 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as entry_mod
-
-from tests.oracle import assert_matches
+from tests.oracle import registry_run
 
 KEYS = [
     "purchase_asof_click",
@@ -41,9 +39,7 @@ def test_connected_components_known_graph(spark):
 
 @pytest.mark.parametrize("name", KEYS)
 def test_extended_query_matches_oracle(spark, duck, sf_dir, name):
-    q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql()[name]
-    assert_matches(q(spark, sf_dir), duck.sql(sql))
+    registry_run(spark, duck, sf_dir, name).assert_ok()
 
 
 def test_asof_tolerance(spark, sf_dir):

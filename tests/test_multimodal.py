@@ -9,6 +9,14 @@ import numpy as np
 import pytest
 
 from map_reduce_rpc_spark.operators import multimodal as mm
+from tests.oracle import registry_run
+
+ORACLE_KEYS = ["media_catalog", "media_frame_plan"]
+
+
+@pytest.mark.parametrize("name", ORACLE_KEYS)
+def test_multimodal_oracle_queries(spark, duck, sf_dir, name):
+    registry_run(spark, duck, sf_dir, name).assert_ok()
 
 
 def test_media_schema(spark, sf_dir):

@@ -1,9 +1,20 @@
-"""Reference-parity checks beyond the oracle compare, which
-tests/test_relational.py runs for every registered query."""
+"""Reference-parity queries vs the DuckDB oracle (driver's t2 replica),
+plan-gated like every other registered query."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entry_mod
+
+from tests.oracle import registry_run
+
+PARITY_KEYS = ["wordcount", "inverted_index", "file_counts", "file_meta_concat", "kv_pipeline"]
+
+
+@pytest.mark.parametrize("name", PARITY_KEYS)
+def test_parity_query_matches_oracle(spark, duck, sf_dir, name):
+    registry_run(spark, duck, sf_dir, name).assert_ok()
 
 
 def test_entry_smoke(spark):

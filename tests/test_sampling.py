@@ -8,16 +8,14 @@ import pytest
 import __spark_entry__ as entry_mod
 
 from map_reduce_rpc_spark.plans.sampling import PACK_BUDGET, STRATUM_CAP
-from tests.oracle import assert_matches
+from tests.oracle import registry_run
 
 KEYS = ["split_assign", "stratified_sample", "pack_sequences", "table_profile"]
 
 
 @pytest.mark.parametrize("key", KEYS)
 def test_matches_oracle(spark, duck, sf_dir, key):
-    q = entry_mod.queries()[key]
-    sql = entry_mod.oracle_sql()[key]
-    assert_matches(q(spark, sf_dir), duck.sql(sql))
+    registry_run(spark, duck, sf_dir, key).assert_ok()
 
 
 def test_split_fractions_and_stability(spark, sf_dir):

@@ -6,7 +6,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-from tests.oracle import assert_matches
+from tests.oracle import registry_run
 
 STREAM_KEYS = [
     "stream_hourly_counts",
@@ -22,9 +22,7 @@ STREAM_KEYS = [
 
 @pytest.mark.parametrize("name", STREAM_KEYS)
 def test_stream_matches_batch_oracle(spark, duck, sf_dir, name):
-    q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql()[name]
-    assert_matches(q(spark, sf_dir), duck.sql(sql))
+    registry_run(spark, duck, sf_dir, name).assert_ok()
 
 
 def test_stream_and_stateful_sessionizers_agree(spark, sf_dir):
