@@ -961,7 +961,6 @@ def forget_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_delete_parquet(
             spark, staging, victims, key_cols=("user_id",), partition_cols=("_ub",)
         )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     root = derived_cache_dir(sf_dir, "forget", ("events",), build)
     path = os.path.join(root, "events")

@@ -104,7 +104,6 @@ def _clustered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
             files=16,
             mode="overwrite",
         )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     return os.path.join(
         derived_cache_dir(sf_dir, "clustered", ("lineitem",), build), "lineitem"
@@ -176,7 +175,6 @@ def _zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
             files=16,
             mode="overwrite",
         )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     return os.path.join(
         derived_cache_dir(sf_dir, "zorder", ("lineitem",), build), "lineitem"
@@ -258,7 +256,6 @@ def _scd2_history_path(spark: SparkSession, sf_dir: str) -> str:
                 seq="o_orderkey",
                 partitions=8,
             )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     return os.path.join(
         derived_cache_dir(sf_dir, "scd2", ("orders",), build), "history"
@@ -353,7 +350,6 @@ def forget_customers_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             merge_delete_parquet(
                 spark, history, victims, ("o_custkey",), ("_kb",)
             )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     path = os.path.join(
         derived_cache_dir(sf_dir, "scd2_forget", ("orders",), build), "history"
@@ -3673,8 +3669,6 @@ def time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, root, load_table(spark, sf_dir, "orders").repartition(8)
         )
         txlog.delete_where(spark, root, TT_DELETE_PRED)
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base = derived_cache_dir(sf_dir, "txlog_orders", ("orders",), build)
     root = os.path.join(base, "orders_tx")
@@ -3753,8 +3747,6 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, root, updates, ("o_orderkey",),
             app_id="cdc", txn_version=0,
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(sf_dir, "txlog_merge_orders", ("orders",), build)
     root = os.path.join(base_dir, "orders_tx")
@@ -3818,8 +3810,6 @@ def cdf_order_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         txlog.append(spark, root, base.where("o_orderkey % 2 = 1"))
         txlog.delete_where(spark, root, TT_DELETE_PRED)
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(sf_dir, "txlog_cdf_orders", ("orders",), build)
     root = os.path.join(base_dir, "orders_tx")
@@ -3878,8 +3868,6 @@ def optimize_orders_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         txlog.create_table(spark, root, base.repartition(16))
         txlog.optimize(spark, root)
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_optimize_orders", ("orders",), build
@@ -3944,8 +3932,6 @@ def schema_evolution_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             merge_schema=True,
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_evolve_orders", ("orders",), build
@@ -4015,8 +4001,6 @@ def restore_orders_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         txlog.delete_where(spark, root, TT_DELETE_PRED)
         txlog.restore(spark, root, 0)
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_restore_orders", ("orders",), build
@@ -4076,8 +4060,6 @@ def txlog_partition_pruned_revenue(
             ),
             partition_by=("o_orderpriority",),
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_part_orders", ("orders",), build
@@ -4161,8 +4143,6 @@ def type_widening_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             merge_schema=True,
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_widen_orders", ("orders",), build
@@ -4232,8 +4212,6 @@ def txlog_checkpoint_log_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         for s in range(1, 8):
             txlog.append(spark, root, base.where(f"o_orderkey % 8 = {s}"))
         txlog.delete_where(spark, root, TT_DELETE_PRED)  # v8, delta
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_ckpt_orders", ("orders",), build
@@ -4313,8 +4291,6 @@ def txlog_clone_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         # names the clone linked from
         txlog.optimize(spark, src)
         txlog.vacuum(src, retain_versions=1)
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_clone_orders", ("orders",), build
@@ -4388,8 +4364,6 @@ def txlog_zorder_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             target_file_bytes=max(8 << 10, total // 12),
             zorder_by=("l_orderkey", "l_partkey"),
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_zorder_lineitem", ("lineitem",), build
@@ -4476,8 +4450,6 @@ def txlog_constraints_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             blocked = 0
         with open(os.path.join(tmp, "_mark"), "w") as fh:
             fh.write(str(blocked))
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_constraints_orders", ("orders",), build
@@ -4542,8 +4514,6 @@ def dv_delete_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(8),
         )
         txlog.delete_where(spark, root, TT_DELETE_PRED, mode="dv")
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_dv_orders", ("orders",), build
@@ -4610,8 +4580,6 @@ def dv_cdf_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         txlog.append(spark, root, base.where("o_orderkey % 2 = 1"))
         txlog.delete_where(spark, root, TT_DELETE_PRED, mode="dv")
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_dv_cdf_orders", ("orders",), build
@@ -4703,8 +4671,6 @@ def column_mapping_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         with open(os.path.join(tmp, "_mark"), "w") as fh:
             fh.write(str(int(inode0 == inode2)))
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_colmap_orders", ("orders",), build
@@ -4774,8 +4740,6 @@ def txlog_sql_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(8),
         )
         txlog.delete_where(spark, root, TT_DELETE_PRED, mode="dv")
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_sql_orders", ("orders",), build
@@ -4842,8 +4806,6 @@ def txlog_objectstore_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             txlog.delete_where(spark, root, TT_DELETE_PRED, mode="dv")
             txlog.optimize(spark, root)  # materializes the vectors
             txlog.vacuum(root, retain_versions=3)  # keeps v1 readable
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_objstore_orders", ("orders",), build
@@ -4917,8 +4879,6 @@ def dv_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_totalprice",
         )
         txlog.merge(spark, root, upd.unionByName(ins), ("o_orderkey",), mode="dv")
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_dv_merge_orders", ("orders",), build
@@ -5010,8 +4970,6 @@ def txlog_sql_partitioned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("append")
             .save()
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_sql_part_orders", ("orders",), build
@@ -5092,8 +5050,6 @@ def txlog_sql_overwrite_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .save()
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_sql_ovw_orders", ("orders",), build
@@ -5170,8 +5126,6 @@ def txlog_zorder_dv_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             target_file_bytes=max(8 << 10, total // 12),
             zorder_by=("l_orderkey", "l_partkey"),
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_zorder_dv_lineitem", ("lineitem",), build
@@ -5253,8 +5207,6 @@ def _build_update_chain(spark: SparkSession, sf_dir: str, tmp: str) -> None:
         "o_orderkey % 100 = 0",
         mode="dv",
     )
-    with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-        fh.write("ok")
 
 
 def txlog_update_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5374,8 +5326,6 @@ def txlog_dml_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             " FROM dml_orders_src WHERE o_orderkey % 97 = 0) "
             "ON t.o_orderkey = s.o_orderkey",
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w") as fh:
-            fh.write("ok")
 
     base_dir = derived_cache_dir(
         sf_dir, "txlog_dml_orders", ("orders",), build

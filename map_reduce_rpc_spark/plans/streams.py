@@ -228,7 +228,6 @@ def stream_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     path = derived_cache_dir(sf_dir, "sscd2", ("events",), build)
     hist_dir = os.path.join(path, "hist")
@@ -400,7 +399,6 @@ def stream_txlog_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     path = derived_cache_dir(sf_dir, "stxlog", ("events",), build)
     final = txlog.read_table(spark, os.path.join(path, "table"))

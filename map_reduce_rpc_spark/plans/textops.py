@@ -2847,7 +2847,6 @@ def _txlog_cdf_docs(spark: SparkSession, sf_dir: str) -> str:
             spark, root, docs.where("doc_id % 2 = 0").repartition(8)
         )
         txlog.append(spark, root, docs.where("doc_id % 2 = 1"))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     base = derived_cache_dir(sf_dir, "txlog_cdf_docs", ("documents",), build)
     return os.path.join(base, "docs_tx")
@@ -3083,7 +3082,6 @@ def _build_neardup_manifests(spark: SparkSession, sf_dir: str, staging: str) -> 
             partition_cols=("arrival_batch",),
         )
         idx.unpersist()
-    open(os.path.join(staging, "_SUCCESS"), "w").close()
 
 
 def _read_parquet_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
@@ -3327,7 +3325,6 @@ def forget_docs_neardup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             merge_upsert_parquet(
                 spark, docs_path, updates, ("doc",), ("arrival_batch",)
             )
-        open(os.path.join(staging, "_SUCCESS"), "w").close()
 
     root = derived_cache_dir(sf_dir, "neardup_forget", ("documents",), build)
     return _neardup_manifest_read(spark, os.path.join(root, "docs"))

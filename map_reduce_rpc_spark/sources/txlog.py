@@ -436,34 +436,26 @@ def snapshot_info(root: str, version: int) -> dict:
     return {"files": files, "stats": stats, "dv": dv}
 
 
-def _schema_json_at(root: str, version: int) -> str | None:
-    """The schema json recorded at or before ``version`` — every full
-    manifest and every evolution commit records one, so the walk is
-    bounded by the checkpoint cadence (None only for legacy
-    pre-schema tables)."""
+def _schema_json_at(root: str, version: int) -> str:
+    """The schema json recorded at or before ``version``: every full
+    manifest (v0 included) and every evolution commit records one, so
+    the walk is bounded by the checkpoint cadence. A table without one
+    is outside the format and every reader rejects it here."""
     for v in range(version, -1, -1):
         m = _read_manifest(root, v)
         if "schema" in m:
             return m["schema"]
-    return None
+    raise ValueError(
+        f"txlog table at {root} predates schema recording: no manifest "
+        f"at or before v{version} records a schema"
+    )
 
 
-def _snapshot_schema(spark: SparkSession, root: str, version: int):
+def _snapshot_schema(root: str, version: int) -> StructType:
     """The table schema AT a version — the reader's schema binding for
-    both current reads and time travel across an evolution. Tables
-    created by a pre-schema writer never recorded one: fall back to
-    the snapshot's own merged parquet footers (such a table has a
-    single uniform schema by that writer's enforcement contract)."""
-    sj = _schema_json_at(root, version)
-    if sj is not None:
-        return StructType.fromJson(json.loads(sj))
-    files = snapshot_info(root, version)["files"]
-    if not files:
-        raise FileNotFoundError(
-            f"no schema recorded at or before v{version} and the "
-            "snapshot is empty"
-        )
-    return _read_raw(spark, root, files).schema
+    both current reads and time travel across an evolution. Read from
+    the manifests alone."""
+    return StructType.fromJson(json.loads(_schema_json_at(root, version)))
 
 
 def _hive_path_value(x) -> str | None:
@@ -1066,9 +1058,7 @@ def _commit_version(
             if dv_full:
                 m["dv"] = dv_full
         if "schema" not in m:
-            sj = _schema_json_at(root, v_new - 1)
-            if sj is not None:
-                m["schema"] = sj
+            m["schema"] = _schema_json_at(root, v_new - 1)
         # an ACTIVE column mapping must appear on every full manifest
         # (bounds _mapping_at's walk); restore pins the TARGET's
         # mapping via extra instead (possibly none — a rename rolled
@@ -1139,24 +1129,21 @@ def create_table(
 
 
 def _read_raw(
-    spark: SparkSession, root: str, rels: list[str], schema=None
+    spark: SparkSession, root: str, rels: list[str], schema
 ) -> DataFrame:
     """Read an explicit file list with hive partition recovery:
     basePath anchors the partition directories so ``data/month=X/...``
     files surface their ``month`` column (a flat table is unaffected —
-    no partition dirs, no inferred columns). With ``schema`` the read
-    binds to it directly — Spark 4's parquet readers promote narrow
+    no partition dirs, no inferred columns). The read binds to
+    ``schema`` directly — Spark 4's parquet readers promote narrow
     file types to the requested wider ones (int->long, float->double,
     decimal growth) and surface typed NULLs for absent columns, and
-    no footer-merge job runs at all; without it, footers are merged
-    (legacy schema discovery only)."""
-    reader = spark.read.option("basePath", os.path.join(root, _DATA))
-    reader = (
-        reader.schema(schema)
-        if schema is not None
-        else reader.option("mergeSchema", "true")
+    no footer-merge job runs at all."""
+    return (
+        spark.read.option("basePath", os.path.join(root, _DATA))
+        .schema(schema)
+        .parquet(*[os.path.join(root, f) for f in rels])
     )
-    return reader.parquet(*[os.path.join(root, f) for f in rels])
 
 
 def _read_files(
@@ -1440,7 +1427,7 @@ def read_table(
         spark,
         root,
         rels,
-        _snapshot_schema(spark, root, v),
+        _snapshot_schema(root, v),
         dv_idx,
         _mapping_at(root, v),
     )
@@ -1506,7 +1493,7 @@ def scan_table(
             if (rng := stats.get(rel, {}).get(pcol)) is None
             or (rng[0] <= hi and rng[1] >= lo)
         ]
-    schema = _snapshot_schema(spark, root, v)
+    schema = _snapshot_schema(root, v)
     dv_idx = _dv_indexes(root, snap.get("dv", {}), pruned)
     return _read_files_dv(spark, root, pruned, schema, dv_idx, mp).where(
         (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
@@ -1518,13 +1505,13 @@ _MAX_COMMIT_RETRIES = 20
 
 class _Parent:
     """The parent snapshot one commit attempt builds on, resolved once
-    per attempt by :func:`_transact`: its version, file list/stats/dv
-    map, txn map, CHECK constraints and column mapping. The schema and
-    the loaded deletion vectors resolve on first use (a table written
-    before schemas were logged reads its schema from parquet footers)."""
+    per attempt by :func:`_transact` from the manifests alone: its
+    version, file list/stats/dv map, txn map, CHECK constraints, column
+    mapping and schema. The loaded deletion vectors resolve on first
+    use."""
 
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark, self.root = spark, root
+    def __init__(self, root: str):
+        self.root = root
         self.v = current_version(root)
         m = _read_manifest(root, self.v)
         self.txn = dict(m.get("txn", {}))
@@ -1533,22 +1520,21 @@ class _Parent:
         self.mapping = _mapping_at(root, self.v)
 
     @cached_property
-    def schema(self):
-        return _snapshot_schema(self.spark, self.root, self.v)
+    def schema(self) -> StructType:
+        return _snapshot_schema(self.root, self.v)
 
     @cached_property
     def dv_idx(self) -> dict[str, list[int]]:
         return _dv_indexes(self.root, self.snap.get("dv", {}))
 
-    def live(self, rels: list[str]) -> DataFrame:
+    def live(self, spark: SparkSession, rels: list[str]) -> DataFrame:
         """``rels``' live rows tagged with file basename and position."""
         return _live_with_pos(
-            self.spark, self.root, rels, self.schema, self.dv_idx, self.mapping
+            spark, self.root, rels, self.schema, self.dv_idx, self.mapping
         )
 
 
 def _transact(
-    spark: SparkSession,
     root: str,
     op: str,
     body,
@@ -1566,7 +1552,7 @@ def _transact(
     across attempts, like staged files, lives in its closure), up to
     ``_MAX_COMMIT_RETRIES`` attempts. Returns the committed version."""
     for _ in range(_MAX_COMMIT_RETRIES):
-        p = _Parent(spark, root)
+        p = _Parent(root)
         if app_id is not None:
             if p.txn.get(app_id, -1) >= txn_version:
                 if on_redelivery is not None:
@@ -1584,7 +1570,7 @@ def _transact(
 
 
 def _dv_probe(
-    p: _Parent, rels: list[str], match
+    spark: SparkSession, p: _Parent, rels: list[str], match
 ) -> tuple[dict[str, list[int]], int]:
     """Merge-on-read victims: ONE probe job over ``rels``' live rows
     narrowed by ``match`` (a DataFrame -> DataFrame filter), positions
@@ -1594,7 +1580,7 @@ def _dv_probe(
     if not rels:
         return {}, 0
     hits = (
-        match(p.live(rels))
+        match(p.live(spark, rels))
         .groupBy(_DV_FILE)
         .agg(F.collect_list(_DV_POS).alias("_pos"))
         .collect()
@@ -1611,17 +1597,17 @@ def _dv_probe(
     return dv_rows, n_rows
 
 
-def _victim_files(p: _Parent, rels: list[str], match) -> list[str]:
+def _victim_files(
+    spark: SparkSession, p: _Parent, rels: list[str], match
+) -> list[str]:
     """Copy-on-write victims: the files among ``rels`` holding a live
     row that ``match`` keeps — ONE probe job, distinct file basenames
     back to the driver (bounded metadata, like the manifest lists). A
     row already hidden by a deletion vector never marks its file."""
     if not rels:
         return []
-    hit = {
-        r[_DV_FILE]
-        for r in match(p.live(rels)).select(_DV_FILE).distinct().collect()
-    }
+    hits = match(p.live(spark, rels)).select(_DV_FILE).distinct().collect()
+    hit = {r[_DV_FILE] for r in hits}
     return [rel for rel in rels if os.path.basename(rel) in hit]
 
 
@@ -1767,7 +1753,7 @@ def append(
             extra=dict(map_extra),
         )
 
-    return _transact(spark, root, "append", body, app_id, txn_version)
+    return _transact(root, "append", body, app_id, txn_version)
 
 
 def merge(
@@ -1913,6 +1899,7 @@ def merge(
             # entries and the update batch appends; nothing is
             # rewritten.
             dv_rows, n_hit = _dv_probe(
+                spark,
                 p,
                 candidates,
                 lambda d: d.join(keys, list(key_cols), "left_semi"),
@@ -1934,6 +1921,7 @@ def merge(
         # can neither mark its file a victim nor resurrect through the
         # rewrite below
         victims = _victim_files(
+            spark,
             p,
             candidates,
             lambda d: d.select(*key_cols, _DV_FILE).join(
@@ -1964,7 +1952,7 @@ def merge(
             },
         )
 
-    return _transact(spark, root, "merge", body, app_id, txn_version)
+    return _transact(root, "merge", body, app_id, txn_version)
 
 
 def delete_where(
@@ -2014,7 +2002,7 @@ def delete_where(
         files = p.snap["files"]
         if mode == "dv":
             dv_rows, n_rows = _dv_probe(
-                p, files, lambda d: d.where(predicate)
+                spark, p, files, lambda d: d.where(predicate)
             )
             return _Commit(
                 extra={
@@ -2026,7 +2014,9 @@ def delete_where(
                 },
                 dv_rows=dv_rows,
             )
-        rewrite = _victim_files(p, files, lambda d: d.where(predicate))
+        rewrite = _victim_files(
+            spark, p, files, lambda d: d.where(predicate)
+        )
         staged: list[str] = []
         if rewrite:
             survivors = _read_files_dv(
@@ -2050,7 +2040,7 @@ def delete_where(
             },
         )
 
-    return _transact(spark, root, "delete", body)
+    return _transact(root, "delete", body)
 
 
 def update_where(
@@ -2137,14 +2127,16 @@ def update_where(
         staged: list[str] = []
         if mode == "dv":
             dv_rows, n_rows = _dv_probe(
-                p, files, lambda d: d.where(predicate)
+                spark, p, files, lambda d: d.where(predicate)
             )
             if dv_rows:
                 # second pass over the same IMMUTABLE files: the
                 # updated images of exactly the dv'd rows, staged as
                 # ordinary new files
                 updated = (
-                    p.live(files).where(predicate).select(*_updated_cols(False))
+                    p.live(spark, files)
+                    .where(predicate)
+                    .select(*_updated_cols(False))
                 )
                 _merge_struct(schema, updated.schema, False)
                 updated = _align_df(updated, schema)
@@ -2165,7 +2157,9 @@ def update_where(
                 },
                 dv_rows=dv_rows,
             )
-        rewrite = _victim_files(p, files, lambda d: d.where(predicate))
+        rewrite = _victim_files(
+            spark, p, files, lambda d: d.where(predicate)
+        )
         if rewrite:
             rewritten = _read_files_dv(
                 spark, root, rewrite, schema, p.dv_idx, p.mapping
@@ -2190,7 +2184,7 @@ def update_where(
             },
         )
 
-    return _transact(spark, root, "update", body)
+    return _transact(root, "update", body)
 
 
 def optimize(
@@ -2356,7 +2350,7 @@ def optimize(
             },
         )
 
-    return _transact(spark, root, "optimize", body)
+    return _transact(root, "optimize", body)
 
 
 def read_changes(
@@ -2399,7 +2393,7 @@ def read_changes(
         raise ValueError(
             f"version range ({from_version}, {to_v}] outside [-1, {cur}]"
         )
-    out_schema = _snapshot_schema(spark, root, max(to_v, 0))
+    out_schema = _snapshot_schema(root, max(to_v, 0))
     map_to = _mapping_at(root, max(to_v, 0))
     cdf_schema = StructType(
         list(out_schema.fields)
@@ -2473,8 +2467,8 @@ def read_changes(
         # cast to the declared output schema — ANSI casts, so a value
         # that genuinely cannot narrow fails loudly instead of
         # corrupting the feed.
-        sch_a = _snapshot_schema(spark, root, v)
-        sch_r = _snapshot_schema(spark, root, v - 1) if v > 0 else sch_a
+        sch_a = _snapshot_schema(root, v)
+        sch_r = _snapshot_schema(root, v - 1) if v > 0 else sch_a
         mp_a = _mapping_at(root, v)
         mp_r = _mapping_at(root, v - 1) if v > 0 else mp_a
         # each side's LIVE rows: an added file may arrive with a
@@ -2666,7 +2660,7 @@ def add_constraint(
             }
         )
 
-    return _transact(spark, root, "add_constraint", body)
+    return _transact(root, "add_constraint", body)
 
 
 def drop_constraint(spark: SparkSession, root: str, name: str) -> int:
@@ -2681,7 +2675,7 @@ def drop_constraint(spark: SparkSession, root: str, name: str) -> int:
             extra={"constraints": p.constraints, "constraint": name}
         )
 
-    return _transact(spark, root, "drop_constraint", body)
+    return _transact(root, "drop_constraint", body)
 
 
 def rename_column(
@@ -2727,7 +2721,7 @@ def rename_column(
             extra={"column_mapping": mp, "renamed": [old, new]},
         )
 
-    return _transact(spark, root, "rename_column", body)
+    return _transact(root, "rename_column", body)
 
 
 def drop_column(spark: SparkSession, root: str, name: str) -> int:
@@ -2759,7 +2753,7 @@ def drop_column(spark: SparkSession, root: str, name: str) -> int:
             extra={"column_mapping": mp, "dropped_column": name},
         )
 
-    return _transact(spark, root, "drop_column", body)
+    return _transact(root, "drop_column", body)
 
 
 def clone_table(
@@ -2907,7 +2901,7 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
             dv_set=dict(target.get("dv", {})),
         )
 
-    return _transact(spark, root, "restore", body)
+    return _transact(root, "restore", body)
 
 
 _HISTORY_SCHEMA = StructType(

@@ -29,19 +29,12 @@ round-12 ADVICE fix):
   positions);
 - hive partition columns (values parsed from the file path and cast
   to the snapshot schema's type);
-- FILE PRUNING, two forms. ``.option("partition_filter",
-  '{"month": ["2024-01"]}')`` prunes hive partitions as part of the
-  DataFrame's identity — always safe, the SQL twin of
-  ``read_table(partitions=...)``. ``.option("pushdown", "true")``
-  additionally turns WHERE clauses into planning-time file
-  elimination via Spark 4.1 ``pushFilters`` (partition path values
-  + manifest min/max stats, the ``scan_table`` prunings) — OPT-IN
-  because Spark 4.1's relation caches one partitions() result per
-  plan and can replay a filter-pruned file list into a later
-  unfiltered action on the SAME DataFrame/view (see
-  ``TxLogReader.pushFilters``); enable it for one-shot reads. Every
-  filter is always RETURNED to Spark for post-scan evaluation, so
-  pruning is pure IO elimination — never a correctness dependency.
+- FILE PRUNING: ``.option("partition_filter", '{"month": ["2024-01"]}')``
+  prunes hive partitions from the manifest's file paths as part of
+  the DataFrame's identity, the SQL twin of
+  ``read_table(partitions=...)``. WHERE clauses are evaluated by Spark
+  after the scan; the library's ``scan_table`` is the stats-pruned
+  key-range read.
 
 Other read options: ``.option("timestamp", <unix-seconds|ISO-8601>)``
 is TIMESTAMP AS OF; ``.option("history", "true")`` returns DESCRIBE
@@ -73,8 +66,7 @@ append feed by default, the full change feed with
 ``.option("change_feed", "true")``, steady-state batches bounded by
 ``.option("max_versions_per_trigger", N)``.
 
-The snapshot reader plans one input partition per data file (its
-files-opened counts are what pushdown pruning is measured by). The
+The snapshot reader plans one input partition per data file. The
 change-feed readers, batch and streaming, plan per file too, then pack
 those parts into byte-sized tasks the way Spark's FilePartition does
 (128 MB bins, 4 MB open cost per file, parts read in plan order), so
@@ -103,15 +95,7 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 
@@ -211,14 +195,7 @@ class TxLogReader(DataSourceReader):
     """Plans one partition per snapshot file of the PINNED version;
     each partition decodes its file with pyarrow, applies the deletion
     vector, aliases physical->logical, casts to the snapshot schema,
-    and fills partition/missing columns — yielding Arrow RecordBatches.
-
-    ``pushFilters`` keeps every supported top-level predicate for
-    PLANNING-TIME file elimination (hive path values for partition
-    columns, manifest min/max stats otherwise) and returns ALL filters
-    to Spark, so the post-scan evaluation stays exact no matter how
-    conservative the pruning was — the same contract the library's
-    ``scan_table`` documents."""
+    and fills partition/missing columns — yielding Arrow RecordBatches."""
 
     def __init__(
         self, options: dict, version: int, schema_json: str, mapping: dict | None
@@ -227,178 +204,21 @@ class TxLogReader(DataSourceReader):
         self.version = int(version)
         self.schema_json = schema_json
         self.mapping = mapping or {"map": {}, "retired": []}
-        self.pushed: list = []
-        # dynamic pushdown pruning is OPT-IN (see pushFilters for why)
-        self.dynamic = (
-            str(options.get("pushdown", "")).lower() == "true"
-        )
         # explicit partition pruning — part of the DataFrame's
         # identity (an option), so plan caching can never leak it
         # across queries; mirrors read_table(partitions=...)
         pf = options.get("partition_filter")
         self.partition_filter: dict = json.loads(pf) if pf else {}
 
-    def pushFilters(self, filters):
-        supported = (
-            EqualTo,
-            In,
-            GreaterThan,
-            GreaterThanOrEqual,
-            LessThan,
-            LessThanOrEqual,
-            IsNull,
-            IsNotNull,
-        )
-        # Dynamic (per-query) pruning only applies with
-        # .option("pushdown", "true"), because Spark 4.1's relation
-        # node caches ONE partitions() result in a shared slot: when
-        # the FIRST action planned on a DataFrame (or a temp view over
-        # it) carries pushed filters, its PRUNED file list is reused
-        # verbatim by later UNfiltered actions on the same plan — rows
-        # silently vanish (measured here on 4.1.2: where().count()
-        # then count() returned the pruned scan both times; returning
-        # every filter as residual or consuming them all makes no
-        # difference). Until the upstream cache keys on the pushed
-        # filter set, dynamic pruning is safe only for one-shot reads,
-        # so the caller must ask for it; the always-safe alternative
-        # is .option("partition_filter", ...), which is part of the
-        # DataFrame's identity and therefore cache-consistent.
-        # Starting fresh each call still matters — the planning worker
-        # caches this reader instance across queries of one DataFrame,
-        # so state must never ACCUMULATE across plans (partitions()
-        # consumes-and-clears for the same reason).
-        self.pushed = []
-        for f in filters:
-            if (
-                self.dynamic
-                and isinstance(f, supported)
-                and len(f.attribute) == 1
-            ):
-                self.pushed.append(f)
-            # every filter goes BACK to Spark: pruning here only
-            # eliminates IO, correctness never depends on it
-            yield f
-
-    # -- planning-time file elimination ---------------------------------
-
-    def _keep_by_partition(self, col: str, pv: dict, pushed: list) -> bool | None:
-        """None = this file has no path value for col (not a partition
-        column) — the stats path decides instead."""
-        from . import txlog
-
-        if col not in pv:
-            return None
-        raw = pv[col]  # decoded path string, None for the hive NULL
-        for f in pushed:
-            if f.attribute[0] != col:
-                continue
-            if isinstance(f, IsNull):
-                if raw is not None:
-                    return False
-                continue
-            if isinstance(f, IsNotNull):
-                if raw is None:
-                    return False
-                continue
-            if raw is None:
-                return False  # value compares never match NULL
-            vals = list(f.value) if isinstance(f, In) else [f.value]
-            try:
-                enc = {txlog._hive_path_value(v) for v in vals}
-            except ValueError:
-                continue  # unencodable value: keep the file
-            if isinstance(f, (EqualTo, In)):
-                if raw not in enc:
-                    return False
-            else:
-                # range compare: numeric when the bound is numeric,
-                # lexicographic otherwise (exact for ISO dates) — the
-                # scan_table contract
-                v = vals[0]
-                if isinstance(v, (int, float)) and not isinstance(v, bool):
-                    try:
-                        pvv: object = float(raw)
-                    except ValueError:
-                        continue
-                    bound: object = float(v)
-                else:
-                    pvv, bound = raw, txlog._hive_path_value(v)
-                if isinstance(f, GreaterThan) and not pvv > bound:
-                    return False
-                if isinstance(f, GreaterThanOrEqual) and not pvv >= bound:
-                    return False
-                if isinstance(f, LessThan) and not pvv < bound:
-                    return False
-                if isinstance(f, LessThanOrEqual) and not pvv <= bound:
-                    return False
-        return True
-
-    def _keep_by_stats(self, rel: str, stats: dict, pushed: list) -> bool:
-        """Manifest min/max pruning — conservative: missing stats,
-        non-comparable types, or any doubt keeps the file."""
-        rng_by_col = stats.get(rel) or {}
-        mp = self.mapping["map"]
-        for f in pushed:
-            if isinstance(f, (IsNull, IsNotNull)):
-                continue  # footers here record min/max only
-            col = f.attribute[0]
-            rng = rng_by_col.get(mp.get(col, col))
-            if not isinstance(rng, (list, tuple)) or len(rng) != 2:
-                continue
-            lo, hi = rng
-            vals = list(f.value) if isinstance(f, In) else [f.value]
-            ok_types = all(
-                isinstance(v, (int, float, str))
-                and not isinstance(v, bool)
-                and isinstance(lo, type(v) if isinstance(v, str) else (int, float))
-                for v in vals
-            )
-            if not ok_types or lo is None or hi is None:
-                continue
-            if isinstance(f, (EqualTo, In)):
-                if all(v < lo or v > hi for v in vals):
-                    return False
-            elif isinstance(f, GreaterThan) and not hi > vals[0]:
-                return False
-            elif isinstance(f, GreaterThanOrEqual) and not hi >= vals[0]:
-                return False
-            elif isinstance(f, LessThan) and not lo < vals[0]:
-                return False
-            elif isinstance(f, LessThanOrEqual) and not lo <= vals[0]:
-                return False
-        return True
-
     def partitions(self) -> list[TxFilePartition]:
         from . import txlog
 
-        # CONSUME the pushed filters: Spark's planning worker reuses
-        # this instance across queries on one DataFrame and only calls
-        # pushFilters when the query HAS filters — without the clear,
-        # a later unfiltered query on the same DataFrame would plan
-        # against the earlier query's pruned file list (wrong results,
-        # found live: count()-after-where() returned the pruned scan)
-        pushed, self.pushed = self.pushed, []
         snap = txlog.snapshot_info(self.root, self.version)
         rels = snap["files"]
         if self.partition_filter:
             rels = txlog._prune_partitions(
                 self.root, rels, self.partition_filter
             )
-        if pushed:
-            kept = []
-            for rel in rels:
-                pv = txlog.partition_values(rel)
-                keep = True
-                for f in pushed:
-                    kp = self._keep_by_partition(f.attribute[0], pv, pushed)
-                    if kp is False:
-                        keep = False
-                        break
-                if keep and self._keep_by_stats(
-                    rel, snap.get("stats", {}), pushed
-                ):
-                    kept.append(rel)
-            rels = kept
         dv_idx = txlog._dv_indexes(self.root, snap.get("dv", {}), rels)
         return [
             TxFilePartition(
@@ -1066,28 +886,29 @@ def _commit_rels(
     txn_version: int | None = None,
     overwrite: bool = False,
 ) -> None:
-    """Driver-side commit of already-written files through the
-    ordinary optimistic protocol: schema enforcement against the
-    then-current snapshot, CHECK validation of exactly the written
-    files, footer stats, the atomic LogStore claim — plus the
-    (app_id, txn_version) idempotence map when the caller is a
-    streaming sink (a redelivered micro-batch deletes its duplicate
-    files and commits NOTHING: exactly-once on top of Spark's
-    at-least-once redelivery). ``overwrite=True`` commits a FULL
-    'overwrite' manifest whose file list is exactly ``rels`` — every
-    prior file (and its deletion vector) drops in the same atomic
-    claim, the Delta ``mode("overwrite")`` shape; time travel to the
-    pre-overwrite versions still works until vacuum."""
+    """Commit already-written files through the ordinary optimistic
+    protocol: schema enforcement against the then-current snapshot,
+    CHECK validation of exactly the written files, footer stats, the
+    atomic LogStore claim — plus the (app_id, txn_version) idempotence
+    map when the caller is a streaming sink (a redelivered micro-batch
+    deletes its duplicate files and commits NOTHING: exactly-once on
+    top of Spark's at-least-once redelivery). ``overwrite=True``
+    commits a FULL 'overwrite' manifest whose file list is exactly
+    ``rels`` — every prior file (and its deletion vector) drops in the
+    same atomic claim, the Delta ``mode("overwrite")`` shape; time
+    travel to the pre-overwrite versions still works until vacuum.
+
+    Spark calls the writers' ``commit`` in a separate Python process
+    (the ``commit_data_source_write`` worker; the streaming sink's
+    runner likewise), with no session of the writing application.
+    Everything here but CHECK validation reads only manifests and
+    parquet footers, so a commit into an unconstrained table starts no
+    JVM."""
     from pyspark.sql import SparkSession
     from pyspark.sql.types import StructType
 
     from . import txlog
 
-    # commit() runs on a driver-side worker thread where no session
-    # is "active"; getOrCreate reuses the live context
-    spark = (
-        SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    )
     incoming = StructType.fromJson(json.loads(schema_json))
     stats = txlog._collect_stats(root, rels)
     checked: set[str] = set()  # constraints the written files passed
@@ -1107,6 +928,13 @@ def _commit_rels(
         # only constraints added since the last check
         fresh = {n: q for n, q in p.constraints.items() if n not in checked}
         if fresh and rels:
+            # the one data job of a commit: inside Spark's commit
+            # worker no session is active, so this builds a separate
+            # local Spark application at default settings (FORMAT.md)
+            spark = (
+                SparkSession.getActiveSession()
+                or SparkSession.builder.getOrCreate()
+            )
             txlog._validate_constraints(
                 txlog._read_files(spark, root, rels, incoming, mapping),
                 fresh,
@@ -1120,7 +948,6 @@ def _commit_rels(
         )
 
     txlog._transact(
-        spark,
         root,
         "overwrite" if overwrite else "append",
         body,
@@ -1147,8 +974,9 @@ class TxLogWriter(DataSourceArrowWriter):
     the table's data/ dir — one per hive partition directory it
     touches on a partitioned table — staged-then-published exactly
     like the library writers (unreferenced files are invisible; the
-    vacuum age-guard cleans up a crashed write). The driver-side
-    ``commit`` then runs the ordinary optimistic protocol: schema
+    vacuum age-guard cleans up a crashed write). ``commit`` (Spark
+    runs it in a separate Python process, see :func:`_commit_rels`)
+    then runs the ordinary optimistic protocol: schema
     enforcement against the snapshot (lossless casts only, no silent
     evolution), CHECK-constraint validation of exactly the written
     files, footer stats collection, and the atomic manifest claim via
@@ -1286,11 +1114,6 @@ class TxLogDataSource(DataSource):
             v = txlog.version_at_timestamp(root, at)
         v = int(v) if v is not None else txlog.current_version(root)
         sj = txlog._schema_json_at(root, v)
-        if sj is None:
-            raise ValueError(
-                f"txlog table at {root} predates schema recording — "
-                "read it with txlog.read_table instead"
-            )
         self._pinned = (v, sj, txlog._mapping_at(root, v))
         return self._pinned
 
@@ -1366,10 +1189,6 @@ class TxLogDataSource(DataSource):
                 # commit in range is at-or-before it (decode-safe
                 # history)
                 sj = txlog._schema_json_at(root, to_v)
-                if sj is None:
-                    raise ValueError(
-                        f"txlog table at {root} predates schema recording"
-                    )
                 mp = txlog._mapping_at(root, to_v)
             frm = int(self.options.get("from_version", -1))
             if not (-1 <= frm <= to_v):
@@ -1478,39 +1297,5 @@ class TxLogDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotently register the format with a session.
-
-    SESSION-WIDE side effect, by necessity: Python-source filter
-    pushdown is one global conf (SPARK-50993,
-    ``spark.sql.python.filterPushdown.enabled``) and a reader that
-    implements ``pushFilters`` FAILS analysis when it is off — every
-    filtered txlog read needs it true, so registering the format
-    enables it for the WHOLE session, which also lets any OTHER
-    registered Python data source's ``pushFilters`` run. A deliberate
-    caller-set ``false`` is warned about rather than flipped silently
-    (round-13 ADVICE) — but Spark's DEFAULT is also false, and an
-    unset conf reads back as its default, so the first register in a
-    session enables quietly (nothing to defer to: false can never
-    work for txlog) and only a false found AFTER we already enabled
-    it — someone flipped it back on purpose — draws the warning."""
-    key = "spark.sql.python.filterPushdown.enabled"
-    try:
-        cur = spark.conf.get(key)
-    except Exception:
-        cur = None
-    if getattr(spark, "_txlog_fp_enabled", False) and (
-        str(cur).lower() == "false"
-    ):
-        import warnings
-
-        warnings.warn(
-            "txlog_source.register() is overriding "
-            f"{key}=false: the txlog reader implements pushFilters "
-            "and fails analysis with it off. The conf is session-wide "
-            "— other Python data sources' pushFilters will now run "
-            "too.",
-            stacklevel=2,
-        )
-    spark.conf.set(key, "true")
-    spark._txlog_fp_enabled = True
+    """Idempotently register the format with a session."""
     spark.dataSource.register(TxLogDataSource)

@@ -111,7 +111,6 @@ def _replay_dir(spark: SparkSession, sf_dir: str, name: str, chunks) -> str:
         for i in range(len(parts)):
             path = os.path.join(tmp, f"chunk{i}.parquet")
             os.utime(path, (base_mtime + i, base_mtime + i))
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     return derived_cache_dir(sf_dir, name, ("events",), build)
 

@@ -198,8 +198,9 @@ def derived_cache_dir(sf_dir: str, name: str, tables: tuple[str, ...], build) ->
       instead of serving stale rows;
     - **pid build dir**: ``build(tmp)`` runs in ``<path>.build.<pid>``,
       cleared first so a leftover dir of a recycled pid cannot leak
-      into the build, and must create ``tmp`` with a ``_SUCCESS``
-      marker inside;
+      into the build. ``tmp`` does not exist when ``build`` is called
+      (Spark writers refuse an existing dir); when it returns, this
+      function writes the ``_SUCCESS`` marker the cache check reads;
     - **atomic publish**: the build dir is renamed into place, so a
       concurrent reader (bench + pytest) sees the whole artifact or
       none of it; the rename loser discards its copy and reuses the
@@ -211,6 +212,8 @@ def derived_cache_dir(sf_dir: str, name: str, tables: tuple[str, ...], build) ->
         tmp = f"{path}.build.{os.getpid()}"
         shutil.rmtree(tmp, ignore_errors=True)
         build(tmp)
+        os.makedirs(tmp, exist_ok=True)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
         try:
             os.rename(tmp, path)
         except OSError:

@@ -115,45 +115,6 @@ def test_partition_filter_option_prunes_files(spark, table):
     assert got.count() == n
 
 
-def test_pushdown_filters_prune_files(spark, table):
-    """With .option('pushdown','true'), pushed predicates eliminate
-    files at planning time: partition-column equality drops hive dirs,
-    min/max stats drop files whose range can't match — mirroring
-    tests/test_scale.py's pruning asserts with a files-opened count.
-    Results stay exact because every filter returns to Spark."""
-    from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual
-
-    from map_reduce_rpc_spark.sources.txlog_source import TxLogDataSource
-
-    ds = TxLogDataSource({"path": table, "pushdown": "true"})
-    reader = ds.reader(None)
-    n_all = len(reader.partitions())
-    # partition-column pushdown: p = 1 keeps only that hive dir
-    list(reader.pushFilters([EqualTo(("p",), 1)]))
-    n_part = len(reader.partitions())
-    assert 0 < n_part < n_all
-    # stats pushdown: id >= 200 keeps only the appended files
-    list(reader.pushFilters([GreaterThanOrEqual(("id",), 200)]))
-    n_stats = len(reader.partitions())
-    assert 0 < n_stats < n_all
-    # consumed-and-cleared: the next unfiltered plan sees every file
-    assert len(reader.partitions()) == n_all
-    # end-to-end: a one-shot pushdown read returns exact results
-    got = (
-        spark.read.format("txlog")
-        .option("path", table)
-        .option("pushdown", "true")
-        .load()
-        .where("p = 1 AND id >= 100")
-    )
-    exp = (
-        txlog.read_table(spark, table)
-        .where("p = 1 AND id >= 100")
-        .count()
-    )
-    assert got.count() == exp
-
-
 def test_evolution_nulls(spark, table):
     got = spark.read.format("txlog").option("path", table).load()
     assert got.where("tag IS NOT NULL").count() == 50
@@ -663,35 +624,94 @@ def test_partitioned_write_rejects_unencodable_values(spark, tmp_path):
     assert txlog.read_table(spark, root).count() == 4
 
 
-def test_register_warns_on_deliberate_pushdown_off(spark):
-    """register() must not SILENTLY flip a conf the user set false
-    (round-13 ADVICE): a false found AFTER register already enabled
-    it in this session — someone flipped it back on purpose — warns
-    naming the conflict, then still enables (the txlog reader's
-    pushFilters fails analysis with it off, so false can never work).
-    Spark's DEFAULT is also false, so the first register in a session
-    stays quiet: an unset conf reads back as its default and warning
-    every fresh session would be pure noise."""
-    import warnings
-
+def test_register_leaves_filter_pushdown_conf(spark, table):
+    """The txlog reader implements no ``pushFilters``: WHERE clauses
+    are evaluated by Spark after the scan, and ``partition_filter`` is
+    the pruning option. So registering the format leaves the
+    session-wide ``spark.sql.python.filterPushdown.enabled`` as the
+    caller set it, and a filtered read plans and answers with it off."""
     key = "spark.sql.python.filterPushdown.enabled"
     old = spark.conf.get(key, None)
     try:
-        txlog_source.register(spark)  # ensure session is marked enabled
         spark.conf.set(key, "false")
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            txlog_source.register(spark)
-        assert any("filterPushdown" in str(x.message) for x in w)
-        assert spark.conf.get(key) == "true"
-        # already-true: idempotent and silent
-        with warnings.catch_warnings(record=True) as w2:
-            warnings.simplefilter("always")
-            txlog_source.register(spark)
-        assert not [x for x in w2 if "filterPushdown" in str(x.message)]
+        txlog_source.register(spark)
+        assert spark.conf.get(key) == "false"
+        where = "p = 1 AND id >= 100"
+        got = spark.read.format("txlog").option("path", table).load()
+        exp = txlog.read_table(spark, table).where(where).count()
+        assert got.where(where).count() == exp > 0
     finally:
-        if old is not None:
+        if old is None:
+            spark.conf.unset(key)
+        else:
             spark.conf.set(key, old)
+
+
+def _java_pids() -> set[str]:
+    import subprocess
+
+    out = subprocess.run(
+        ["ps", "-eo", "pid,comm"], capture_output=True, text=True, check=True
+    ).stdout
+    return {ln.split()[0] for ln in out.splitlines()[1:] if ln.split()[1:] == ["java"]}
+
+
+def test_unconstrained_sql_append_starts_no_jvm(spark, plain_table):
+    """Spark runs the DataSource commit in a separate Python worker
+    that holds no session of this application, so a session built
+    there is a second local Spark JVM. A commit into an unconstrained
+    table reads manifests and footers only: it starts no java
+    process. A unique worker env entry, set before registering, gives
+    this write its own Python workers, so a worker an earlier commit
+    warmed (one that validated a CHECK holds a JVM) cannot hide a new
+    one."""
+    import uuid
+
+    env = spark.sparkContext.environment
+    env["TXLOG_TEST_WORKER_POOL"] = uuid.uuid4().hex
+    try:
+        txlog_source.register(spark)
+        before = _java_pids()
+        (
+            spark.range(100, 110)
+            .select("id", F.lit(1).alias("bucket"))
+            .write.format("txlog")
+            .option("path", plain_table)
+            .mode("append")
+            .save()
+        )
+        # an idle worker may exit meanwhile; none may start a JVM
+        assert not _java_pids() - before
+    finally:
+        del env["TXLOG_TEST_WORKER_POOL"]
+        txlog_source.register(spark)
+    assert txlog.read_table(spark, plain_table).count() == 110
+
+
+def test_schemaless_table_is_rejected_by_both_readers(spark, plain_table):
+    """FORMAT.md requires ``schema`` on every full manifest from v0 on.
+    A table without one is outside the format: the library reader and
+    the DataSource raise the same error, and neither merges parquet
+    footers to guess a schema (no Spark job runs)."""
+    import json
+
+    path = txlog._manifest_path(plain_table, 0)
+    with open(path) as fh:
+        m = json.load(fh)
+    del m["schema"]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    sc = spark.sparkContext
+    sc.setJobGroup("txlog_schemaless", "reads that must run no job")
+    try:
+        with pytest.raises(ValueError, match="predates schema recording"):
+            txlog.read_table(spark, plain_table)
+        with pytest.raises(Exception, match="predates schema recording"):
+            spark.read.format("txlog").option("path", plain_table).load()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("txlog_schemaless") == []
 
 
 def test_change_feed_reader_pins_resolved_snapshot(spark, plain_table):

@@ -2,7 +2,9 @@
 ``txlog._transact``, which owns the parent snapshot, the optimistic
 retry loop and its bound.
 
-- a structural guard (AST only) pins the single choke point;
+- a structural guard (AST only) pins the single choke point, and keeps
+  the skeleton free of a SparkSession;
+- a DataSource commit into an unconstrained table builds no session;
 - every writer gives up after ``_MAX_COMMIT_RETRIES`` lost claims
   without moving the table;
 - every verb that had no race test re-derives its change on the parent
@@ -54,6 +56,49 @@ def test_one_commit_choke_point():
                 retry_loops.append(f"{name}:{fn}:{node.lineno}")
     assert callers == {"_transact", "create_table", "clone_table"}, callers
     assert len(retry_loops) == 1 and ":_transact:" in retry_loops[0], retry_loops
+
+    # the skeleton reads manifests only: no SparkSession goes in
+    tree = ast.parse(open(os.path.join(SOURCES, "txlog.py")).read())
+    tops = {n.name: n for n in tree.body if hasattr(n, "name")}
+    init = next(n for n in tops["_Parent"].body if getattr(n, "name", "") == "__init__")
+    for fn in (tops["_transact"], init):
+        params = fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs
+        assert "spark" not in [a.arg for a in params], fn.name
+        assert "SparkSession" not in ast.dump(fn.args), fn.name
+    # and the one place under sources/ that may build a session is the
+    # DataSource commit's CHECK validation
+    builders = set()
+    for name in sorted(os.listdir(SOURCES)):
+        if name.endswith(".py"):
+            mod = ast.parse(open(os.path.join(SOURCES, name)).read())
+            for top in mod.body:
+                for node in ast.walk(top):
+                    if isinstance(node, ast.Attribute) and node.attr == "getOrCreate":
+                        builders.add(f"{name}:{getattr(top, 'name', '<module>')}")
+    assert builders == {"txlog_source.py:_commit_rels"}, builders
+
+
+def test_unconstrained_datasource_commit_builds_no_session(spark, tmp_path, monkeypatch):
+    """Spark runs a DataSource commit in a separate Python process where
+    no session is active; a session built there is a second local
+    Spark JVM. Into a table with no CHECK constraint the commit reads
+    only manifests and footers, so it needs none."""
+    from pyspark.sql import SparkSession
+
+    root = str(tmp_path / "tx")
+    txlog.create_table(spark, root, _rows(spark, 0, 10))
+    df = _rows(spark, 10, 13)
+    rels = txlog._stage_files(spark, root, df)
+
+    def refuse(*_a, **_k):
+        raise AssertionError("the commit built a SparkSession")
+
+    monkeypatch.setattr(SparkSession, "getActiveSession", refuse)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", refuse)
+    txlog_source._commit_rels(root, df.schema.json(), {"map": {}, "retired": []}, rels)
+    monkeypatch.undo()
+    assert txlog.current_version(root) == 1
+    assert txlog.read_table(spark, root).count() == 13
 
 
 # ---------------------------------------------------------------------------
