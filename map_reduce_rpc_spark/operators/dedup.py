@@ -119,12 +119,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def drop_exact_dups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Keep exactly one row (min id) per distinct normalized content."""
-    w = Window.partitionBy(F.md5(normalize_text(text_col))).orderBy(F.col(id_col))
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-
-
 # ---------------------------------------------------------------------------
 # 2. exact n-gram jaccard via inverted index
 # ---------------------------------------------------------------------------

@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 
 # Node-keyed per-iteration frames (ranks, vote winners, degree-filter
 # survivors) are broadcast-joined instead of shuffle-joined when the
-# driver KNOWS the node count is under this bound (pagerank counts n up
-# front; the backbone callers bound n by a dimension table). Guide §3.1:
+# driver KNOWS the node count is under this bound (the pagerank family
+# counts n up front, so the gate is observed, not asserted). Guide §3.1:
 # broadcast replaces a shuffle of the BIG side (the edge list — the
 # side that grows with corpus size) with a build of the node-sized
 # side; at ~16 bytes/row the bound is ~32 MB per broadcast, far under
@@ -308,14 +308,6 @@ def components_within_blocks(
     )
 
 
-def dedup_keepers(edges: DataFrame, src: str = "id_a", dst: str = "id_b") -> DataFrame:
-    """Cluster the dup pairs and pick the keeper (min id) per cluster:
-    (node, component, is_keeper) — drop rows where is_keeper is false
-    to dedup a corpus given its near-dup pair list."""
-    cc = connected_components(edges, src, dst)
-    return cc.withColumn("is_keeper", F.col("node") == F.col("component"))
-
-
 PR_QUANT = 1 << 20
 
 
@@ -514,9 +506,7 @@ def pagerank_directed(
     return ranks
 
 
-def kcore_truncated(
-    edges: DataFrame, k: int, rounds: int, broadcast_nodes: bool = False
-) -> DataFrame:
+def kcore_truncated(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Truncated k-core peeling: `rounds` iterations of "drop every
     node with degree < k, restrict the edge set to survivors", then
     per-node degrees of the surviving subgraph. Input: undirected
@@ -544,18 +534,8 @@ def kcore_truncated(
             .where(F.col("d") >= k)
             .select("u")
         )
-        # broadcast_nodes (caller asserts node count is dimension-
-        # bounded, see BROADCAST_NODES_MAX): both semi joins build the
-        # node-sized survivor set instead of shuffling the edge list
-        # twice per round — guide §3.1; semi-join output is identical.
-        cur = cur.join(
-            _maybe_broadcast(keep, broadcast_nodes), "u", "semi"
-        ).join(
-            _maybe_broadcast(
-                keep.select(F.col("u").alias("v")), broadcast_nodes
-            ),
-            "v",
-            "semi",
+        cur = cur.join(keep, "u", "semi").join(
+            keep.select(F.col("u").alias("v")), "v", "semi"
         )
         # checkpoint only where the round's survivors feed TWO
         # consumers (next round's degree count + semi joins); the
@@ -567,9 +547,7 @@ def kcore_truncated(
     return cur.groupBy("u").agg(F.count("*").cast("long").alias("core_deg"))
 
 
-def label_propagation(
-    edges: DataFrame, rounds: int, broadcast_nodes: bool = False
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """Synchronous label propagation (LPA, Raghavan et al. 2007) for
     COMMUNITY detection — the density-sensitive complement of
     :func:`connected_components` (which only answers reachability):
@@ -601,14 +579,8 @@ def label_propagation(
         .withColumn("label", F.col("node"))
     )
     for _ in range(rounds):
-        # broadcast_nodes (caller asserts dimension-bounded node count):
-        # the label and winner frames are node-sized — broadcast them so
-        # the edge list never shuffles (guide §3.1); values identical.
         votes = (
-            und.join(
-                _maybe_broadcast(labels, broadcast_nodes),
-                und["v"] == labels["node"],
-            )
+            und.join(labels, und["v"] == labels["node"])
             .groupBy(F.col("u"), F.col("label"))
             .agg(F.count("*").alias("c"))
         )
@@ -617,15 +589,10 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("m"))
             .select(F.col("u").alias("bnode"), (-F.col("m.nl")).alias("blabel"))
         )
-        labels = _iter_snapshot(
-            labels.join(
-                _maybe_broadcast(best, broadcast_nodes),
-                labels["node"] == F.col("bnode"),
-                "left",
-            ).select(
+        labels = _snapshot(
+            labels.join(best, labels["node"] == F.col("bnode"), "left").select(
                 "node", F.coalesce(F.col("blabel"), F.col("label")).alias("label")
-            ),
-            broadcast_nodes,
+            )
         )
     und.unpersist()
     return labels.select("node", F.col("label").alias("community"))
@@ -752,7 +719,6 @@ def bfs_hops(
     edges: DataFrame,
     seeds: tuple[int, ...],
     rounds: int,
-    broadcast_nodes: bool = False,
 ) -> DataFrame:
     """Multi-source BFS hop distance: ``rounds`` synchronous frontier
     expansions from the seed set over undirected unique (u, v) pairs.
@@ -782,21 +748,14 @@ def bfs_hops(
     )
     frontier = reached
     for r in range(1, rounds + 1):
-        # broadcast_nodes (caller asserts dimension-bounded node
-        # count): frontier and reached are node-sized — broadcast both
-        # so the adjacency never shuffles (guide §3.1; anti-join and
-        # inner-join outputs are identical either way).
         nxt = (
-            und.join(
-                _maybe_broadcast(frontier, broadcast_nodes),
-                und["u"] == frontier["node"],
-            )
+            und.join(frontier, und["u"] == frontier["node"])
             .select(F.col("v").alias("node"))
             .distinct()
-            .join(_maybe_broadcast(reached, broadcast_nodes), "node", "left_anti")
+            .join(reached, "node", "left_anti")
             .withColumn("hops", F.lit(r).cast("int"))
         )
-        reached = _iter_snapshot(reached.unionByName(nxt), broadcast_nodes)
+        reached = _snapshot(reached.unionByName(nxt))
         frontier = reached.where(F.col("hops") == r)
     und.unpersist()
     return reached

@@ -66,27 +66,6 @@ def salted_distinct_count(
     )
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    fact_salt_src: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-proof equi-join: replicate the (small) dim n_salts times,
-    salt each fact row deterministically from one of its own columns,
-    and join on (key, salt). The hot key's rows spread over n_salts
-    reducers instead of one. Prefer AQE's automatic skew-join split;
-    this explicit form is for engines/paths where AQE can't see the
-    skew (e.g. inside a window-feeding shuffle)."""
-    salts = F.array(*[F.lit(i) for i in range(n_salts)])
-    dim_rep = dim.withColumn("_salt", F.explode(salts))
-    fact_s = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(fact_salt_src)), F.lit(n_salts))
-    )
-    return fact_s.join(dim_rep, [on, "_salt"]).drop("_salt")
-
-
 def split_hot_key_join(
     fact: DataFrame,
     dim: DataFrame,
@@ -95,7 +74,7 @@ def split_hot_key_join(
 ) -> DataFrame:
     """Skew-proof fact-to-dim equi-join by hot/cold key routing.
 
-    ``salted_join`` replicates the WHOLE dim n_salts times; this form
+    A salted join replicates the WHOLE dim once per salt; this form
     replicates NOTHING and instead routes each fact row by whether its
     key is hot:
 

@@ -175,6 +175,14 @@ def filtered_topk(
     )
 
 
+# Broadcast budget for a build side whose size the code observes
+# (Catalyst's estimate, see _fits_broadcast): blocked_near_dup_pairs'
+# pair join and textops' decontamination gram join broadcast under it
+# and shuffle past it. Real eval sets and k-means cells fit easily; an
+# O(corpus) build side at 100 TB does not.
+BROADCAST_MAX_BYTES = 64 << 20
+
+
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's own size estimate for the optimized plan (the same
     statistic the broadcast-join planner consults). None if the py4j
@@ -187,14 +195,19 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def _fits_broadcast(df: DataFrame) -> bool:
+    """True iff Catalyst estimates ``df`` under BROADCAST_MAX_BYTES; an
+    unknown estimate takes the shuffle path."""
+    est = _plan_size_bytes(df)
+    return est is not None and est <= BROADCAST_MAX_BYTES
+
+
 def blocked_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     block_col: str = "label",
-    strategy: str = "auto",
-    broadcast_max_bytes: int = 64 << 20,
     keep_block_col: bool = False,
 ) -> DataFrame:
     """Exact cosine >= threshold pairs within each block.
@@ -203,33 +216,24 @@ def blocked_near_dup_pairs(
     block_size^2 instead of N^2. With a cluster assignment as the
     block this is the verification stage of embedding dedup.
 
-    Join strategy (the 100 TB question for this operator):
+    Join selection (the 100 TB question for this operator) follows
+    Catalyst's size estimate for the build side (:func:`_fits_broadcast`):
 
-    - ``broadcast`` — build side ships to every task; the probe side
-      parallelizes with the scan, not with block cardinality. Right
-      when blocks are few (a shuffle join on a 10-value blk column
-      caps parallelism at 10 tasks) AND the table fits the broadcast
-      budget. Dies past driver/executor broadcast size.
-    - ``shuffle`` — both sides shuffle on blk; scales to any table
-      size but needs block cardinality >= cluster parallelism to fill
-      the cluster (true for real k-means cells, false for a 10-label
-      toy column).
-    - ``auto`` (default) — broadcast iff Catalyst's size estimate for
-      the build side is under ``broadcast_max_bytes``.
+    - under BROADCAST_MAX_BYTES, broadcast — the build side ships to
+      every task and the probe side parallelizes with the scan, not
+      with block cardinality (a shuffle join on a 10-value blk column
+      caps parallelism at 10 tasks);
+    - past it, a sort-merge join with both sides shuffled on blk —
+      scales to any table size, and fills the cluster once block
+      cardinality reaches its parallelism (true for real k-means
+      cells).
     """
-    if strategy not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     base = emb.select(
         F.col(id_col).alias("id"),
         F.col(block_col).alias("blk"),
         _as_double(vec_col).alias("v"),
     ).withColumn("n", l2_norm(F.col("v")))
-    if strategy == "auto":
-        est = _plan_size_bytes(base)
-        strategy = (
-            "broadcast" if est is not None and est <= broadcast_max_bytes else "shuffle"
-        )
-    if strategy == "broadcast":
+    if _fits_broadcast(base):
         # Explicit-count repartition when the source scan is small
         # (round 15): the keyless-count form `repartition(col)` is
         # AQE-coalescible, and with a KB-sized input AQE folded the

@@ -247,8 +247,6 @@ def avro_events_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec is the ingest-compatibility path (JVM spark-avro is the
     drop-in fast path when its jar ships), exactly the kvtext
     contract."""
-    import os
-
     from ..sources import avro_py
     from ..tables import derived_cache_dir
 

@@ -540,12 +540,6 @@ def kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi joins. Output: (suppkey, core_deg)."""
     from ..operators.graph import kcore_truncated
 
-    # broadcast_nodes stays False: measured within one session at
-    # sf0.1, the per-round broadcast builds cost more than AQE's
-    # reused shuffle exchanges save (kcore 0.70 s shuffle vs 0.78 s
-    # broadcast). The flag is the 100 TB lever for edge lists too
-    # large to shuffle per round while the survivor set stays
-    # dimension-bounded.
     return kcore_truncated(
         _supplier_backbone(spark, sf_dir), k=KCORE_K, rounds=KCORE_ROUNDS
     ).select(F.col("u").alias("suppkey"), "core_deg")
@@ -571,11 +565,6 @@ def bfs_hops_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the reached set."""
     from ..operators.graph import bfs_hops
 
-    # broadcast_nodes stays False: measured within one session at
-    # sf0.1, broadcasting frontier/reached is 4.5x SLOWER than the
-    # reused shuffle exchanges (1.5 s vs 6.7 s) — the per-round
-    # broadcast builds serialize where AQE reuses. The flag remains
-    # the documented lever for adjacency lists too large to shuffle.
     return bfs_hops(
         _supplier_backbone(spark, sf_dir), seeds=BFS_SEED_SUPPS, rounds=BFS_ROUNDS
     ).select(F.col("node").alias("suppkey"), "hops")
@@ -612,9 +601,6 @@ def label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-node-safety argument). Output: (suppkey, community)."""
     from ..operators.graph import label_propagation
 
-    # broadcast_nodes stays False: measured within one session at
-    # sf0.1 the broadcast builds cost slightly more than the reused
-    # shuffle exchanges (1.16 s vs 1.21 s); kept as the 100 TB lever.
     return label_propagation(
         _supplier_backbone(spark, sf_dir, top_t=LPA_TOP_NEIGHBORS),
         rounds=LPA_ROUNDS,

@@ -128,41 +128,6 @@ def stream_events_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return core.run_available_now(out, spark)
 
 
-def stream_tws_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """stream_stateful_sessions through Spark 4's
-    transformWithStateInPandas (typed state handles + named event-time
-    timers, the applyInPandasWithState successor). NOT REGISTERED:
-    transformWithState speaks a protobuf-based state-server protocol
-    and this container permanently lacks the python ``protobuf``
-    runtime (no pip; vendoring is infeasible because pyspark's
-    generated ``*_pb2`` modules need the full runtime, not a shim).
-    The applyInPandasWithState form (``stream_stateful_sessions``) is
-    therefore the PERMANENT certified sessionization path; this
-    function is kept as the deployment recipe for clusters that do
-    ship protobuf — it shares the exact batch-SQL oracle, so on such a
-    cluster the two stateful APIs hash-check against each other. The
-    ``_SessionProcessor`` logic itself is pure pandas and unit-tested
-    against mock state/timer handles either way
-    (tests/test_streaming.py::test_tws_session_processor_logic_with_mock_handles).
-    Runs under the RocksDB state store provider, which
-    transformWithState requires and which is the 100 TB deployment
-    choice anyway (disk-backed, changelog-checkpointed state); the
-    conf is scoped to this run and restored."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = core.run_available_now(
-            stateful.sessionize_tws(_replay(spark, sf_dir)), spark
-        )
-    finally:
-        spark.conf.set(key, saved)
-    return out.where(F.col("user_id") != core.SENTINEL_USER)
-
-
 def stream_converting_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT SEMI interval join (completes the join
     family: inner / left-outer / full-outer / semi): clicks that
@@ -622,9 +587,3 @@ STREAMS_ORACLES["stream_scd2_user_state"] = """
                AS is_current
     FROM runs
 """
-
-# stream_tws_sessions is deliberately absent from STREAMS_ORACLES: it
-# cannot run in this container (see its docstring) and a conditional
-# registration would be a silently-skipped entry. On a protobuf-enabled
-# cluster it reuses stream_stateful_sessions' oracle verbatim.
-TWS_SESSIONS_ORACLE = STREAMS_ORACLES["stream_stateful_sessions"]

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import NON_LETTER_RE, quality_signals, tokens, word_ngrams
 from ..operators import dedup
-from ..operators.similarity import _plan_size_bytes
+from ..operators.similarity import _fits_broadcast
 from ..tables import load_table, source_fingerprint, spread_partitions
 from .sampling import _TRAIN_HEX, _VAL_HEX
 
@@ -1355,11 +1355,6 @@ def boilerplate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (stands in for "the eval set"), overlap on distinct word DECON_N-grams.
 DECON_MOD = 100
 DECON_N = 5
-# Broadcast the bench gram set only while Catalyst estimates it under
-# this; above it, fall back to a shuffle join (same auto pattern as
-# blocked_near_dup_pairs). Real eval sets fit easily; the synthetic
-# membership rule (1% of the corpus) would not at 100 TB.
-DECON_BCAST_MAX_BYTES = 64 << 20
 
 
 def _gram_overlap_hits(sh: DataFrame) -> DataFrame:
@@ -1370,8 +1365,9 @@ def _gram_overlap_hits(sh: DataFrame) -> DataFrame:
     BEFORE the distinct/join, so the bench build side carries 8-byte
     keys instead of ~40-byte strings and the probe side never shuffles
     text. The bench side is broadcast only while Catalyst's size
-    estimate stays under DECON_BCAST_MAX_BYTES — past that (an
-    O(corpus) synthetic eval set) it degrades to a hash-partitioned
+    estimate stays under similarity.BROADCAST_MAX_BYTES — past that (an
+    O(corpus) synthetic eval set, like this 1% membership rule at
+    100 TB) it degrades to a hash-partitioned
     join on the 8-byte key rather than dying on the broadcast. The
     DuckDB oracle hashes identically, so the driver still hash-checks
     end to end.
@@ -1380,8 +1376,7 @@ def _gram_overlap_hits(sh: DataFrame) -> DataFrame:
         "doc_id", "is_bench", dedup.portable_hash60(F.col("g")).alias("gh")
     )
     bench = hashed.where("is_bench").select("gh").distinct()
-    est = _plan_size_bytes(bench)
-    if est is not None and est <= DECON_BCAST_MAX_BYTES:
+    if _fits_broadcast(bench):
         bench = F.broadcast(bench)
     return (
         hashed.where(~F.col("is_bench"))

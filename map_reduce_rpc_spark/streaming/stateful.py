@@ -23,7 +23,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 GAP_US = 30 * 60 * 1_000_000
@@ -97,106 +96,3 @@ def sessionize(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# The same sessionizer through transformWithStateInPandas — Spark 4's
-# arbitrary-state API (SPARK-49564), successor to applyInPandasWithState:
-# typed state handles (value/list/map) instead of one state tuple,
-# explicit named timers instead of a single timeout slot, and TTL
-# support. Semantics here are IDENTICAL to _sessionize_fn above by
-# construction, and the registered query shares the same batch-SQL
-# oracle — the two APIs are hash-checked against each other.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
-
-
-class _SessionProcessor(StatefulProcessor):
-    """Gap-sessionizer: ValueState holds the one open session per
-    user; an event-time timer closes it when the watermark passes
-    last_event + gap. O(1) state per key, same contract as the
-    applyInPandasWithState form."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("sess", STATE_DDL)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        got = self._state.get() if self._state.exists() else None
-        open_sess = list(got) if got is not None else None
-        out: list[tuple] = []
-        pdf = pd.concat(list(rows), ignore_index=True).sort_values(
-            ["ts_us", "event_id"], kind="stable"
-        )
-        for ts_us, cents in zip(
-            pdf["ts_us"].astype("int64"),
-            (pdf["value"] * 100).round().astype("int64"),
-        ):
-            ts_us = int(ts_us)
-            if open_sess is None:
-                open_sess = [ts_us, ts_us, 1, int(cents)]
-            elif ts_us - open_sess[1] >= GAP_US:
-                out.append(
-                    (user_id, open_sess[0], open_sess[1], open_sess[2], open_sess[3])
-                )
-                open_sess = [ts_us, ts_us, 1, int(cents)]
-            else:
-                open_sess[1] = ts_us
-                open_sess[2] += 1
-                open_sess[3] += int(cents)
-        timeout_ms = open_sess[1] // 1000 + GAP_US // 1000
-        if timeout_ms <= timerValues.getCurrentWatermarkInMs():
-            # already expired relative to the watermark: final now —
-            # a timer in the past would never fire
-            out.append(
-                (user_id, open_sess[0], open_sess[1], open_sess[2], open_sess[3])
-            )
-            self._state.clear()
-        else:
-            self._state.update(tuple(open_sess))
-            # supersede any timer from an earlier, shorter session
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(timeout_ms)
-        yield pd.DataFrame(out, columns=_COLS)
-
-    def handleExpiredTimer(
-        self, key: tuple, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        got = self._state.get() if self._state.exists() else None
-        out: list[tuple] = []
-        if got is not None:
-            s = list(got)
-            out.append((user_id, s[0], s[1], s[2], s[3]))
-            self._state.clear()
-        yield pd.DataFrame(out, columns=_COLS)
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_tws(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """The :func:`sessionize` semantics through Spark 4's
-    transformWithStateInPandas. Requires the RocksDB state store
-    provider (the caller sets it — see plans/streams.py), which is
-    also the 100 TB deployment choice: changelog-checkpointed,
-    disk-backed state instead of executor-heap maps."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_SessionProcessor(),
-            outputStructType=OUTPUT_DDL,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )

@@ -49,12 +49,6 @@ def test_exact_dup_groups(planted):
     assert dup[0]["keeper_id"] == 0
 
 
-def test_drop_exact_dups(planted):
-    kept = dedup.drop_exact_dups(planted, "doc_id", "text")
-    ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    assert ids == {0, 3, 4, 5, 6, 7, 8, 9, 10, 11}
-
-
 def test_ngram_jaccard_finds_near_dups(planted):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]

@@ -20,21 +20,15 @@ KEYS = [
 
 
 def test_connected_components_known_graph(spark):
-    """CC on a hand-built graph: two components + the keeper flags."""
-    from map_reduce_rpc_spark.operators.graph import dedup_keepers
+    """CC on a hand-built graph: two components, each labeled by its
+    min node id (the keeper a near-dup dedup keeps)."""
+    from map_reduce_rpc_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 9), (3, 4)], ["id_a", "id_b"]
     )
-    rows = {r.node: (r.component, r.is_keeper) for r in dedup_keepers(edges).collect()}
-    assert rows == {
-        1: (1, True),
-        2: (1, False),
-        3: (1, False),
-        4: (1, False),
-        7: (7, True),
-        9: (7, False),
-    }
+    rows = {r.node: r.component for r in connected_components(edges).collect()}
+    assert rows == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 9: 7}
 
 
 @pytest.mark.parametrize("name", KEYS)

@@ -110,38 +110,6 @@ def test_connected_components_fused_changed_flag(spark):
     assert out.columns == ["node", "component"]
 
 
-def test_bfs_kcore_lpa_broadcast_flag_identical(spark):
-    """broadcast_nodes changes join strategy only — results identical
-    with the flag on and off."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (2, 6), (6, 7), (1, 6)], ["u", "v"]
-    )
-    bfs_a = sorted(map(tuple, graph.bfs_hops(edges, seeds=(1,), rounds=3).collect()))
-    bfs_b = sorted(
-        map(
-            tuple,
-            graph.bfs_hops(edges, seeds=(1,), rounds=3, broadcast_nodes=True).collect(),
-        )
-    )
-    assert bfs_a == bfs_b
-    kc_a = sorted(map(tuple, graph.kcore_truncated(edges, k=2, rounds=3).collect()))
-    kc_b = sorted(
-        map(
-            tuple,
-            graph.kcore_truncated(edges, k=2, rounds=3, broadcast_nodes=True).collect(),
-        )
-    )
-    assert kc_a == kc_b
-    lp_a = sorted(map(tuple, graph.label_propagation(edges, rounds=2).collect()))
-    lp_b = sorted(
-        map(
-            tuple,
-            graph.label_propagation(edges, rounds=2, broadcast_nodes=True).collect(),
-        )
-    )
-    assert lp_a == lp_b
-
-
 def test_minhash_index_checkpoint_semantics(spark):
     """A localCheckpoint of the minhash index is content-identical to
     the lazy form. (decontaminate_fuzzy itself no longer checkpoints

@@ -48,31 +48,6 @@ def test_salted_distinct_count_exact(spark, sf_dir):
     assert salted == direct
 
 
-def test_salted_join_matches_plain(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    plain = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(F.sum("l_quantity").alias("q"))
-    )
-    salted = (
-        scale.salted_join(
-            li.withColumnRenamed("l_partkey", "p_partkey"),
-            part,
-            on="p_partkey",
-            fact_salt_src="l_orderkey",
-        )
-        .groupBy("p_brand")
-        .agg(F.sum("l_quantity").alias("q"))
-    )
-    ps = {r.p_brand: r.q for r in plain.collect()}
-    ss = {r.p_brand: r.q for r in salted.collect()}
-    assert ps == ss
-
-
 def test_zorder_clustering_bounds_both_dimensions(spark, tmp_path):
     """Z-order vs single-column clustering, measured on the parquet
     footers: clustering by x alone leaves every file spanning the full

@@ -54,26 +54,53 @@ def test_blocked_near_dups_symmetric_and_thresholded(spark, emb):
     assert all(r["cos"] >= 0.5 for r in pairs)
 
 
-def test_blocked_near_dups_strategy_switch(spark, emb):
-    """The join strategy must actually switch with build-side size:
-    small build side -> broadcast hash join; past the broadcast budget
-    -> shuffle join (no BroadcastHashJoin on the pair join). Results
-    must be identical either way."""
-    bcast = similarity.blocked_near_dup_pairs(emb, threshold=0.5, strategy="broadcast")
-    shuf = similarity.blocked_near_dup_pairs(emb, threshold=0.5, strategy="shuffle")
-    assert "BroadcastHashJoin" in bcast._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in shuf._jdf.queryExecution().executedPlan().toString()
-    assert sorted(map(tuple, bcast.collect())) == sorted(map(tuple, shuf.collect()))
-    # auto with a tiny budget must take the shuffle path; with a huge
-    # budget (table is small here) the broadcast path
-    tiny = similarity.blocked_near_dup_pairs(
-        emb, threshold=0.5, strategy="auto", broadcast_max_bytes=1
+def test_blocked_near_dups_strategy_switch(spark, sf_dir, emb, monkeypatch):
+    """One budget, similarity.BROADCAST_MAX_BYTES, switches both
+    size-selected joins: blocked_near_dup_pairs' pair join and
+    decontamination's bench-gram join (textops._gram_overlap_hits).
+    Under a budget Catalyst's estimate exceeds, neither plans a
+    BroadcastHashJoin; under one it fits, both do. Rows are identical
+    either way, and non-empty (threshold 0.3: no pair in the test
+    data reaches 0.5). Spark's own size-based broadcast is off here, so
+    a BroadcastHashJoin can only come from the selection under test."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_rpc_spark.functions.text import word_ngrams
+    from map_reduce_rpc_spark.plans.textops import _gram_overlap_hits
+
+    # decontaminate_docs' gram frame over a scan (a local frame carries
+    # no size estimate), with a denser bench set so hits are many
+    sh = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        (F.col("doc_id") % 3 == 0).alias("is_bench"),
+        F.explode(F.array_distinct(word_ngrams("text", 3))).alias("g"),
     )
-    assert "BroadcastHashJoin" not in tiny._jdf.queryExecution().executedPlan().toString()
-    big = similarity.blocked_near_dup_pairs(
-        emb, threshold=0.5, strategy="auto", broadcast_max_bytes=1 << 40
-    )
-    assert "BroadcastHashJoin" in big._jdf.queryExecution().executedPlan().toString()
+
+    def plans_and_rows(budget):
+        monkeypatch.setattr(similarity, "BROADCAST_MAX_BYTES", budget)
+        pairs = similarity.blocked_near_dup_pairs(emb, threshold=0.3)
+        hits = _gram_overlap_hits(sh)
+        return [
+            (
+                "BroadcastHashJoin"
+                in df._jdf.queryExecution().executedPlan().toString(),
+                sorted(map(tuple, df.collect())),
+            )
+            for df in (pairs, hits)
+        ]
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled = plans_and_rows(1)
+        broadcast = plans_and_rows(1 << 40)
+    finally:
+        spark.conf.set(key, saved)
+    assert [bhj for bhj, _ in shuffled] == [False, False]
+    assert [bhj for bhj, _ in broadcast] == [True, True]
+    assert [rows for _, rows in shuffled] == [rows for _, rows in broadcast]
+    assert all(rows for _, rows in broadcast)
 
 
 def test_srp_lsh_finds_planted_near_dups(spark, emb):

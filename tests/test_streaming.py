@@ -364,108 +364,3 @@ def test_stream_dedup_state_is_watermark_bounded(spark, sf_dir, tmp_path):
         f"dedup state not evicted: {finals[-1]} rows still held "
         f"(unbounded dropDuplicates would hold ~{n_events})"
     )
-
-
-def test_tws_session_processor_logic_with_mock_handles():
-    """transformWithStateInPandas cannot run in this container (its
-    state protocol needs the python protobuf package, permanently
-    absent here — see plans/streams.stream_tws_sessions, which is
-    deliberately unregistered for that reason), so the StatefulProcessor is
-    exercised directly against mock state/timer handles: three
-    micro-batches with an advancing watermark plus a fired timer must
-    reproduce exactly the sessions a pure-python gap sessionizer
-    computes over the same events."""
-    import pandas as pd
-
-    from map_reduce_rpc_spark.streaming.stateful import (
-        GAP_US,
-        _COLS,
-        _SessionProcessor,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-        def exists(self):
-            return self.v is not None
-        def get(self):
-            return self.v
-        def update(self, v):
-            self.v = tuple(v)
-        def clear(self):
-            self.v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeState()
-            self.timers = set()
-        def getValueState(self, name, schema):
-            return self.state
-        def listTimers(self):
-            return list(self.timers)
-        def deleteTimer(self, t):
-            self.timers.discard(t)
-        def registerTimer(self, t):
-            self.timers.add(t)
-
-    class FakeTimerValues:
-        def __init__(self, wm_ms):
-            self.wm = wm_ms
-        def getCurrentWatermarkInMs(self):
-            return self.wm
-
-    class FakeExpired:
-        def __init__(self, t):
-            self.t = t
-        def getExpiryTimeInMs(self):
-            return self.t
-
-    minute = 60 * 1_000_000
-    # user 7: events at 0m,10m (one session), 50m,55m (second), 200m (third)
-    events = [0, 10 * minute, 50 * minute, 55 * minute, 200 * minute]
-    batches = [events[:2], events[2:4], events[4:]]
-
-    proc = _SessionProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-    emitted = []
-    wm = -1
-    for batch in batches:
-        pdf = pd.DataFrame(
-            {
-                "ts_us": batch,
-                "event_id": range(len(batch)),
-                "value": [1.0] * len(batch),
-            }
-        )
-        out = list(
-            proc.handleInputRows((7,), iter([pdf]), FakeTimerValues(wm))
-        )
-        emitted.extend(out)
-        wm = max(batch) // 1000  # watermark = max event time (0 delay)
-        for t in sorted(handle.timers):
-            if t <= wm:
-                handle.timers.discard(t)
-                emitted.extend(
-                    proc.handleExpiredTimer((7,), FakeTimerValues(wm), FakeExpired(t))
-                )
-    # final flush: watermark far future fires the last timer
-    for t in sorted(handle.timers):
-        emitted.extend(
-            proc.handleExpiredTimer((7,), FakeTimerValues(10**15), FakeExpired(t))
-        )
-    got = sorted(
-        map(tuple, pd.concat(emitted, ignore_index=True)[_COLS].itertuples(index=False))
-    )
-    # pure-python reference sessionizer
-    want, cur = [], None
-    for ts in events:
-        if cur is None:
-            cur = [ts, ts, 1, 100]
-        elif ts - cur[1] >= GAP_US:
-            want.append((7, *cur))
-            cur = [ts, ts, 1, 100]
-        else:
-            cur[1], cur[2], cur[3] = ts, cur[2] + 1, cur[3] + 100
-    want.append((7, *cur))
-    assert got == sorted(want), (got, want)
