@@ -1,26 +1,37 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Benchmark the registered queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE compact JSON line on stdout:
+    python bench.py              # every registered query
+    python bench.py q1 q2 ...    # only the named ones
+
+Prints ONE compact JSON line last on stdout:
   {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
-   "queries": {...top 10 slowest...}}
-The full per-query timing map goes to stderr (and an earlier stdout
-line) so the driver's bounded tail-capture always sees the final
-summary line intact. (Round 2 embedded all 79 timings in the final
-line, ~4.5 KB, which overflowed the driver's tail buffer and left
-BENCH_r02.json unparsed.)
+   "cpus": ..., "queries": {...top 10 slowest...}}
+The full record goes to stderr, an earlier stdout line and
+bench_results.json (a named run writes bench_results_isolated.json, a
+run at another sf bench_results_sf<sf>.json), so a bounded tail capture
+of stdout always sees the final summary line intact. (Round 2 embedded
+all 79 timings in the final line, ~4.5 KB, which overflowed a ~2 KB
+tail capture and left BENCH_r02.json unparsed.)
 
 Each query is timed end-to-end including the action (count of the
 result — forces full execution without driver-side collect of data).
 Since round 5 the reported time is STEADY-STATE: each query runs
-$SPARK_GRAFT_BENCH_WARM_RUNS (default 1) untimed warm runs first, and
-the timed run follows — JMH-style, because session recycling (below)
-re-pays family-specific JIT/codegen for whichever query lands first
-after a recycle (round 4: stream_stateful_sessions 7.8 s cold vs 4.4 s
-steady; dup_clusters 11.3 s cold vs 1.4 s steady). The cold first-run
-time is still recorded per query as first_run_sec in
-bench_results.json.
+WARM_RUNS untimed warm runs first, and the timed runs follow —
+JMH-style, because session recycling (below) re-pays family-specific
+JIT/codegen for whichever query lands first after a recycle (round 4:
+stream_stateful_sessions 7.8 s cold vs 4.4 s steady; dup_clusters
+11.3 s cold vs 1.4 s steady). The cold first-run time is still
+recorded per query as first_run_sec in bench_results.json.
+
+Each query's ``layers`` entry splits the fastest timed run into
+construct_s (the Python/py4j DataFrame build), exec_s (the rest: plan
+and run the count) and plan_s (Catalyst planning of that frame, probed
+after the timed runs), and carries the Spark jobs, stages and tasks of
+every timed run plus the fastest run's shuffle bytes and executor run
+time. The counters are read through perfbench's ``tracing.Recorder``
+after the timed runs, so they cost no timed time.
 
 Session recycling (round 4): running all 84 queries in ONE local[32]
 JVM accumulates driver-side state — AppStatusStore stage/task entries,
@@ -28,37 +39,38 @@ streaming state-store providers awaiting the 60 s maintenance unload,
 broadcast/shuffle blocks pending a GC-driven ContextCleaner pass. In
 round 3 that debris produced a positional cliff: every query from
 registry position ~70 on ran 3-11x slower than the identical plan in
-round 2. The fix is to recycle the SparkSession every
-$SPARK_GRAFT_BENCH_RECYCLE queries (default 21): stop() tears down
-state stores, the status store, and shuffle dirs, and the next
-getOrCreate starts clean in the same JVM. This is also the honest
-model of production, where each query family runs in its own job, not
-one immortal driver. Diagnostic:
-  SPARK_GRAFT_BENCH_RECYCLE=0       disable recycling (round-3 mode).
+round 2. The fix is to recycle the SparkSession every RECYCLE_EVERY
+queries: stop() tears down state stores, the status store, and
+shuffle dirs, and the next getOrCreate starts clean in the same JVM.
+This is also the honest model of production, where each query family
+runs in its own job, not one immortal SparkContext.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from py4j.protocol import Py4JJavaError  # noqa: E402
+
+from perfbench.run import _code_sha, _git_sha  # noqa: E402
+from perfbench.tracing import STAGE_FIELDS, Recorder  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-RECYCLE_EVERY = int(os.environ.get("SPARK_GRAFT_BENCH_RECYCLE", "21"))
-# Untimed warm runs per query before the timed run (JMH-style
+RECYCLE_EVERY = 21
+# Untimed warm runs per query before the timed runs (JMH-style
 # steady-state measurement). Round 4's per-query regressions
 # (stream_stateful_sessions 7.8 s, dup_clusters 4.18 s) were both
 # first-run-after-recycle JIT/codegen warmup, not plan changes —
 # measured cold/steady: 15.5/4.4 s and 11.3/1.4 s. Recycling controls
 # driver-state debris but re-pays family-specific codegen for whichever
 # query lands first; warm-run timing removes that positional lottery.
-# The first (cold) run's time is still recorded per query in
-# bench_results.json as first_run_sec for transparency. Set to 0 for
-# the round-1..4 single-run semantics.
-WARM_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "1"))
+WARM_RUNS = 1
 # Timed runs per query; the reported steady-state time is the MIN of
 # these (every sample is recorded in bench_results.json). Round-6
 # motivation: with a single timed run, rare one-off session events
@@ -75,6 +87,11 @@ WARM_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "1"))
 # min-of-3 pulls the envelope below it. Cost: ~+70 s of bench wall
 # time at sf0.1, well inside the driver budget.
 TIMED_RUNS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_TIMED_RUNS", "3")))
+# A run whose 1-min loadavg at start exceeds this does not become the
+# gate baseline (round-14 verdict item 3): its artifact is diverted to
+# bench_results_contended.json. The documented external bursts here
+# reach 3-6; our own runs start from ~0.
+MAX_START_LOAD = 8.0
 
 
 def _warm_streaming(spark) -> None:
@@ -139,8 +156,29 @@ def _warm_text_machinery(spark) -> None:
     dedup.simhash_pairs(docs, "doc_id", "text").count()
 
 
+class _Recorder(Recorder):
+    """perfbench's Recorder, reading a stage that Spark's status store
+    no longer holds as a stage that did not run. Once a context passes
+    ``spark.ui.retainedStages`` (1000; a session of RECYCLE_EVERY
+    queries can) the store trims skipped stages first, as they have no
+    completion time, so a skipped stage of the query just run can be
+    gone before ``collect_jobs`` reads it. Completed stages go oldest
+    first, and the current query's are the newest."""
+
+    @staticmethod
+    def _stage(store, sid: int) -> dict:
+        try:
+            return Recorder._stage(store, sid)
+        except Py4JJavaError as exc:
+            if "NoSuchElementException" not in str(exc.java_exception):
+                raise
+            return {"ran": False, "start": 0.0, "end": 0.0, **dict.fromkeys(STAGE_FIELDS, 0)}
+
+
 def _fresh_session():
-    """Start a session and pay the one-time warmup outside any timing."""
+    """Start a session and pay the one-time warmup outside any timing;
+    returns it with its own Recorder (job ids restart in a new
+    context, so a recorder never outlives its session)."""
     from map_reduce_rpc_spark.session import get_spark
 
     spark = get_spark("bench")
@@ -161,21 +199,82 @@ def _fresh_session():
         _warm_streaming(spark)
     except Exception as exc:
         print(f"  streaming warmup skipped: {exc}", file=sys.stderr)
-    return spark
+    return spark, _Recorder(spark)
+
+
+def measure(spark, rec, fn, cpus: int) -> dict:
+    """One query's record: WARM_RUNS untimed runs (the first one's time
+    is ``first_run_sec``), then TIMED_RUNS timed runs of build +
+    ``.count()`` (``samples``). ``layers`` splits the fastest timed run
+    and carries each timed run's Spark jobs, stages and tasks, read
+    from ``rec`` by the run's wall interval. Everything in ``layers``
+    is taken after the last timed run: ``plan_s`` plans that run's
+    frame again (no job), then ``rec.collect_jobs()`` reads the status
+    store before ``spark.ui.retainedJobs`` can trim it."""
+    for i in range(WARM_RUNS):
+        t0 = time.perf_counter()
+        fn(spark, SF_DIR).count()
+        if i == 0:
+            first_run = time.perf_counter() - t0
+    runs = []
+    for _ in range(TIMED_RUNS):
+        # Spark stamps a job's submission time in whole milliseconds
+        start = math.floor(time.time() * 1000) / 1000
+        t0 = time.perf_counter()
+        df = fn(spark, SF_DIR)
+        t1 = time.perf_counter()
+        rows = df.count()
+        t2 = time.perf_counter()
+        runs.append((round(t2 - t0, 3), round(t1 - t0, 3), (start, time.time())))
+    t0 = time.perf_counter()
+    df._jdf.queryExecution().executedPlan()
+    plan_s = time.perf_counter() - t0
+    rec.collect_jobs()
+    counters = [rec.execution([wall], cpus) for _, _, wall in runs]
+    best = min(range(len(runs)), key=lambda i: runs[i][0])
+    sec, construct_s, _ = runs[best]
+    return {
+        "rows": rows,
+        "first_run_sec": round(first_run, 3),
+        "samples": [r[0] for r in runs],
+        "layers": {
+            "construct_s": construct_s,
+            "exec_s": round(sec - construct_s, 3),
+            "plan_s": round(plan_s, 4),
+            **{k: [c[k] for c in counters] for k in ("jobs", "stages", "tasks")},
+            **{
+                k: round(counters[best][k], 3)
+                for k in ("shuffle_read_bytes", "shuffle_write_bytes", "executor_run_s")
+            },
+        },
+    }
+
+
+def baseline_refusal(prev: dict, sf_val, cpus) -> str | None:
+    """Why the baseline artifact ``prev`` cannot gate a run at this sf
+    and cpus, or None when it can. Timings taken at another scale
+    factor or core count are not comparable, and a baseline that
+    records no cpus cannot show that it is comparable."""
+    if not prev:
+        return "no baseline"
+    if prev.get("sf") != sf_val:
+        return f"baseline sf {prev.get('sf')} != run sf {sf_val}"
+    if prev.get("cpus") is None:
+        return "baseline records no cpus"
+    if prev["cpus"] != cpus:
+        return f"baseline cpus {prev['cpus']} != run cpus {cpus}"
+    return None
 
 
 def compute_regressions(
-    timings: dict[str, float],
-    prev_q: dict[str, float],
-    prev_sf,
-    sf_val,
-    prev_samples: dict[str, list[float]] | None = None,
+    timings: dict[str, float], prev: dict, sf_val, cpus
 ) -> dict[str, dict[str, float]]:
     """Round-over-round regression gate (round-6 verdict item 3,
-    MEDIAN-anchored since round 14): flag any query whose warm time
-    (min-of-N, the reported number) exceeds 1.25x the baseline's
-    sample MEDIAN at the same scale factor, with a 0.5 s absolute
-    floor so sub-second queries' session jitter doesn't spam the gate.
+    MEDIAN-anchored since round 14) against the baseline artifact
+    ``prev``: flag any query whose warm time (min-of-N, the reported
+    number) exceeds 1.25x the baseline's sample MEDIAN, with a 0.5 s
+    absolute floor so sub-second queries' session jitter doesn't spam
+    the gate. A baseline ``baseline_refusal`` refuses flags nothing.
 
     Why median, not min (round-13 verdict item 1): min-of-3 lets a
     one-in-three lucky tail set an unrepeatable baseline —
@@ -187,9 +286,10 @@ def compute_regressions(
     observation) while the gate anchors on a repeatable one. Baselines
     predating timed_samples_sec fall back to the recorded min. Pure so
     tests/test_scale.py can pin the contract."""
-    if prev_sf != sf_val:
+    if baseline_refusal(prev, sf_val, cpus):
         return {}
-    samples = prev_samples or {}
+    prev_q = prev.get("per_query_sec", {})
+    samples = prev.get("timed_samples_sec", {})
 
     def _anchor(name: str, p: float) -> float:
         s = sorted(samples.get(name, ()))
@@ -215,10 +315,9 @@ def fold_adjudication(
     timings: dict[str, float],
     timed_samples: dict[str, list[float]],
     rerun_samples: dict[str, list[float]],
-    prev_q: dict[str, float],
-    prev_sf,
+    prev: dict,
     sf_val,
-    prev_samples: dict[str, list[float]] | None = None,
+    cpus,
 ) -> tuple[dict[str, dict[str, float]], dict[str, dict]]:
     """Fold post-run adjudication samples into the timing maps and
     recompute the gate; returns (regressions, adjudication_record).
@@ -246,9 +345,7 @@ def fold_adjudication(
             round(s, 3) for s in samples
         )
         timings[name] = round(min(timings[name], min(samples)), 3)
-    regressions = compute_regressions(
-        timings, prev_q, prev_sf, sf_val, prev_samples
-    )
+    regressions = compute_regressions(timings, prev, sf_val, cpus)
     for name, samples in rerun_samples.items():
         if samples and name in timings:
             record[name] = {
@@ -269,6 +366,7 @@ def final_stdout_line(
     warm_total: float,
     cold_total: float | None,
     n_adjudicated: int = 0,
+    cpus: int | None = None,
 ) -> str:
     """The one-JSON-line driver contract, as a pure function so
     tests/test_scale.py can pin its SIZE. The driver's tail capture is
@@ -294,6 +392,7 @@ def final_stdout_line(
             "value": round(total, 3),
             "unit": "sec",
             "sf": sf_val,
+            "cpus": cpus,
             "n_queries": len(timings),
             "n_errors": len(errors),
             "n_regressions": len(regressions),
@@ -326,8 +425,9 @@ def _regen_scale_md(
     n_queries: int,
     n_errors: int,
     warm_total: float,
-    cold_total: float | None,
+    cold_total: float,
     slowest: float,
+    cpus: int,
 ) -> None:
     """Rewrite SCALE.md's BENCH-AUTOGEN block so the headline counts
     can never drift from reality again (round-6 verdict item 8: the
@@ -342,12 +442,11 @@ def _regen_scale_md(
         i = text.index(start)
         i = text.index("-->", i) + 3
         j = text.index(end)
-        cold = f" / {cold_total:.1f} s cold" if cold_total is not None else ""
         block = (
-            f"\nWall times quoted are sf0.1 bench numbers (`bench.py`): "
-            f"{n_queries} queries,\n{warm_total:.1f} s warm{cold}, "
-            f"{n_errors} errors; envelope is 45 s/query, slowest\n"
-            f"single query {slowest:.2f} s warm.\n"
+            f"\nWall times quoted are sf0.1 bench numbers (`bench.py`) on "
+            f"`local[{cpus}]`:\n{n_queries} queries, {warm_total:.1f} s warm / "
+            f"{cold_total:.1f} s cold, {n_errors} errors;\nenvelope is 45 s/query, "
+            f"slowest single query {slowest:.2f} s warm.\n"
         )
         with open(path, "w") as fh:
             fh.write(text[:i] + block + text[j:])
@@ -368,61 +467,49 @@ def main() -> None:
     loadavg_start = [round(x, 2) for x in os.getloadavg()]
     print(f"  loadavg at start: {loadavg_start}", file=sys.stderr)
 
-    qs = list(entry_mod.queries().items())
-    # SPARK_GRAFT_BENCH_ONLY=a,b,c — run just the named queries (the
-    # isolated fresh-session adjudication protocol for regression-gate
-    # flags, SCALE.md "similarity warm regression"); a filtered run
-    # never writes the gate baseline (guarded below by the sf check
-    # plus this flag).
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = {x.strip() for x in only.split(",") if x.strip()}
-        qs = [(n, f) for n, f in qs if n in keep]
-        print(f"  (filtered to {len(qs)} queries: {sorted(keep)})", file=sys.stderr)
+    registry = entry_mod.queries()
+    # Named queries (the isolated fresh-session adjudication protocol
+    # for regression-gate flags, and the per-query profile): run just
+    # those, and never write the full-registry gate baseline.
+    names = sys.argv[1:]
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    qs = [(n, registry[n]) for n in names] if names else list(registry.items())
 
-    spark = _fresh_session()
+    spark, rec = _fresh_session()
+    cpus = spark.sparkContext.defaultParallelism
     timings: dict[str, float] = {}
     timed_samples: dict[str, list[float]] = {}
     first_run: dict[str, float] = {}
-    total = 0.0
+    layers: dict[str, dict] = {}
     errors: dict[str, str] = {}
-    since_recycle = 0
-    for name, fn in qs:
-        if RECYCLE_EVERY > 0 and since_recycle >= RECYCLE_EVERY:
+    for i, (name, fn) in enumerate(qs):
+        if i and i % RECYCLE_EVERY == 0:
             t0 = time.perf_counter()
             spark.stop()
-            spark = _fresh_session()
-            since_recycle = 0
+            spark, rec = _fresh_session()
             print(
                 f"  [session recycled in {time.perf_counter() - t0:.1f}s]",
                 file=sys.stderr,
             )
-        since_recycle += 1
         try:
-            cold = None
-            for _ in range(WARM_RUNS):
-                t0 = time.perf_counter()
-                fn(spark, SF_DIR).count()
-                if cold is None:
-                    cold = time.perf_counter() - t0
-            samples = []
-            for _ in range(TIMED_RUNS):
-                t0 = time.perf_counter()
-                df = fn(spark, SF_DIR)
-                n = df.count()
-                samples.append(time.perf_counter() - t0)
+            r = measure(spark, rec, fn, cpus)
         except Exception as exc:  # one bad query must not kill the bench
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"  {name}: ERROR {errors[name]}", file=sys.stderr)
             continue
-        dt = min(samples)
-        timed_samples[name] = [round(s, 3) for s in samples]
-        timings[name] = round(dt, 3)
-        if cold is not None:
-            first_run[name] = round(cold, 3)
-        total += dt
-        cold_note = f" (first run {cold:.3f}s)" if cold is not None else ""
-        print(f"  {name}: {dt:.3f}s ({n} rows){cold_note}", file=sys.stderr)
+        timed_samples[name] = r["samples"]
+        timings[name] = min(r["samples"])
+        first_run[name] = r["first_run_sec"]
+        layers[name] = lay = r["layers"]
+        print(
+            f"  {name}: {timings[name]:.3f}s ({r['rows']} rows) (first run "
+            f"{first_run[name]:.3f}s) construct {lay['construct_s']:.3f} + exec "
+            f"{lay['exec_s']:.3f}, plan {lay['plan_s']:.3f}; jobs {lay['jobs']} "
+            f"stages {lay['stages']} tasks {lay['tasks']}",
+            file=sys.stderr,
+        )
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -432,108 +519,70 @@ def main() -> None:
     # is flagged in the artifact AND the final stdout line, so silent
     # per-query drift (round 6: semantic_dedup_cells +32%) becomes a
     # per-round signal instead of a judge discovery. The bench still
-    # exits 0 — the driver must always get its JSON line — but the
-    # regressions list is empty on a clean round and that is asserted
-    # by tests/test_scale.py::test_bench_regression_gate.
+    # exits 0, so its JSON line is always printed.
     # bench_results.json is the sf0.1 steady-state baseline the gate
-    # diffs against; a smoke run at another sf must NOT clobber it, so
-    # non-headline sfs get their own artifact file.
+    # diffs against; a smoke run at another sf, a named run and a run
+    # that STARTED under external load must NOT clobber it: the
+    # per-run adjudication can rescue individual flags, but a baseline
+    # whose every sample was taken contended anchors the next round's
+    # gate on inflated medians.
     art_dir = os.path.dirname(os.path.abspath(__file__))
-    art = os.path.join(
-        art_dir,
-        "bench_results.json"
-        if sf_val == 0.1
-        else f"bench_results_sf{sf_val}.json",
-    )
-    if os.environ.get("SPARK_GRAFT_BENCH_ONLY"):
-        # a filtered adjudication run must never clobber the full-
-        # registry gate baseline
+    baseline = os.path.join(art_dir, "bench_results.json")
+    if names:
         art = os.path.join(art_dir, "bench_results_isolated.json")
-    # A run that STARTED under external load must not become the gate
-    # baseline either (round-14 verdict item 3): the per-run in-flight
-    # adjudication can rescue individual flags, but a baseline whose
-    # every sample was taken contended anchors the next round's gate on
-    # inflated medians. Divert the artifact; the run still completes
-    # and prints its contract line. Threshold is 1-min loadavg at
-    # start; default 8 (a quarter of the 32 cores — the documented
-    # external bursts here reach 3-6, our own runs start from ~0).
-    max_start_load = float(
-        os.environ.get("SPARK_GRAFT_BENCH_MAX_START_LOAD", "8")
-    )
-    if (
-        loadavg_start[0] > max_start_load
-        and art == os.path.join(art_dir, "bench_results.json")
-    ):
+    elif sf_val != 0.1:
+        art = os.path.join(art_dir, f"bench_results_sf{sf_val}.json")
+    elif loadavg_start[0] > MAX_START_LOAD:
         art = os.path.join(art_dir, "bench_results_contended.json")
         print(
-            f"  loadavg at start {loadavg_start[0]} > {max_start_load}: "
+            f"  loadavg at start {loadavg_start[0]} > {MAX_START_LOAD}: "
             "gate baseline NOT overwritten; artifact diverted to "
             "bench_results_contended.json",
             file=sys.stderr,
         )
-    baseline = os.path.join(art_dir, "bench_results.json")
+    else:
+        art = baseline
     try:
         with open(baseline) as fh:
             prev = json.load(fh)
-        prev_q = prev.get("per_query_sec", {})
-        prev_sf = prev.get("sf")
-        prev_samples = prev.get("timed_samples_sec", {})
     except (OSError, ValueError):
-        prev_q, prev_sf, prev_samples = {}, None, {}
-    regressions = compute_regressions(
-        timings, prev_q, prev_sf, sf_val, prev_samples
-    )
+        prev = {}
+    refused = baseline_refusal(prev, sf_val, cpus)
+    if refused:
+        print(f"  regression gate off: {refused}", file=sys.stderr)
+    regressions = compute_regressions(timings, prev, sf_val, cpus)
     # Post-run adjudication (round 14, see fold_adjudication): re-time
     # the flagged set in a fresh session AFTER the pass, when the
     # external burst that inflated them has usually moved on. Skipped
-    # for filtered diagnostic runs (their baselines don't
-    # line up) and via SPARK_GRAFT_BENCH_ADJUDICATE=0.
+    # for named runs, which are themselves the isolated re-time.
     adjudication: dict[str, dict] = {}
-    if (
-        regressions
-        and not os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-        and os.environ.get("SPARK_GRAFT_BENCH_ADJUDICATE") != "0"
-    ):
-        flagged = [
-            name
-            for name, _ in sorted(
-                regressions.items(),
-                key=lambda kv: kv[1]["now_sec"] - kv[1]["prev_sec"],
-                reverse=True,
-            )
-        ][:25]
+    if regressions and not names:
+        flagged = sorted(
+            regressions,
+            key=lambda n: regressions[n]["now_sec"] - regressions[n]["prev_sec"],
+            reverse=True,
+        )[:25]
         print(
             f"  adjudicating {len(flagged)} regression flags in a "
             "fresh session...",
             file=sys.stderr,
         )
         spark.stop()
-        spark = _fresh_session()
-        by_name = dict(qs)
+        spark, rec = _fresh_session()
         rerun: dict[str, list[float]] = {}
         for name in flagged:
-            fn = by_name[name]
             try:
-                for _ in range(WARM_RUNS):
-                    fn(spark, SF_DIR).count()
-                samples = []
-                for _ in range(TIMED_RUNS):
-                    t0 = time.perf_counter()
-                    fn(spark, SF_DIR).count()
-                    samples.append(time.perf_counter() - t0)
-                rerun[name] = samples
+                rerun[name] = measure(spark, rec, registry[name], cpus)["samples"]
                 print(
-                    f"  rerun {name}: min {min(samples):.3f}s "
+                    f"  rerun {name}: min {min(rerun[name]):.3f}s "
                     f"(was {regressions[name]['now_sec']:.3f}s)",
                     file=sys.stderr,
                 )
             except Exception as exc:  # keep the original flag on error
                 print(f"  rerun {name}: ERROR {exc}", file=sys.stderr)
         regressions, adjudication = fold_adjudication(
-            timings, timed_samples, rerun, prev_q, prev_sf, sf_val,
-            prev_samples,
+            timings, timed_samples, rerun, prev, sf_val, cpus
         )
-        total = sum(timings.values())
     for name, r in regressions.items():
         print(
             f"  REGRESSION {name}: {r['prev_sec']:.3f}s -> "
@@ -546,8 +595,8 @@ def main() -> None:
     # number comparable to rounds 1-4. Carrying both in the parsed
     # final line means no future round compares a warm number against
     # a cold one.
+    warm_total = round(sum(timings.values()), 3)
     cold_total = round(sum(first_run.values()), 3) if first_run else None
-    warm_total = round(total, 3)
     # Scale-ladder block (round-6 verdict item 5): scripts/scale_ladder.py
     # times one representative per family at sf0.001/0.01/0.1 and writes
     # ladder.json; the bench embeds the compact exponent map so
@@ -555,9 +604,7 @@ def main() -> None:
     ladder_exponents: dict[str, float | None] = {}
     ladder_superlinear: list[str] = []
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "ladder.json")
-        ) as fh:
+        with open(os.path.join(art_dir, "ladder.json")) as fh:
             lad = json.load(fh)
         ladder_superlinear = lad.get("superlinear", [])
         # exponent_corrected is written as an EXPLICIT null for
@@ -576,14 +623,19 @@ def main() -> None:
     # round-over-round diffing needs this file, not the log.
     full = {
         "sf": sf_val,
-        "total_sec": round(total, 3),
+        "cpus": cpus,
+        "git_sha": _git_sha(),
+        "code_sha": _code_sha(),
+        "total_sec": warm_total,
         "warm_total_sec": warm_total,
         **({"cold_total_sec": cold_total} if cold_total is not None else {}),
         "warm_runs": WARM_RUNS,
         "timed_runs": TIMED_RUNS,
         "per_query_sec": timings,
         "timed_samples_sec": timed_samples,
+        "layers": layers,
         "regressions": regressions,
+        **({"baseline_refused": refused} if refused else {}),
         **({"adjudication": adjudication} if adjudication else {}),
         # contention telemetry: 1/5/15-min load at run start and end —
         # a burst that poisoned this run's samples is visible next to
@@ -607,31 +659,21 @@ def main() -> None:
             json.dump(full, fh, indent=1, sort_keys=True)
         print(f"  full timings written to {art}", file=sys.stderr)
     except OSError as exc:
-        print(f"  bench_results.json not written: {exc}", file=sys.stderr)
-    if (
-        sf_val == 0.1
-        and timings
-        # an ONLY-filtered adjudication run must not rewrite the
-        # full-registry headline either: qs is already filtered here,
-        # so the subset check below can't catch it (round-10 find —
-        # a 7-query isolated run stamped "7 queries, 15.0 s" into
-        # SCALE.md)
-        and not os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    ):
-        only_subset = len(timings) + len(errors) < len(qs)
-        if not only_subset:
-            _regen_scale_md(
-                len(timings),
-                len(errors),
-                warm_total,
-                cold_total,
-                max(timings.values()),
-            )
+        print(f"  {art} not written: {exc}", file=sys.stderr)
+    if sf_val == 0.1 and timings and not names:
+        _regen_scale_md(
+            len(timings),
+            len(errors),
+            warm_total,
+            cold_total,
+            max(timings.values()),
+            cpus,
+        )
     print(json.dumps(full), file=sys.stderr)
     print(json.dumps(full))
     print(
         final_stdout_line(
-            total,
+            warm_total,
             sf_val,
             timings,
             errors,
@@ -641,6 +683,7 @@ def main() -> None:
             warm_total,
             cold_total,
             n_adjudicated=len(adjudication),
+            cpus=cpus,
         )
     )
     spark.stop()

@@ -28,8 +28,8 @@ sf1 soaks cover only headline families; this script closes the gap:
 2. Run the FULL registry through bench.py against it (one warm + one
    timed run per query: at sf1 a min-of-3 would cost hours; the warm
    single run is the steady-state estimator, and any flag it raises
-   gets the isolated SPARK_GRAFT_BENCH_ONLY protocol before being
-   believed).
+   is re-timed in isolation with `python bench.py <names>` before
+   being believed).
 3. Extend ladder.json with an "sf1" block: per-query sf0.1 -> sf1
    seconds and base-10 exponents (exp = log10(t_sf1 / t_sf0.1); 1.0 =
    linear), flagging exponent > 1.1 as superlinear for adjudication.
@@ -144,7 +144,6 @@ def run() -> None:
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR=OUT,
-        SPARK_GRAFT_BENCH_WARM_RUNS="1",
         SPARK_GRAFT_BENCH_TIMED_RUNS="1",
     )
     subprocess.run(

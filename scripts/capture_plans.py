@@ -1,15 +1,15 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for named queries into plans/$SPARK_GRAFT_PLANS_TAG/ (default r15).
+"""Capture the executed plans of named queries into plans/$SPARK_GRAFT_PLANS_TAG/ (default r15).
 
 Usage: python scripts/capture_plans.py before q1 q2 ...
        python scripts/capture_plans.py after q1 q2 ...
 
-Writes plans/<round>/<query>_<tag>.txt — the optimization round's
-plan-claim evidence (the judge diffs these against OPTIMIZATION_r<N>.md
-claims). Batch queries only. Every plan a query executes, streaming
-micro-batches included, is readable from Spark's SQL status store
-through ``map_reduce_rpc_spark.session.executions_since``; the plan
-gate in tests/oracle.py reads it there.
+Runs each query's ``.count()`` and writes every physical plan it
+executed, read back from Spark's SQL status store
+(``map_reduce_rpc_spark.session.executions_since``), to
+plans/<round>/<query>_<tag>.txt: AQE's final plans, every intermediate
+action and every streaming micro-batch, oldest first. These files are
+the before/after evidence for a plan claim.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ OUT_DIR = os.path.join(
 
 def main() -> None:
     import __spark_entry__ as entry_mod
-    from map_reduce_rpc_spark.session import get_spark
+    from map_reduce_rpc_spark.session import executions_since, get_spark, last_execution_id
 
     tag = sys.argv[1]
     names = sys.argv[2:]
@@ -36,14 +36,16 @@ def main() -> None:
     spark = get_spark("capture_plans")
     for name in names:
         try:
-            df = qs[name](spark, SF_DIR)
-            formatted = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            mark = last_execution_id(spark)
+            qs[name](spark, SF_DIR).count()
+            plans = [
+                f"== execution {eid}: {desc} ==\n{plan}\n"
+                for eid, desc, plan in executions_since(spark, mark)
+            ]
             path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
             with open(path, "w") as fh:
-                fh.write(formatted)
-            print(f"wrote {path}")
+                fh.write("\n".join(plans))
+            print(f"wrote {path} ({len(plans)} executions)")
         except Exception as exc:
             print(f"{name}: ERROR {exc}", file=sys.stderr)
     spark.stop()

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from map_reduce_rpc_spark.plans import textops
 
 

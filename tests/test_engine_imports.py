@@ -1,9 +1,11 @@
-"""Every import in the engine package is used in the scope that makes it.
+"""Every import in the engine, its tests and its harnesses is used in
+the scope that makes it.
 
 Pure AST, no Spark: each module-level and function-local import in
 ``map_reduce_rpc_spark/**/*.py`` (package ``__init__`` files excepted,
-where imports are the public surface) must bind a name that its scope
-reads. A read inside a nested function or class counts unless that
+where imports are the public surface), ``tests/*.py``, ``bench.py`` and
+``scripts/*.py`` must bind a name that its scope reads. ``perfbench/``
+is left out: it imports the engine entry point for its side effect. A read inside a nested function or class counts unless that
 scope binds the name itself; a name inside a string annotation
 (``"pd.DataFrame"``) counts too.
 """
@@ -13,7 +15,8 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-ENGINE = Path(__file__).resolve().parent.parent / "map_reduce_rpc_spark"
+ROOT = Path(__file__).resolve().parent.parent
+ENGINE = ROOT / "map_reduce_rpc_spark"
 
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
 _SCOPES = _FUNCS + (ast.ClassDef,)
@@ -113,9 +116,10 @@ def test_engine_has_no_unused_imports():
     # (re) are flagged; a string annotation and a nested read count
     assert _unused(SAMPLE) == [(3, "re"), (8, "json")]
     files = sorted(p for p in ENGINE.rglob("*.py") if p.name != "__init__.py")
+    files += [*sorted(ROOT.glob("tests/*.py")), ROOT / "bench.py", *sorted(ROOT.glob("scripts/*.py"))]
     assert files
     unused = [
-        f"{p.relative_to(ENGINE.parent)}:{line} {name}"
+        f"{p.relative_to(ROOT)}:{line} {name}"
         for p in files
         for line, name in _unused(p.read_text())
     ]

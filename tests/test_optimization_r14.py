@@ -7,7 +7,6 @@ boundary, gated-broadcast equivalence, fused convergence flag).
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from map_reduce_rpc_spark.operators import dedup, graph, similarity
 

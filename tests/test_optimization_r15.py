@@ -3,7 +3,6 @@ this round pins its value identity here (the round-14 pattern)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from map_reduce_rpc_spark.plans import textops

@@ -391,8 +391,6 @@ def test_split_hot_key_join_equals_plain_join_model(spark, fact, threshold):
     join is multiset-equal to the plain inner join — including keys
     exactly at the threshold, keys missing from the dim, and a dim key
     with no fact rows."""
-    from pyspark.sql import functions as F
-
     from map_reduce_rpc_spark.operators.scale import split_hot_key_join
 
     fdf = spark.createDataFrame(fact, "k: long, payload: long")

@@ -662,10 +662,8 @@ def test_merge_delete_bounds_rewrite_and_removes_emptied_partitions(spark, tmp_p
     assert spark.read.parquet(path).count() == 175
 
 
-def test_bench_regression_gate():
-    """bench.py's round-over-round gate (round-6 verdict item 3):
-    >1.25x AND >0.5s absolute at the same sf flags; different sf or
-    sub-threshold drift does not."""
+def _bench():
+    """bench.py loaded as a module (it is a script, not a package)."""
     import importlib.util
     import os
 
@@ -674,21 +672,44 @@ def test_bench_regression_gate():
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
+    return bench
+
+
+def _baseline(per_query_sec, samples=None, sf=0.1, cpus=4) -> dict:
+    """A bench_results.json baseline stamped with ``sf`` and ``cpus``."""
+    return {"sf": sf, "cpus": cpus, "per_query_sec": per_query_sec, "timed_samples_sec": samples or {}}
+
+
+def test_bench_regression_gate():
+    """bench.py's round-over-round gate (round-6 verdict item 3):
+    >1.25x AND >0.5s absolute at the same sf and cpus flags;
+    sub-threshold drift does not, and a baseline at another sf or
+    cpus, or one that records no cpus, is refused with a reason."""
+    bench = _bench()
 
     prev = {"fast": 0.2, "slow": 2.0, "mid": 1.0}
     now = {"fast": 0.5, "slow": 2.9, "mid": 1.2, "new_query": 9.0}
     # fast: 2.5x but only +0.3s -> jitter floor holds it back
     # slow: 1.45x and +0.9s -> flagged
     # mid: +0.2s, 1.2x -> clean;  new_query: no previous -> skipped
-    got = bench.compute_regressions(now, prev, 0.1, 0.1)
+    got = bench.compute_regressions(now, _baseline(prev), 0.1, 4)
     assert set(got) == {"slow"}
     assert got["slow"] == {
         "prev_sec": 2.0,
         "now_sec": 2.9,
         "prev_median_sec": 2.0,
     }
-    # different scale factor -> gate disarmed entirely
-    assert bench.compute_regressions(now, prev, 0.01, 0.1) == {}
+    assert bench.baseline_refusal(_baseline(prev), 0.1, 4) is None
+    # an unlike or unstamped baseline -> refused, gate disarmed entirely
+    unstamped = {"sf": 0.1, "per_query_sec": prev}
+    for base, sf, cpus, why in (
+        (_baseline(prev), 0.01, 4, "sf"),
+        (_baseline(prev, cpus=8), 0.1, 4, "cpus"),
+        (unstamped, 0.1, 4, "no cpus"),
+        ({}, 0.1, 4, "no baseline"),
+    ):
+        assert why in bench.baseline_refusal(base, sf, cpus)
+        assert bench.compute_regressions(now, base, sf, cpus) == {}
 
     # MEDIAN anchoring (round-13 verdict item 1, replayed verbatim):
     # the committed pagerank_directed_suppliers baseline was min-of-
@@ -700,20 +721,20 @@ def test_bench_regression_gate():
     samples2 = {"pagerank_directed_suppliers": [5.06, 4.89, 3.675]}
     assert (
         bench.compute_regressions(
-            {"pagerank_directed_suppliers": 4.793}, prev2, 0.1, 0.1, samples2
+            {"pagerank_directed_suppliers": 4.793}, _baseline(prev2, samples2), 0.1, 4
         )
         == {}
     )
     # a GENUINE regression still flags: well past 1.25x the median
     got2 = bench.compute_regressions(
-        {"pagerank_directed_suppliers": 6.5}, prev2, 0.1, 0.1, samples2
+        {"pagerank_directed_suppliers": 6.5}, _baseline(prev2, samples2), 0.1, 4
     )
     assert set(got2) == {"pagerank_directed_suppliers"}
     assert got2["pagerank_directed_suppliers"]["prev_median_sec"] == 4.89
     # corrupt/short samples can only RAISE the anchor, never lower it
     # below the recorded min (even-length list -> midpoint average)
     got3 = bench.compute_regressions(
-        {"q": 2.9}, {"q": 2.0}, 0.1, 0.1, {"q": [0.1, 0.2]}
+        {"q": 2.9}, _baseline({"q": 2.0}, {"q": [0.1, 0.2]}), 0.1, 4
     )
     assert got3["q"]["prev_median_sec"] == 2.0
 
@@ -724,14 +745,7 @@ def test_bench_adjudication_fold():
     appended to timed_samples), and the gate recomputes — a burst-
     inflated flag whose re-run lands at baseline CLEARS; a genuine
     regression that re-measures slow KEEPS its flag."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    bench = _bench()
 
     prev = {"bursty": 2.0, "broken": 2.0}
     timings = {"bursty": 5.0, "broken": 5.0}
@@ -739,7 +753,7 @@ def test_bench_adjudication_fold():
     # bursty re-measures at baseline; broken re-measures slow
     rerun = {"bursty": [2.05, 1.98, 2.1], "broken": [4.9, 5.0, 5.1]}
     regs, record = bench.fold_adjudication(
-        timings, samples, rerun, prev, 0.1, 0.1
+        timings, samples, rerun, _baseline(prev), 0.1, 4
     )
     assert set(regs) == {"broken"}
     assert record["bursty"]["cleared"] is True
@@ -751,7 +765,7 @@ def test_bench_adjudication_fold():
     assert len(samples["bursty"]) == 6
     # a re-run of an unknown/errored query is ignored, not folded
     regs2, record2 = bench.fold_adjudication(
-        {"q": 1.0}, {"q": [1.0]}, {"ghost": [9.9], "q": []}, {}, 0.1, 0.1
+        {"q": 1.0}, {"q": [1.0]}, {"ghost": [9.9], "q": []}, _baseline({}), 0.1, 4
     )
     assert regs2 == {} and record2 == {}
 
@@ -764,15 +778,9 @@ def test_bench_final_line_bounded():
     flags with long query names, 23 ladder families, hundreds of
     timings — emits a final line comfortably under 2000 bytes, and the
     capped fields still carry the true counts."""
-    import importlib.util
     import json
-    import os
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    bench = _bench()
 
     timings = {f"very_long_query_name_{i:03d}": i / 7.0 for i in range(211)}
     regressions = {
@@ -823,9 +831,37 @@ def test_bench_final_line_bounded():
         warm_total=228.5,
         cold_total=352.1,
         n_adjudicated=25,
+        cpus=32,
     )
     assert len(noisy.encode()) < 2000
     assert json.loads(noisy)["n_adjudicated"] == 25
+    assert json.loads(noisy)["cpus"] == 32
+
+
+def test_bench_measure_layers(spark, sf_dir, monkeypatch):
+    """bench.py's per-query record on a registry query: every timed run
+    launched Spark jobs, stages and tasks, the fastest run splits into
+    construct_s + exec_s exactly, and the plan probe took time."""
+    import pytest
+
+    import __spark_entry__
+
+    bench = _bench()
+    monkeypatch.setattr(bench, "SF_DIR", sf_dir)
+    # start the recorder at this session's latest job, not at job 0:
+    # earlier tests' jobs may be trimmed from the status store already
+    spark.range(1).count()
+    rec = bench._Recorder(spark)
+    rec._next_job = max(spark.sparkContext.statusTracker().getJobIdsForGroup(None)) + 1
+    fn = __spark_entry__.queries()["q3_shipping_priority"]
+    got = bench.measure(spark, rec, fn, spark.sparkContext.defaultParallelism)
+    layers = got["layers"]
+    assert len(got["samples"]) == bench.TIMED_RUNS
+    for k in ("jobs", "stages", "tasks"):
+        assert len(layers[k]) == bench.TIMED_RUNS
+        assert min(layers[k]) >= 1, (k, layers[k])
+    assert layers["construct_s"] + layers["exec_s"] == pytest.approx(min(got["samples"]))
+    assert layers["plan_s"] > 0
 
 
 def test_merge_delete_torn_write_rerun_converges(spark, tmp_path, monkeypatch):
@@ -989,8 +1025,6 @@ def test_hdr_bucket_is_exact_inverse_and_order_preserving(spark):
     large values): (1) decode bounds bracket the value, (2) bucketing
     is weakly order-preserving, (3) relative bucket width — the hard
     accuracy guarantee of the quantile estimate — is <= 2^-(m-1)."""
-    from pyspark.sql import functions as F
-
     from map_reduce_rpc_spark.plans.events import (
         HDR_SUBBITS,
         _hdr_bounds,

@@ -275,8 +275,6 @@ def test_merge_upsert_parquet_partition_scoped(spark, tmp_path):
     """Batch MERGE: updates replace same-key rows, survivors in touched
     partitions and whole untouched partitions are preserved, and
     re-applying the same updates is idempotent."""
-    from pyspark.sql import functions as F
-
     from map_reduce_rpc_spark.sources import sinks
 
     path = str(tmp_path / "t")

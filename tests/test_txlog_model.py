@@ -21,7 +21,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from map_reduce_rpc_spark.sources import sql_dml, txlog
 from map_reduce_rpc_spark.sources.logstore import (

@@ -846,8 +846,6 @@ def test_sql_text_insert_into_partitioned_table(spark, tmp_path):
     table routes into the partitioned task writer: new rows land in
     their partition directories (prunable by both read paths), not a
     flat layout."""
-    import os
-
     root = str(tmp_path / "ptx")
     txlog.create_table(
         spark,

@@ -8,8 +8,6 @@ non-append changes in append mode)."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
